@@ -11,9 +11,8 @@ import java.time.temporal.TemporalAdjusters
   * Rule layout (u32): bits 0-11 seconds, 12-16 hours, 17-19 day-of-week,
   * 20-24 day-of-month, 25-27 operator, 28-31 month. 0xFFFFFFFF = no DST.
   *
-  * Pure driver-side logic: evaluated once per (file, year) on a tiny derived
-  * table that is then broadcast-joined back to the readings — the
-  * distributed analog of the reference's per-year memoization
+  * Pure logic, evaluated once per (file, year) inside the task that
+  * denormalizes the file — the reference's per-year memoization
   * (lib.rs:117-156).
   */
 object DstRules {

@@ -29,7 +29,7 @@ object Schemas {
   /** interval_reading.rs:11-25. cost NaN = missing; quality 16 = "other". */
   /** seq = document-order position of the reading within its file (the
     * reference CLI emits rows in file-then-document order, main.rs:30-38 —
-    * seq lets callers reconstruct that order after the joins). */
+    * seq lets callers restore that order after a shuffle). */
   case class IntervalReadingRaw(
       entryIdx: Int,
       seq: Int,

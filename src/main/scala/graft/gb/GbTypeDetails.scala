@@ -1,8 +1,5 @@
 package graft.gb
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 import scala.xml.{Elem, Node, XML}
 
 /** The ESPI enum dictionary: (scope, field, value) → app_info / documentation.
@@ -16,8 +13,9 @@ import scala.xml.{Elem, Node, XML}
   * dimension, filtered to `scope == "ReadingType" || field ==
   * "QualityOfReading"` (build.rs:162-172).
   *
-  * The result is tiny (a few hundred rows) — it is meant to be broadcast
-  * (reference: a compile-time perfect-hash map,
+  * The result is tiny (a few hundred rows): two driver-side lookup maps that
+  * every denormalize task receives with its closure (reference: a
+  * compile-time perfect-hash map,
   * lib/personalgreenbutton/src/gb_type_details.rs:8-31). A pre-generated CSV
   * copy ships as a classpath resource so the engine is standalone; the XSD
   * parser remains the source of truth for regeneration.
@@ -32,7 +30,7 @@ object GbTypeDetails {
   val MissingAppInfo = "Missing app info"
 
   /** Parse the ESPI XSD into dictionary rows (pure Scala; the file is ~230KB
-    * so a DOM parse on the driver is fine — the result is a broadcast dim).
+    * so a DOM parse on the driver is fine — the result is a small lookup map).
     */
   def parseXsd(xsdText: String): Seq[DictRow] = {
     val schema = XML.loadString(xsdText)
@@ -82,19 +80,16 @@ object GbTypeDetails {
       r.scope == "ReadingType" || r.field == "QualityOfReading")
   }
 
-  /** Load the dictionary as a DataFrame. Prefers the packaged CSV resource;
-    * falls back to parsing an XSD at `xsdPath`. */
-  def load(spark: SparkSession, xsdPath: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    val rows = xsdPath match {
-      case Some(p) =>
-        parseXsd(new String(
-          java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
-          java.nio.charset.StandardCharsets.UTF_8))
-      case None => fromResource()
-    }
-    rows.toDF()
-  }
+  /** (ReadingType field, code) → app_info: the decode of the 8 reading-type
+    * enums. */
+  lazy val readingTypeCodes: Map[(String, Int), String] =
+    fromResource().filter(_.scope == "ReadingType")
+      .map(r => (r.field, r.value) -> r.app_info).toMap
+
+  /** QualityOfReading code → app_info. */
+  lazy val qualityCodes: Map[Int, String] =
+    fromResource().filter(_.field == "QualityOfReading")
+      .map(r => r.value -> r.app_info).toMap
 
   /** Rows from the packaged CSV resource (generated by [[GenerateDict]]). */
   def fromResource(): Seq[DictRow] = {

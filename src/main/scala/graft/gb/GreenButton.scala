@@ -1,6 +1,8 @@
 package graft.gb
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import Schemas._
@@ -17,22 +19,17 @@ case object FailFast extends ParseMode
 /** The Green Button engine: ESPI Atom-XML feeds → one denormalized
   * TimeSeries DataFrame (SURVEY.md §1-§3) → CSV / Parquet / InfluxDB sinks.
   *
-  * Spark-first design:
-  *   - one `map` over whole files does all shredding (S1-S8); everything
-  *     downstream is declarative DataFrame algebra, so Catalyst handles
-  *     pushdown/pruning and AQE picks join strategies;
-  *   - the reference's hand-fused 4-way hash join (denormalize_and_link,
-  *     lib/personalgreenbutton/src/lib.rs:32-190) becomes equi-joins keyed
-  *     by (file, …) — per-file metadata tables (entries, reading types,
-  *     local-time parameters) are tiny relative to readings, the one big
-  *     fact table, so the plan is broadcast-join shaped at any scale;
-  *   - the per-year DST memoization (lib.rs:117-156) becomes a derived
-  *     (file, year) → [dst_start, dst_end) bounds table, broadcast-joined
-  *     back to readings;
-  *   - the enum decode (J5, gb_type_details.rs:8-31) is a broadcast
-  *     dictionary join, applied to reading_types *before* the fact join so
-  *     each code decodes once per reading type, not once per reading
-  *     (mirrors the reference's enums_to_strings pre-pass, lib.rs:86-108).
+  * Spark-first design, per file like the reference:
+  *   - one `map` over whole files does all shredding (S1-S8) into one
+  *     [[Schemas.ParsedFeed]] per file;
+  *   - one `flatMap` over those feeds does the reference's
+  *     denormalize_and_link (lib/personalgreenbutton/src/lib.rs:32-190) file
+  *     by file with hash lookups: the LocalTimeParameters check, the two-hop
+  *     link map, the enum decode and pow10 once per reading type, and the
+  *     per-year DST memo. A file's metadata never leaves its own task, so
+  *     nothing is joined, shuffled or broadcast, and the plan stays one
+  *     narrow stage whatever the number of files; the only per-task side
+  *     input is the fixed enum dictionary (a few hundred codes).
   */
 object GreenButton {
 
@@ -42,6 +39,15 @@ object GreenButton {
     "time_period_start_unix", "time_period_duration_seconds",
     "accumulation_behaviour", "commodity", "currency", "data_qualifier",
     "flow_direction", "kind", "phase", "uom")
+
+  /** One denormalized reading: the 15 output columns plus `file` and `seq`,
+    * the keys of the reference CLI's file-then-document row order. */
+  case class TimeSeriesRow(
+      file: String, seq: Int, title: String, cost: Float, quality: String,
+      value: Float, tou: Int, time_period_start_unix: Long,
+      time_period_duration_seconds: Int, accumulation_behaviour: String,
+      commodity: String, currency: String, data_qualifier: String,
+      flow_direction: String, kind: String, phase: String, uom: String)
 
   // ---------------------------------------------------------------- sources
 
@@ -62,17 +68,17 @@ object GreenButton {
     docs.toDS().map { case (name, xml) => EspiXml.parseFeed(name, xml) }
   }
 
-  /** Staging tables derived from the parsed feeds (relational shredding S4).
-    * Each carries the `file` key for per-file denormalization. */
-  case class Staging(entries: DataFrame, readings: DataFrame,
-                     readingTypes: DataFrame, localTimeParams: DataFrame,
-                     errors: DataFrame)
+  /** The parsed feeds (the input of [[denormalize]] and [[skippedFiles]])
+    * and the staging tables derived from them (relational shredding S4),
+    * each carrying the `file` key. */
+  case class Staging(feeds: Dataset[ParsedFeed], entries: DataFrame,
+                     readings: DataFrame, readingTypes: DataFrame,
+                     localTimeParams: DataFrame, errors: DataFrame)
 
-  /** The denormalize DAG references the staging tables many times (self
-    * joins, titles, DST years, diagnostics); without persistence every
-    * branch would re-read and re-parse the XML. Caching the parsed feeds is
-    * load-bearing: it turns ~8 parse passes into 1. `cache=false` opts out
-    * for single-pass uses (streaming foreachBatch micro-batches). */
+  /** `cache=true` persists the parsed feeds, so a caller that runs several
+    * actions over them (the CLI lists the skipped files, then converts)
+    * parses the XML once; the caller unpersists `feeds` when done.
+    * `cache=false` suits single-pass uses. */
   def staging(parsed: Dataset[ParsedFeed], cache: Boolean = true): Staging = {
     val src = if (cache) parsed.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else parsed
@@ -80,6 +86,7 @@ object GreenButton {
     def exploded(field: String): DataFrame =
       ok.select(col("file"), explode(col(field)).as("x")).select(col("file"), col("x.*"))
     Staging(
+      feeds = src,
       entries = exploded("entries"),
       readings = exploded("readings"),
       readingTypes = exploded("readingTypes"),
@@ -89,308 +96,133 @@ object GreenButton {
 
   // ----------------------------------------------------------- denormalize
 
-  /** In-plan assertion: guard a *live* column — when `bad` holds the
-    * expression raises, otherwise the column value passes through. The
-    * guard must be woven into a column that flows to the output: a guard in
-    * a dropped side-column is dead code after Catalyst column pruning. */
-  private def guarded(df: DataFrame, colName: String, bad: Column,
-                      msg: Column): DataFrame =
-    df.withColumn(colName, when(bad, raise_error(msg)).otherwise(col(colName)))
+  /** A file-level violation: the skip reason [[skippedFiles]] reports and
+    * the reference's error message, which FailFast raises. */
+  private final case class Fault(reason: String, message: String)
 
-  /** Dictionary slice (value → decoded string) for one coded column. */
-  private def dictSlice(dict: DataFrame, scope: String, field: String,
-                        valueCol: String, outCol: String): DataFrame =
-    dict.filter(col("scope") === scope && col("field") === field)
-      .select(col("value").as(valueCol), col("app_info").as(outCol))
+  /** A feed's link map and its violations in the reference's order
+    * (lib.rs:42-83): exactly one LocalTimeParameters, then the two-hop link
+    * entry → meter-reading entry → reading-type entry for every entry with
+    * a meter link (the first bad entry by idx names the error), then a
+    * reading type for every entry that carries readings. `rtOf` maps an
+    * entry to the reading-type indexes its links reach, one per match
+    * (duplicate hrefs fan out like an equi-join); None is a missing hop. */
+  private final case class Linked(rtOf: Map[Int, Seq[Option[Int]]],
+                                  faults: Seq[Fault])
 
-  /** UTC calendar year of a unix-seconds column, session-timezone-free. */
-  private def utcYear(unixSec: Column): Column =
-    year(date_from_unix_date(floor(unixSec / 86400L).cast("int")))
-
-  /** The full denormalize_and_link as DataFrame algebra. Output: the 15
-    * TimeSeries columns plus `file`. */
-  def denormalize(spark: SparkSession, st: Staging,
-                  mode: ParseMode = FailFast): DataFrame = {
-    import spark.implicits._
-    val failfast = mode == FailFast
-
-    val dict = broadcast(GbTypeDetails.load(spark))
-
-    // --- P7: exactly one LocalTimeParameters per file (lib.rs:42-50)
-    val ltpCounts = st.localTimeParams.groupBy("file")
-      .agg(count(lit(1)).as("ltp_n"),
-        first("dstStartRule").as("dstStartRule"),
-        first("dstEndRule").as("dstEndRule"),
-        first("dstOffset").as("dstOffset"),
-        first("tzOffset").as("tzOffset"))
-    val filesWithEntries = st.entries.select("file").distinct()
-    val ltp = filesWithEntries.join(ltpCounts, Seq("file"), "left")
-      .withColumn("ltp_ok", col("ltp_n") === 1)
-    val ltp1 =
-      if (failfast)
-        guarded(guarded(ltp, "tzOffset",
-          col("ltp_n").isNull || col("ltp_n") === 0,
-          lit("Missing LocalTimeParameters.")),
-          "dstOffset", col("ltp_n") > 1,
-          lit("Input with multiple LocalTimeParameters is currently unsupported."))
-      else ltp.filter(col("ltp_ok"))
-
-    // --- J2: two-hop FK resolution entry → meter-reading entry →
-    //         reading-type entry (lib.rs:58-83)
-    val e = st.entries.select(
-      col("file"), col("idx"), col("relatedMeterReadingHref"))
-    val mrSide = st.entries.select(
-      col("file").as("mr_file"), col("href").as("mr_href"),
-      col("relatedReadingTypeHref").as("rt_entry_href"))
-    val rtSide = st.entries.select(
-      col("file").as("rte_file"), col("href").as("rte_href"),
-      col("entryType").as("rte_type"), col("rtIndex").as("rt_idx"))
-
-    val hop1 = e.filter(col("relatedMeterReadingHref") =!= "")
-      .join(mrSide,
-        col("file") === col("mr_file") &&
-          col("relatedMeterReadingHref") === col("mr_href"), "left")
-    val hop2 = hop1
-      .join(rtSide,
-        col("file") === col("rte_file") &&
-          col("rt_entry_href") === col("rte_href"), "left")
-    // entry → reading-type index map (null when the entry has no meter link)
-    val entryRt = hop2.select(
-      col("file"), col("idx").as("entryIdx"), col("rt_idx"))
-
-    // Failfast link errors are aggregated PER FILE, not woven into per-entry
-    // columns: the reference builds the link map for every entry before any
-    // readings flow (lib.rs:58-83), so a dangling link on an entry with zero
-    // readings still errors the whole file. A per-row guard would be dead
-    // code for such an entry (nothing downstream ever evaluates its
-    // columns); the file-level memo joins onto every fact row of the file,
-    // carrying the first bad entry's message (entry order, like the
-    // reference's sequential loop).
-    val linkErrPerFile = hop2.select(col("file"), col("idx"),
-        when(col("mr_href").isNull,
-          concat(lit("Missing meter reading entry "),
-            col("relatedMeterReadingHref")))
-        .when(col("rte_href").isNull || col("rte_type") =!= "ReadingType",
-          concat(lit("Mismatched reading type "),
-            coalesce(col("rte_type"), lit("missing"))))
-        .as("link_err"))
-      .filter(col("link_err").isNotNull)
-      .groupBy("file")
-      .agg(min_by(col("link_err"), col("idx")).as("file_link_err"))
-
-    // --- J5 pre-pass: decode the 8 enum columns + pow10 on reading_types
-    val rtFields = Seq(
-      "accumulationBehaviour" -> "accumulation_behaviour",
-      "commodity" -> "commodity", "currency" -> "currency",
-      "dataQualifier" -> "data_qualifier", "flowDirection" -> "flow_direction",
-      "kind" -> "kind", "phase" -> "phase", "uom" -> "uom")
-    var rt = st.readingTypes
-    for ((in, out) <- rtFields) {
-      val slice = dictSlice(dict, "ReadingType", in, s"_v_$out", s"_s_$out")
-      rt = rt.join(broadcast(slice), col(in) === col(s"_v_$out"), "left")
-        .drop(in, s"_v_$out")
-        .withColumn(out, coalesce(col(s"_s_$out"), lit(GbTypeDetails.MissingAppInfo)))
-        .drop(s"_s_$out")
+  private def link(f: ParsedFeed): Linked = {
+    val faults = mutable.ArrayBuffer.empty[Fault]
+    if (f.entries.nonEmpty) f.localTimeParams.size match {
+      case 1 =>
+      case 0 => faults += Fault("LocalTimeParameters count != 1",
+        "Missing LocalTimeParameters.")
+      case _ => faults += Fault("LocalTimeParameters count != 1",
+        "Input with multiple LocalTimeParameters is currently unsupported.")
     }
-    // F1: 10^powerOfTenMultiplier in f32, computed once per reading type;
-    // Pow10F (StrictMath/fdlibm) is bit-stable across JVMs and yields the
-    // correctly-rounded f32 the reference's f32::powf produces (lib.rs:172)
-    val rtDecoded = rt
-      .withColumn("pow10",
-        graft.functions.Pow10F.pow10f(col("powerOfTenMultiplier").cast("int")))
-      .withColumnRenamed("rtIndex", "rt_idx")
-      .select((Seq("file", "rt_idx", "pow10") ++ rtFields.map(_._2)).map(col): _*)
-
-    // --- F7/F8: per-(file, year) DST bounds, evaluated once and joined back
-    val years = st.readings
-      .select(col("file"), utcYear(col("startUnix")).as("year")).distinct()
-    val bounds = years
-      .join(ltp1.select("file", "dstStartRule", "dstEndRule"), Seq("file"))
-      .as[(String, Int, Long, Long)]
-      .map { case (file, yr, startRule, endRule) =>
-        (file, yr,
-          DstRules.epochOrNone(startRule, yr),
-          DstRules.epochOrNone(endRule, yr))
-      }
-      .toDF("file", "year", "dst_start_epoch", "dst_end_epoch")
-
-    // --- consolidate ALL per-entry and per-file metadata into ONE
-    // entry-level side table, so the big fact table (readings) joins a
-    // single time. At 100TB the readings are the cost driver: separate
-    // joins for titles / rt map / decoded dims / LTP / DST bounds / enova
-    // would each reshuffle the facts; entryMeta keeps those joins
-    // metadata-sized and leaves one (file, entryIdx) equi-join (which AQE
-    // turns into a broadcast when the metadata fits).
-    val dstBoundsMap = bounds
-      .groupBy("file")
-      .agg(map_from_entries(collect_list(struct(
-        col("year"),
-        struct(col("dst_start_epoch"), col("dst_end_epoch")).as("b"))))
-        .as("dst_bounds"))
-
-    // F3 flag: enova patch keys off the *first* entry's href per file
-    // (timeseries.rs:173-177)
-    val enova = st.entries.filter(col("idx") === 0)
-      .select(col("file"), col("href").contains("enova").as("enova_fix"))
-
-    val entryMeta = st.entries
-      .select(col("file"), col("idx").as("entryIdx"), col("title"))
-      .join(entryRt, Seq("file", "entryIdx"), "left")
-      .join(rtDecoded, Seq("file", "rt_idx"), "left")
-      // per-FILE sides (one row per file) get explicit broadcast hints:
-      // AQE would usually pick broadcast anyway, but its empty-partition
-      // demotion heuristic can leave a sort-merge join on sparse inputs —
-      // these sides are one-row-per-file by construction, so the hint is
-      // always right
-      .join(broadcast(ltp1.select("file", "dstOffset", "tzOffset")),
-        Seq("file"))
-      .join(broadcast(dstBoundsMap), Seq("file"), "left")
-      .join(broadcast(enova), Seq("file"), "left")
-
-    val qualityDict = broadcast(
-      dictSlice(dict, "", "QualityOfReading", "_v_q", "quality_str"))
-
-    var facts = st.readings
-      .join(entryMeta, Seq("file", "entryIdx"))
-    facts =
-      if (failfast)
-        // guards woven into `title` — a column that reaches the OUTPUT
-        // projection; a guard on a pruned column (e.g. rt_idx, which is only
-        // a join key) is dead code after Catalyst column pruning. The
-        // file-level link guard is OUTERMOST: its predicate is checked
-        // before the inner rt_idx one, so a dangling link reports the
-        // reference's link-resolution message even when the bad entry's own
-        // readings also have rt_idx NULL (link map is built before readings
-        // flow, lib.rs:58-83)
-        guarded(
-          guarded(facts.join(linkErrPerFile, Seq("file"), "left"),
-            "title", col("rt_idx").isNull, lit("Missing reading type")),
-          "title", col("file_link_err").isNotNull, col("file_link_err"))
-          .drop("file_link_err")
-      else facts // permissive: rows of bad files are dropped file-wise below
-    facts = facts
-      .join(qualityDict, col("quality") === col("_v_q"), "left")
-      .withColumn("quality_str",
-        coalesce(col("quality_str"), lit(GbTypeDetails.MissingAppInfo)))
-
-    // F8: civil-time shift — strict bounds, naive-UTC space (lib.rs:157-162);
-    // the per-year memo is a map lookup on the year of each reading
-    val b = element_at(col("dst_bounds"), utcYear(col("startUnix")))
-    val shifted = facts.withColumn("ts_local",
-      col("startUnix") + col("tzOffset") +
-        when(b.isNotNull &&
-          b.getField("dst_start_epoch").isNotNull &&
-          b.getField("dst_end_epoch").isNotNull &&
-          col("startUnix") > b.getField("dst_start_epoch") &&
-          col("startUnix") < b.getField("dst_end_epoch"), col("dstOffset"))
-          .otherwise(lit(0L)))
-
-    val out = shifted
-      .withColumn("cost_fixed",
-        when(coalesce(col("enova_fix"), lit(false)),
-          col("cost") * lit(100.0f)).otherwise(col("cost")))
-      .withColumn("value_scaled",
-        (col("value").cast("float") * col("pow10")).cast("float"))
-
-    val selected = out.select(
-      col("file"),
-      col("seq"),
-      col("title"),
-      col("cost_fixed").as("cost"),
-      col("quality_str").as("quality"),
-      col("value_scaled").as("value"),
-      col("tou"),
-      col("ts_local").as("time_period_start_unix"),
-      col("durationSec").as("time_period_duration_seconds"),
-      col("accumulation_behaviour"), col("commodity"), col("currency"),
-      col("data_qualifier"), col("flow_direction"), col("kind"),
-      col("phase"), col("uom"))
-
-    // Permissive = reference CLI semantics: a file that would fail
-    // denormalize contributes NOTHING (skip whole file), not partial rows
-    // (cli-frontend/src/main.rs:34-37: any parse_xml error skips the file).
-    if (failfast) {
-      // Error-carrier rows for files with violations but ZERO fact rows
-      // (e.g. a dangling link or bad LTP in a file with no readings): the
-      // per-fact guards above never evaluate for such a file, while the
-      // reference errors during link/LTP resolution before readings flow
-      // (lib.rs:42-50, 58-83). One raising row per bad file is unioned in;
-      // when the file also has facts, those raise anyway and the query
-      // aborts before any row reaches the caller.
-      val ltpErrs = ltp.filter(col("ltp_n").isNull || col("ltp_n") =!= 1)
-        .select(col("file"),
-          when(col("ltp_n").isNull || col("ltp_n") === 0,
-            lit("Missing LocalTimeParameters."))
-            .otherwise(lit(
-              "Input with multiple LocalTimeParameters is currently unsupported."))
-            .as("err"))
-      val allErrs = linkErrPerFile
-        .select(col("file"), col("file_link_err").as("err"))
-        .unionByName(ltpErrs)
-      // the raise rides a GENERATOR: even a bare count() must evaluate the
-      // generator to know the row count, so the error cannot be pruned away
-      // the way a raising projection column can
-      val errRows = allErrs
-        .withColumn("_t", explode(array(raise_error(col("err")).cast("string"))))
-        .select(col("file") +: selected.schema.fields.filter(_.name != "file")
-          .map { f =>
-            if (f.name == "title") col("_t").as("title")
-            else lit(null).cast(f.dataType).as(f.name)
-          }.toSeq: _*)
-      selected.unionByName(errRows)
-    } else selected.join(
-      badDenormFiles(hop2, entryRt, st, ltp).select("file"),
-      Seq("file"), "left_anti")
+    val byHref = f.entries.groupBy(_.href)
+    def hop(href: String): Seq[EntryRaw] = byHref.getOrElse(href, Nil)
+    var linkErr: String = null
+    def bad(msg: String): Unit = if (linkErr == null) linkErr = msg
+    val rtOf = f.entries.filter(_.relatedMeterReadingHref.nonEmpty).map { e =>
+      e.idx -> (hop(e.relatedMeterReadingHref) match {
+        case Seq() =>
+          bad(s"Missing meter reading entry ${e.relatedMeterReadingHref}")
+          Seq(None)
+        case mrs => mrs.flatMap { mr =>
+          hop(mr.relatedReadingTypeHref) match {
+            case Seq() => bad("Mismatched reading type missing"); Seq(None)
+            case rts => rts.map { rt =>
+              if (rt.entryType != "ReadingType")
+                bad(s"Mismatched reading type ${rt.entryType}")
+              Some(rt.rtIndex)
+            }
+          }
+        }
+      })
+    }.toMap
+    if (linkErr != null)
+      faults += Fault("unresolvable reading-type link", linkErr)
+    if (f.readings.exists(r =>
+        rtOf.getOrElse(r.entryIdx, Seq(None)).contains(None)))
+      faults += Fault("Missing reading type", "Missing reading type")
+    Linked(rtOf, faults.toSeq)
   }
 
-  /** Files whose denormalization would error (link resolution, missing
-    * reading type, LocalTimeParameters cardinality) with a reason — the
-    * file-level skip set for permissive mode, and the CLI's warning feed. */
-  private def badDenormFiles(hop2: DataFrame, entryRt: DataFrame,
-                             st: Staging, ltp: DataFrame): DataFrame = {
-    val badLinks = hop2.filter(
-      col("mr_href").isNull || col("rte_href").isNull ||
-        col("rte_type") =!= "ReadingType")
-      .select(col("file"), lit("unresolvable reading-type link").as("reason"))
-    val readingEntries = st.readings.select("file", "entryIdx").distinct()
-    val badRt = readingEntries
-      .join(entryRt, Seq("file", "entryIdx"), "left")
-      .filter(col("rt_idx").isNull)
-      .select(col("file"), lit("Missing reading type").as("reason"))
-    val badLtp = ltp.filter(col("ltp_ok").isNull || !col("ltp_ok"))
-      .select(col("file"), lit("LocalTimeParameters count != 1").as("reason"))
-    badLinks.unionByName(badRt).unionByName(badLtp).distinct()
+  /** One feed's denormalize_and_link: its TimeSeries rows, or none when the
+    * feed has a violation (Permissive) — FailFast throws the first
+    * violation's message instead. A feed that failed to parse has no
+    * entries, so it yields nothing here; [[skippedFiles]] reports it. */
+  private def denormalizeFeed(f: ParsedFeed, failFast: Boolean,
+                              rtCodes: Map[(String, Int), String],
+                              qualityCodes: Map[Int, String]): Iterator[TimeSeriesRow] = {
+    if (f.entries.isEmpty) return Iterator.empty
+    val linked = link(f)
+    if (linked.faults.nonEmpty) {
+      if (failFast)
+        throw new EspiXml.EspiParseException(linked.faults.head.message)
+      return Iterator.empty
+    }
+    val ltp = f.localTimeParams.head
+    // F3: the enova patch keys off the FIRST entry's href (timeseries.rs:173-177)
+    val enova = f.entries.head.href.contains("enova")
+    val titles = f.entries.map(e => e.idx -> e.title).toMap
+    // J5 + F1, once per reading type: the 8 enum decodes (gb_type_details.rs:
+    // 8-31) and 10^powerOfTenMultiplier in f32 (lib.rs:86-108, 171-173)
+    def code(field: String, v: Int): String =
+      rtCodes.getOrElse((field, v), GbTypeDetails.MissingAppInfo)
+    val decoded = f.readingTypes.map { rt =>
+      rt.rtIndex -> (graft.functions.Pow10F.pow10(rt.powerOfTenMultiplier),
+        Array(code("accumulationBehaviour", rt.accumulationBehaviour),
+          code("commodity", rt.commodity), code("currency", rt.currency),
+          code("dataQualifier", rt.dataQualifier),
+          code("flowDirection", rt.flowDirection), code("kind", rt.kind),
+          code("phase", rt.phase), code("uom", rt.uom)))
+    }.toMap
+    // F7/F8: the year's DST transitions, memoized per UTC year (lib.rs:117-156)
+    val dst = mutable.HashMap.empty[Int, (Option[Long], Option[Long])]
+    def localStart(s: Long): Long = {
+      val y = java.time.LocalDate.ofEpochDay(Math.floorDiv(s, 86400L).toInt).getYear
+      val inDst = dst.getOrElseUpdate(y, (DstRules.epochOrNone(ltp.dstStartRule, y),
+        DstRules.epochOrNone(ltp.dstEndRule, y))) match {
+        // strict bounds, naive-UTC space (lib.rs:157-162)
+        case (Some(start), Some(end)) => s > start && s < end
+        case _ => false
+      }
+      s + ltp.tzOffset + (if (inDst) ltp.dstOffset else 0L)
+    }
+    f.readings.iterator.flatMap { r =>
+      val cost = if (enova) r.cost * 100.0f else r.cost
+      val quality = qualityCodes.getOrElse(r.quality, GbTypeDetails.MissingAppInfo)
+      val start = localStart(r.startUnix)
+      linked.rtOf(r.entryIdx).map { rt =>
+        val (pow10, d) = decoded(rt.get)
+        TimeSeriesRow(f.file, r.seq, titles(r.entryIdx), cost, quality,
+          r.value.toFloat * pow10, r.tou, start, r.durationSec,
+          d(0), d(1), d(2), d(3), d(4), d(5), d(6), d(7))
+      }
+    }
+  }
+
+  /** The full denormalize_and_link, one task per file. Output: the 15
+    * TimeSeries columns plus `file` and `seq`. */
+  def denormalize(spark: SparkSession, st: Staging,
+                  mode: ParseMode = FailFast): DataFrame = {
+    val failFast = mode == FailFast
+    val rtCodes = GbTypeDetails.readingTypeCodes
+    val qualityCodes = GbTypeDetails.qualityCodes
+    st.feeds.flatMap(denormalizeFeed(_, failFast, rtCodes, qualityCodes))(
+      Encoders.product[TimeSeriesRow]).toDF()
   }
 
   /** Public diagnostics: (file, reason) for every input file the permissive
-    * pipeline skips — parse failures plus denormalize violations. */
+    * pipeline skips — parse failures plus denormalize violations, each
+    * reason once per file. */
   def skippedFiles(spark: SparkSession, st: Staging): DataFrame = {
-    val denorm = denormalizeDiagnostics(spark, st)
-    st.errors.select(col("file"), col("error").as("reason"))
-      .unionByName(denorm).distinct()
-  }
-
-  private def denormalizeDiagnostics(spark: SparkSession, st: Staging): DataFrame = {
-    val mrSide = st.entries.select(
-      col("file").as("mr_file"), col("href").as("mr_href"),
-      col("relatedReadingTypeHref").as("rt_entry_href"))
-    val rtSide = st.entries.select(
-      col("file").as("rte_file"), col("href").as("rte_href"),
-      col("entryType").as("rte_type"), col("rtIndex").as("rt_idx"))
-    val hop2 = st.entries
-      .select(col("file"), col("idx"), col("relatedMeterReadingHref"))
-      .filter(col("relatedMeterReadingHref") =!= "")
-      .join(mrSide, col("file") === col("mr_file") &&
-        col("relatedMeterReadingHref") === col("mr_href"), "left")
-      .join(rtSide, col("file") === col("rte_file") &&
-        col("rt_entry_href") === col("rte_href"), "left")
-    val entryRt = hop2.select(col("file"), col("idx").as("entryIdx"), col("rt_idx"))
-    val ltpCounts = st.localTimeParams.groupBy("file")
-      .agg(count(lit(1)).as("ltp_n"))
-    val ltp = st.entries.select("file").distinct()
-      .join(ltpCounts, Seq("file"), "left")
-      .withColumn("ltp_ok", col("ltp_n") === 1)
-    badDenormFiles(hop2, entryRt, st, ltp)
+    import spark.implicits._
+    st.feeds.flatMap { f =>
+      if (f.error != null) Seq((f.file, f.error))
+      else link(f).faults.map(v => (f.file, v.reason))
+    }.toDF("file", "reason")
   }
 
   /** End-to-end: path glob → TimeSeries DataFrame (15 columns; file order is
@@ -399,7 +231,7 @@ object GreenButton {
   def timeseries(spark: SparkSession, path: String,
                  mode: ParseMode = Permissive): DataFrame = {
     val parsed = parse(spark, path)
-    denormalize(spark, staging(parsed), mode).drop("file", "seq")
+    denormalize(spark, staging(parsed, cache = false), mode).drop("file", "seq")
   }
 
   /** Like [[timeseries]] but rows come back in the reference CLI's output
@@ -408,13 +240,13 @@ object GreenButton {
   def timeseriesInputOrdered(spark: SparkSession, path: String,
                              mode: ParseMode = Permissive): DataFrame = {
     val parsed = parse(spark, path)
-    denormalize(spark, staging(parsed), mode)
+    denormalize(spark, staging(parsed, cache = false), mode)
       .orderBy(col("file"), col("seq"))
       .drop("file", "seq")
   }
 
   def timeseriesFromStrings(spark: SparkSession, docs: Seq[(String, String)],
                             mode: ParseMode = FailFast): DataFrame =
-    denormalize(spark, staging(parseStrings(spark, docs)), mode)
+    denormalize(spark, staging(parseStrings(spark, docs), cache = false), mode)
       .drop("file", "seq")
 }

@@ -46,22 +46,23 @@ object GreenButtonCli {
     require(inputs.nonEmpty, "no input files")
     require(out.nonEmpty, "--out required")
 
-    val parsed = GreenButton.parse(spark, inputs.mkString(","))
-    val st = GreenButton.staging(parsed)
-    // surface skipped files like the reference CLI (parse failures AND
-    // denormalize violations — both are file-level skips)
-    GreenButton.skippedFiles(spark, st).collect().foreach { r =>
-      System.err.println(s"Skipping ${r.getString(0)}: ${r.getString(1)}")
-    }
-    val ts = GreenButton.denormalize(spark, st, Permissive)
-      .orderBy(col("file"), col("seq")).drop("file", "seq")
+    val st = GreenButton.staging(GreenButton.parse(spark, inputs.mkString(",")))
+    try {
+      // surface skipped files like the reference CLI (parse failures AND
+      // denormalize violations — both are file-level skips)
+      GreenButton.skippedFiles(spark, st).collect().foreach { r =>
+        System.err.println(s"Skipping ${r.getString(0)}: ${r.getString(1)}")
+      }
+      val ts = GreenButton.denormalize(spark, st, Permissive)
+        .orderBy(col("file"), col("seq")).drop("file", "seq")
 
-    filetype match {
-      case "csv" => TimeSeriesOps.writeCsv(ts, out)
-      case "parquet" => TimeSeriesOps.writeParquet(ts, out)
-      case "influxdb" => TimeSeriesOps.writeInflux(ts, out)
-      case other => throw new IllegalArgumentException(s"Unknown filetype $other")
-    }
+      filetype match {
+        case "csv" => TimeSeriesOps.writeCsv(ts, out)
+        case "parquet" => TimeSeriesOps.writeParquet(ts, out)
+        case "influxdb" => TimeSeriesOps.writeInflux(ts, out)
+        case other => throw new IllegalArgumentException(s"Unknown filetype $other")
+      }
+    } finally st.feeds.unpersist()
     println(s"wrote $filetype to $out")
   }
 }

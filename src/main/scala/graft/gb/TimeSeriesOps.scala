@@ -276,10 +276,16 @@ object TimeSeriesOps {
     * the reference CLI's single-payload POST; false lets every partition
     * write its own part file (influx bulk loaders ingest a directory of
     * line-protocol files; a 100TB export through one task is a
-    * non-starter). Same schema-variant cost rule as [[influxString]]. */
+    * non-starter). Same schema-variant cost rule as [[influxString]].
+    * The cost rule and the write are two actions over `ts`; an input that is
+    * not already cached is persisted for the two, so its plan runs once. */
   def writeInflux(ts: DataFrame, path: String, singleFile: Boolean = true): Unit = {
-    val proj = influxProjection(ts, hasCost(ts))
-    (if (singleFile) proj.coalesce(1) else proj)
-      .write.mode("overwrite").text(path)
+    val owned = ts.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (owned) ts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val proj = influxProjection(ts, hasCost(ts))
+      (if (singleFile) proj.coalesce(1) else proj)
+        .write.mode("overwrite").text(path)
+    } finally if (owned) ts.unpersist()
   }
 }

@@ -41,9 +41,9 @@ object StreamingIngest {
           EspiXml.parseFeed(p,
             new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
         }
-        // persist for the duration of THIS batch only: denormalize reads
-        // the staging tables across ~8 plan branches (uncached each would
-        // re-read and re-parse the XML), and the explicit unpersist stops
+        // persist for the duration of THIS batch only: the sink may run
+        // several actions over the increment, and each would otherwise
+        // re-read and re-parse the batch's XML; the explicit unpersist stops
         // executor storage growing across batches
         val ts = GreenButton.denormalize(spark,
           GreenButton.staging(parsed), mode).drop("file", "seq")

@@ -6,31 +6,16 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import graft.SparkTestBase
 
 /** Plan-shape assertions for the Green Button denormalize pipeline — the
-  * scale properties SCALE.md documents, pinned as tests. Inspected on the
-  * EXECUTED adaptive plan: the permissive-skip anti-join statically plans
-  * as a sort-merge join and AQE converts it to broadcast at runtime once
-  * the violation set's true (tiny) size is known — the static initial plan
-  * is not the plan that runs.
+  * scale properties SCALE.md documents, pinned as tests. Denormalize runs
+  * file by file inside the scan's tasks, so its executed plan (looked at
+  * across adaptive stages, the plan that actually runs) holds no join and
+  * no exchange of any kind.
   */
 class GbPlanShapeSpec extends SparkTestBase {
 
-  private def executedPlans(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+  /** Every node of the executed plan, across adaptive stage boundaries. */
+  private def executedNodes(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] = {
     df.collect()
-    def walk(p: SparkPlan): Seq[String] =
-      p.toString +: p.collect {
-        case s: QueryStageExec => walk(s.plan)
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      }.flatten
-    df.queryExecution.executedPlan.collectFirst {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-    }.getOrElse(Seq(df.queryExecution.executedPlan.toString))
-  }
-
-  private def executedJoinMetrics(df: org.apache.spark.sql.DataFrame)
-      : Seq[(String, Long)] = {
-    // full traversal ACROSS stage boundaries (TreeNode.collect stops at
-    // QueryStageExec / nested-adaptive leaves), deduped by identity —
-    // a reused stage must not double-count its join
     def allNodes(p: SparkPlan): Seq[SparkPlan] = {
       val here = p.collect { case n => n }
       here ++ here.flatMap {
@@ -39,23 +24,14 @@ class GbPlanShapeSpec extends SparkTestBase {
         case _ => Seq.empty
       }
     }
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
     allNodes(df.queryExecution.executedPlan)
-      .filter(n => n.nodeName.contains("Join") && seen.add(n))
-      .map(n =>
-        (n.nodeName, n.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)))
   }
 
-  test("enum decode stays PRE-VECTORIZED (SURVEY §4: dims join " +
-      "reading_types BEFORE the fact join): exactly ONE join in the " +
-      "executed denormalize runs at fact cardinality — every dict/" +
-      "link/metadata join outputs metadata-sized rows, so a Spark " +
-      "upgrade that reorders the decode past the fact join fails " +
-      "loudly instead of silently decoding per reading") {
+  test("denormalize is one narrow stage: no Join, Exchange or " +
+      "BroadcastExchange node in the executed plan") {
     // synthetic feed with FACT-heavy cardinality (600 readings under 4
-    // metadata entries) — the real reference fixture has only ~20
-    // readings, too small to discriminate fact from metadata joins
+    // metadata entries): a join of readings to their metadata, the shape
+    // this pins out, would show here
     def reading(i: Int): String =
       s"""<espi:IntervalReading><espi:timePeriod>
          |<espi:duration>3600</espi:duration>
@@ -108,39 +84,23 @@ class GbPlanShapeSpec extends SparkTestBase {
          |</feed>""".stripMargin
     val ts = GreenButton.timeseriesFromStrings(spark,
       Seq(("plan_shape.xml", xml)), Permissive)
-    val factRows = ts.collect().length.toLong
-    assert(factRows > 100L,
-      s"fixture too small to discriminate fact vs metadata joins: $factRows")
-    val jm = executedJoinMetrics(ts)
-    assert(jm.nonEmpty, "no joins found in the executed plan")
-    // exactly TWO joins may run at fact cardinality: the single
-    // readings↔entryMeta equi-join (J3/J4 fused — the one place facts
-    // flow through a join) and the per-reading quality-dict probe
-    // (quality is a PER-READING column; the reference decodes it per
-    // reading too, against a constant ~20-row dict slice). The 8
-    // ReadingType enum decodes must stay METADATA-sized — if a future
-    // optimizer reorder pushed them past the fact join, this count
-    // jumps to 10 and the test fails loudly.
-    val factSized = jm.filter(_._2 >= factRows)
-    assert(factSized.size == 2,
-      s"exactly two joins may touch fact rows ($factRows): the fact " +
-        s"join and the per-reading quality decode; got: $jm")
-    val metadataJoins = jm.filterNot(_._2 >= factRows)
-    assert(metadataJoins.forall(_._2 < factRows / 2),
-      s"a 'metadata' join is within 2x of fact cardinality ($factRows) " +
-        s"— the pre-vectorized decode margin eroded: $jm")
+    val nodes = executedNodes(ts)
+    assert(ts.count() == 600L)
+    val wide = nodes.map(_.nodeName)
+      .filter(n => n.contains("Join") || n.contains("Exchange"))
+    assert(wide.isEmpty,
+      s"denormalize planned a join or exchange: $wide\n${nodes.head}")
   }
 
-  test("denormalize runs on broadcast joins only: no sort-merge, no cartesian") {
+  test("denormalize on the reference corpus runs no join: no sort-merge, " +
+      "no cartesian") {
     val ts = GreenButton.timeseries(spark,
       "/root/reference/test_files/*.xml", Permissive)
-    val plans = executedPlans(ts)
-    assert(plans.exists(_.contains("BroadcastHashJoin")),
-      "expected broadcast joins for entry metadata")
-    assert(!plans.exists(_.contains("SortMergeJoin")),
-      s"a join ran as sort-merge:\n${plans.mkString("\n----\n")}")
-    assert(!plans.exists(p => p.contains("CartesianProduct") ||
-      p.contains("BroadcastNestedLoopJoin")),
-      "non-equi join sneaked into denormalize")
+    val names = executedNodes(ts).map(_.nodeName)
+    assert(!names.exists(n => n.contains("Join") || n.contains("Exchange")),
+      s"denormalize planned a join or exchange: $names")
+    assert(!names.contains("SortMergeJoin"), s"a join ran as sort-merge: $names")
+    assert(!names.exists(n => n == "CartesianProduct" ||
+      n == "BroadcastNestedLoopJoin"), "non-equi join sneaked into denormalize")
   }
 }
