@@ -1,7 +1,9 @@
 package graft.gb
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
 
 /** Operations over the denormalized TimeSeries DataFrame (SURVEY.md §2.4-2.7):
   * boolean-ANY cost detection, multi-key sort, per-series chunking, union,
@@ -219,11 +221,11 @@ object TimeSeriesOps {
       col("data_qualifier"), col("flow_direction"), col("kind"),
       col("phase"), col("uom"))
     // reference schema marks every column REQUIRED (timeseries.rs:244-262);
-    // stamp non-nullability so the parquet file says the same
-    val requiredSchema = org.apache.spark.sql.types.StructType(
-      projected.schema.fields.map(_.copy(nullable = false)))
-    projected.sparkSession
-      .createDataFrame(projected.rdd, requiredSchema)
+    // AssertNotNull marks each column non-nullable in the plan (a NULL
+    // fails the write), so the parquet file says the same
+    projected
+      .select(projected.columns.toIndexedSeq.map(c => ColumnBridge.column(
+        AssertNotNull(ColumnBridge.expression(col(c)))).as(c)): _*)
       .coalesce(1)
       .write.mode("overwrite")
       .option("compression", "snappy")

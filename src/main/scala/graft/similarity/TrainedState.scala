@@ -1,5 +1,6 @@
 package graft.similarity
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -13,8 +14,23 @@ import org.apache.spark.sql.types._
   * mis-pointed path fails fast at the driver instead of mid-job with a
   * binding error. Trained state is k (or numSub × k) rows — single-file
   * parquet via repartition(1) keeps the artifact a copyable unit.
+  *
+  * Corpus-sized, delta-capable artifacts (IVF and IVF-PQ cells, vectors,
+  * token bags, pooled corpora, banded signatures, flat and layered
+  * graphs, PQ codes, and the three BM25 sub-artifacts) share one
+  * lifecycle: save, load, cached load, append, forget, compact, merge
+  * and detection all run an [[ArtifactKind]] descriptor from the
+  * `registry`. A new kind is one descriptor there — its schema and
+  * reconcile key, the payload column whose NULL is a tombstone, the
+  * localized-reconcile row cap, the base layout (range-sorted, with an
+  * optional `partitionBy`, or cell-partitioned), the layout/schema test
+  * [[detectArtifactKind]] tries, and an optional input hook — plus
+  * one-line public entry points. The generation protocol underneath
+  * (claim, append, reconcile, merge, crash-safe swap) exists once.
   */
 object TrainedState {
+
+  private val f = org.apache.spark.sql.functions
 
   val centroidSchema: StructType = StructType(Seq(
     StructField("centroid_id", LongType, nullable = false),
@@ -90,43 +106,414 @@ object TrainedState {
     StructField("centroid_id", LongType, nullable = false),
     StructField("embedding", ArrayType(FloatType), nullable = true)))
 
+  val ivfPqIndexSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType, nullable = false),
+    StructField("centroid_id", LongType, nullable = false),
+    StructField("codes", ArrayType(IntegerType), nullable = true)))
+
+  val vectorsSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType, nullable = false),
+    StructField("embedding", ArrayType(FloatType), nullable = true)))
+
+  val tokensSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("token_idx", LongType, nullable = false),
+    StructField("embedding", ArrayType(FloatType), nullable = true)))
+
+  val pooledSchema: StructType = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("n_tokens", LongType, nullable = false),
+    StructField("pool", ArrayType(LongType), nullable = true),
+    StructField("dims", IntegerType, nullable = false)))
+
+  val bandedSigSchema: StructType = StructType(Seq(
+    // t·2¹⁶ + bucket ([[Similarity.bandKeys]]); -1 on tombstone rows
+    StructField("bkey", LongType, nullable = false),
+    StructField("id", LongType, nullable = false),
+    // NULL = tombstone ([[forgetBandedSigsDelta]])
+    StructField("simhash", LongType, nullable = true),
+    StructField("blocks", IntegerType, nullable = false)))
+
+  val graphIndexSchema: StructType = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("rank", IntegerType, nullable = false),
+    StructField("neighbor_id", LongType, nullable = false),
+    StructField("cos_sim", DoubleType, nullable = true)))
+
+  val hnswIndexSchema: StructType = StructType(Seq(
+    StructField("layer", IntegerType, nullable = false),
+    StructField("query_id", LongType, nullable = false),
+    StructField("rank", IntegerType, nullable = false),
+    StructField("neighbor_id", LongType, nullable = false),
+    StructField("cos_sim", DoubleType, nullable = true)))
+
+  val pqCodesSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType, nullable = false),
+    StructField("sub", IntegerType, nullable = false),
+    // nullable: a NULL code row is a TOMBSTONE ([[forgetPqCodesDelta]])
+    StructField("code", IntegerType, nullable = true)))
+
+  val postingsSchema: StructType = StructType(Seq(
+    StructField("term", StringType, nullable = false),
+    StructField("doc_id", LongType, nullable = false),
+    StructField("tf", LongType, nullable = false)))
+  val retrievalTermsSchema: StructType = StructType(Seq(
+    StructField("term", StringType, nullable = false),
+    StructField("df", LongType, nullable = false)))
+  val docLensSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    // nullable: a NULL dl row is a TOMBSTONE ([[forgetRetrievalDocs]])
+    StructField("dl", LongType, nullable = true)))
+  val retrievalStatsSchema: StructType = StructType(Seq(
+    StructField("n", LongType, nullable = false),
+    StructField("avgdl", DoubleType, nullable = false)))
+
+  // ---- delta-capable kinds: one-line delegations to the registry ----
+  // Every kind below: save writes the base in the kind's layout; load
+  // is schema-checked, reconciles delta generations newest-wins per key
+  // and drops tombstones; the Cached load sits behind the fingerprint
+  // cache (the serving loops' per-trigger load); append writes one delta
+  // generation; forget writes one tombstone generation; compact folds
+  // the generations back crash-safely ([[compactSwap]]).
+
   /** Persist an IVF codes index ([[Similarity.ivfAssign]] /
-    * [[Similarity.ivfFoldIn]] output). UNLIKE the k-row trained state,
-    * the index is CORPUS-sized — so no repartition(1); instead it writes
-    * `partitionBy(centroid_id)`, making a probe of `nprobe` cells a
-    * partition-pruned read of exactly those cells' files. Fold-in batches
-    * append new files into the touched cells only. */
-  def saveIvfIndex(index: DataFrame, path: String,
-                   append: Boolean = false,
+    * [[Similarity.ivfFoldIn]] output), cell-partitioned; a fold-in
+    * batch may `append` new files into the touched cells only. */
+  def saveIvfIndex(index: DataFrame, path: String, append: Boolean = false,
                    targetRowsPerFile: Long = DefaultTargetRowsPerFile)
       : Unit =
-    saveCellPartitioned(index, ivfIndexSchema, path, append,
-      targetRowsPerFile)
+    saveKind(ivfKind, index, path, append = append,
+      targetRowsPerFile = targetRowsPerFile)
 
-  /** The shared cell-partitioned writer (IVF / IVF-PQ): co-locate each
-    * cell before the `partitionBy(centroid_id)` write — without the
-    * repartition every one of the P writer tasks opens a file in every
-    * cell directory (P × cells tiny files — measured most of the
-    * lifecycle queries' save+reload cost). The repartition key is
-    * SALTED by a rows-derived sub-key so a cell bigger than
-    * `targetRowsPerFile` splits into ⌈cellRows/target⌉ files instead
-    * of landing as ONE unsplittable giant: a probe's task planning and
-    * the 100× file-density term both depend on per-file row counts, so
-    * files must scale with CELL size (the skewed-cell completion of
-    * the [[saveGraphIndex]] `numFiles` story — directory partitioning
-    * prunes cells; the salt keeps what's INSIDE a hot cell readable in
-    * parallel at sf0.1 density). Cell row counts come from one
-    * metadata-cheap aggregate over the input, broadcast back (C-sized). */
-  private def saveCellPartitioned(index: DataFrame, schema: StructType,
+  /** Load a codes index for [[Similarity.ivfTopKFromIndex]]. */
+  def loadIvfIndex(spark: SparkSession, path: String): DataFrame =
+    loadKind(ivfKind, spark, path)
+
+  def loadIvfIndexCached(spark: SparkSession, path: String): DataFrame =
+    cachedKind(ivfKind, spark, path)
+
+  /** Append a REBALANCE's reassigned slice ([[Similarity
+    * .ivfRebalanceParts]]): rows that changed cells supersede their base
+    * rows. Plain fold-in uses `saveIvfIndex(append = true)`. */
+  def appendIvfDelta(delta: DataFrame, path: String): Unit =
+    appendKind(ivfKind, delta, path)
+
+  def forgetIvfDelta(deleteIds: DataFrame, path: String): Unit =
+    forgetKind(ivfKind, deleteIds, path)
+
+  def compactIvfIndex(spark: SparkSession, path: String): Unit =
+    compactKind(ivfKind, spark, path)
+
+  /** Persist an IVF-PQ codes index ([[IvfPq.encode]] output),
+    * cell-partitioned like the IVF index. */
+  def saveIvfPqIndex(index: DataFrame, path: String, append: Boolean = false,
+                     targetRowsPerFile: Long = DefaultTargetRowsPerFile)
+      : Unit =
+    saveKind(ivfPqKind, index, path, append = append,
+      targetRowsPerFile = targetRowsPerFile)
+
+  /** Load an IVF-PQ codes index for [[IvfPq.topKFromIndex]]. */
+  def loadIvfPqIndex(spark: SparkSession, path: String): DataFrame =
+    loadKind(ivfPqKind, spark, path)
+
+  def loadIvfPqIndexCached(spark: SparkSession, path: String): DataFrame =
+    cachedKind(ivfPqKind, spark, path)
+
+  /** Append re-encoded or reassigned vectors' replacement rows. */
+  def appendIvfPqDelta(delta: DataFrame, path: String): Unit =
+    appendKind(ivfPqKind, delta, path)
+
+  def forgetIvfPqDelta(deleteIds: DataFrame, path: String): Unit =
+    forgetKind(ivfPqKind, deleteIds, path)
+
+  def compactIvfPqIndex(spark: SparkSession, path: String): Unit =
+    compactKind(ivfPqKind, spark, path)
+
+  /** Persist a [[LateInteraction.poolSum]] output for
+    * [[LateInteraction.maxSimFunnelWith]]; every pool's width is checked
+    * against `dims`, which is recorded in the rows. */
+  def savePooled(pooled: DataFrame, path: String, dims: Int): Unit =
+    saveKind(pooledKind, pooled, path, param = dims)
+
+  /** The recorded `dims` of a pooled artifact; fails fast if shards
+    * disagree (partial overwrite / mixed-save dir). */
+  def loadPooledParams(spark: SparkSession, path: String): Int = {
+    val r = spark.read.parquet(path)
+      .agg(f.min(f.col("dims")).cast("int"), f.max(f.col("dims")).cast("int"))
+      .head()
+    require(!r.isNullAt(0) && r.getInt(0) == r.getInt(1),
+      s"loadPooledParams($path): shards disagree on dims — mixed or " +
+        "partial save")
+    r.getInt(0)
+  }
+
+  /** Load a pooled corpus `(id, n_tokens, pool)` for
+    * [[LateInteraction.maxSimFunnelWith]]. */
+  def loadPooled(spark: SparkSession, path: String): DataFrame =
+    loadKind(pooledKind, spark, path).drop("dims")
+
+  def loadPooledCached(spark: SparkSession, path: String): DataFrame =
+    cachedLoad(spark, path)(loadPooled(spark, path))
+
+  /** Append a funnel fold-in batch's pooled rows, width-checked against
+    * the artifact's recorded dims. */
+  def appendPooledDelta(delta: DataFrame, path: String): Unit =
+    appendKind(pooledKind, delta, path)
+
+  /** Forget doc ids: without it a deleted doc keeps burning a brute
+    * funnel shortlist slot per query per trigger. */
+  def forgetPooledDelta(deleteIds: DataFrame, path: String): Unit =
+    forgetKind(pooledKind, deleteIds, path)
+
+  def compactPooled(spark: SparkSession, path: String): Unit =
+    compactKind(pooledKind, spark, path)
+
+  /** Persist raw `(id, simhash)` signatures pre-banded, with the pHash
+    * `blocks` parameter recorded in the rows. */
+  def saveBandedSigIndex(sigs: DataFrame, path: String, blocks: Int,
+                         numFiles: Int = 0): Unit =
+    saveKind(bandedSigsKind, sigs, path, numFiles, param = blocks)
+
+  /** The recorded `blocks` of a banded signature index, from one row. */
+  def bandedSigParams(spark: SparkSession, path: String): Int =
+    paramOf(spark, path, "blocks")
+
+  def loadBandedSigIndex(spark: SparkSession, path: String): DataFrame =
+    loadKind(bandedSigsKind, spark, path)
+
+  def loadBandedSigIndexCached(spark: SparkSession, path: String): DataFrame =
+    cachedKind(bandedSigsKind, spark, path)
+
+  /** Append admitted signatures — O(batch·4) rows per trigger. */
+  def appendBandedSigsDelta(sigs: DataFrame, path: String): Unit =
+    appendKind(bandedSigsKind, sigs, path)
+
+  def forgetBandedSigsDelta(deleteIds: DataFrame, path: String): Unit =
+    forgetKind(bandedSigsKind, deleteIds, path)
+
+  def compactBandedSigIndex(spark: SparkSession, path: String,
+                            targetRowsPerFile: Long =
+                              DefaultTargetRowsPerFile): Unit =
+    compactKind(bandedSigsKind, spark, path, targetRowsPerFile)
+
+  /** Persist a kNN-graph edge table ([[Similarity.knnGraph]]-family /
+    * [[GraphAnn.insertBySearch]] output), range-sorted by source. */
+  def saveGraphIndex(edges: DataFrame, path: String, numFiles: Int = 0): Unit =
+    saveKind(graphKind, edges, path, numFiles)
+
+  /** Load a graph index for [[GraphAnn.searchGraph]]. */
+  def loadGraphIndex(spark: SparkSession, path: String): DataFrame =
+    loadKind(graphKind, spark, path)
+
+  def loadGraphIndexCached(spark: SparkSession, path: String): DataFrame =
+    cachedKind(graphKind, spark, path)
+
+  /** Append an insert's changed slice ([[GraphAnn.insertBySearchParts]]'
+    * second output); an empty slice writes nothing. */
+  def appendGraphDelta(delta: DataFrame, path: String): Unit =
+    appendKind(graphKind, delta, path)
+
+  def compactGraphIndex(spark: SparkSession, path: String,
+                        targetRowsPerFile: Long =
+                          DefaultTargetRowsPerFile): Unit =
+    compactKind(graphKind, spark, path, targetRowsPerFile)
+
+  /** Persist an [[Hnsw.buildIndex]] layered graph: a search reads only
+    * the layer directories on its path. */
+  def saveHnswIndex(layered: DataFrame, path: String,
+                    numFiles: Int = 0): Unit =
+    saveKind(hnswKind, layered, path, numFiles)
+
+  /** Load a layered index for [[Hnsw.search]]. */
+  def loadHnswIndex(spark: SparkSession, path: String): DataFrame =
+    loadKind(hnswKind, spark, path)
+
+  def loadHnswIndexCached(spark: SparkSession, path: String): DataFrame =
+    cachedKind(hnswKind, spark, path)
+
+  /** Append an insert's changed slice ([[Hnsw.insertWithDelta]]'s
+    * second output): loading a delta-appended index equals loading a
+    * full rewrite, bit for bit (HnswSpec). */
+  def appendHnswDelta(delta: DataFrame, path: String): Unit =
+    appendKind(hnswKind, delta, path)
+
+  def compactHnswIndex(spark: SparkSession, path: String,
+                       targetRowsPerFile: Long =
+                         DefaultTargetRowsPerFile): Unit =
+    compactKind(hnswKind, spark, path, targetRowsPerFile)
+
+  /** Persist a flat PQ codes table ([[ProductQuantizer.encode]] output)
+    * for [[GraphAnn.searchGraphPq]]. */
+  def savePqCodes(codes: DataFrame, path: String, numFiles: Int = 0): Unit =
+    saveKind(pqCodesKind, codes, path, numFiles)
+
+  def loadPqCodes(spark: SparkSession, path: String): DataFrame =
+    loadKind(pqCodesKind, spark, path)
+
+  def loadPqCodesCached(spark: SparkSession, path: String): DataFrame =
+    cachedKind(pqCodesKind, spark, path)
+
+  /** Append new vectors' codes or re-encoded vectors' full code sets. */
+  def appendPqCodesDelta(delta: DataFrame, path: String): Unit =
+    appendKind(pqCodesKind, delta, path)
+
+  def forgetPqCodesDelta(deleteIds: DataFrame, path: String): Unit =
+    forgetKind(pqCodesKind, deleteIds, path)
+
+  def compactPqCodes(spark: SparkSession, path: String,
+                     targetRowsPerFile: Long =
+                       DefaultTargetRowsPerFile): Unit =
+    compactKind(pqCodesKind, spark, path, targetRowsPerFile)
+
+  /** Persist corpus vectors `(vec_id, embedding)` — what lets
+    * [[graft.streaming.StreamingAnn.buildGraphPersisted]] keep vector
+    * state on disk and do O(batch) work per trigger. */
+  def saveVectors(vectors: DataFrame, path: String, numFiles: Int = 0): Unit =
+    saveKind(vectorsKind, vectors, path, numFiles)
+
+  def loadVectors(spark: SparkSession, path: String): DataFrame =
+    loadKind(vectorsKind, spark, path)
+
+  def loadVectorsCached(spark: SparkSession, path: String): DataFrame =
+    cachedKind(vectorsKind, spark, path)
+
+  def appendVectorsDelta(delta: DataFrame, path: String): Unit =
+    appendKind(vectorsKind, delta, path)
+
+  def forgetVectorsDelta(deleteIds: DataFrame, path: String): Unit =
+    forgetKind(vectorsKind, deleteIds, path)
+
+  def compactVectors(spark: SparkSession, path: String,
+                     targetRowsPerFile: Long =
+                       DefaultTargetRowsPerFile): Unit =
+    compactKind(vectorsKind, spark, path, targetRowsPerFile)
+
+  /** Persist token bags `(doc_id, token_idx, embedding)` — usually the
+    * largest float table; the MaxSim rerank's bounded doc-id `isin`
+    * ([[LateInteraction.maxSimRerank]]) reads only its docs' row
+    * groups. */
+  def saveTokens(tokens: DataFrame, path: String, numFiles: Int = 0): Unit =
+    saveKind(tokensKind, tokens, path, numFiles)
+
+  def loadTokens(spark: SparkSession, path: String): DataFrame =
+    loadKind(tokensKind, spark, path)
+
+  def loadTokensCached(spark: SparkSession, path: String): DataFrame =
+    cachedKind(tokensKind, spark, path)
+
+  def appendTokensDelta(delta: DataFrame, path: String): Unit =
+    appendKind(tokensKind, delta, path)
+
+  /** Forget whole documents: one tombstone per live token of each. */
+  def forgetTokensDelta(spark: SparkSession, deleteDocIds: DataFrame,
+                        path: String): Unit =
+    forgetKind(tokensKind, deleteDocIds, path)
+
+  def compactTokens(spark: SparkSession, path: String,
+                    targetRowsPerFile: Long =
+                      DefaultTargetRowsPerFile): Unit =
+    compactKind(tokensKind, spark, path, targetRowsPerFile)
+
+  /** Edge endpoints with no live vector — no deletion log needed, the
+    * artifacts ARE the log. */
+  private def danglingIds(edges: DataFrame, live: DataFrame): DataFrame =
+    edges.select(f.col("query_id").as("vec_id"))
+      .unionByName(edges.select(f.col("neighbor_id").as("vec_id")))
+      .distinct()
+      .join(live.select(f.col("vec_id")), Seq("vec_id"), "left_anti")
+      .localCheckpoint(true)
+
+  /** CONSOLIDATE a lazily-deleted graph deployment: after
+    * [[forgetVectorsDelta]] tombstones the edges still NAME the deleted
+    * ids, so the walk cannot expand THROUGH them and recall decays with
+    * the deletion fraction. This pass removes the DANGLING ids' rows,
+    * re-derives every surviving out-list that lost an edge
+    * ([[GraphAnn.graphForgetRepaired]] — a bounded search per affected
+    * source, not a rebuild) and rewrites the base through the
+    * crash-safe data-sized swap.
+    *
+    * @return the forget/repair receipts `(vec_id, n_out_removed,
+    *         n_in_removed, was_indexed, n_repaired)`, MATERIALIZED
+    *         before the swap (a lazy plan would read replaced files) */
+  def consolidateGraphArtifact(spark: SparkSession, indexPath: String,
+                               vectorsPath: String, entryId: Long,
+                               beam: Int, hops: Int, degree: Int,
+                               targetRowsPerFile: Long =
+                                 DefaultTargetRowsPerFile): DataFrame = {
+    val edges = loadGraphIndex(spark, indexPath)
+    val live = loadVectors(spark, vectorsPath)
+    val dangling = danglingIds(edges, live)
+    require(dangling.filter(f.col("vec_id") === entryId).isEmpty,
+      s"consolidateGraphArtifact: entry $entryId has no live vector — " +
+        "repairs route through the entry; re-seed it before consolidating")
+    val (repaired, receipts) = GraphAnn.graphForgetRepaired(
+      edges, live, dangling, entryId, beam, hops, degree)
+    // deletion-footprint-sized; must not stay lazy across the swap
+    val receiptsOut = receipts.localCheckpoint(true)
+    // the pre-delete row count sizes the rewrite — an upper bound, so
+    // file density errs dense-side by at most the deletion fraction
+    rewrite(graphKind, spark, indexPath, repaired, targetRowsPerFile)
+    receiptsOut
+  }
+
+  /** [[consolidateGraphArtifact]] lifted to the LAYERED artifact:
+    * [[Hnsw.forgetRepaired]] repairs per layer (electing a live
+    * per-layer repair entry — a deleted global entry degrades, never
+    * strands). `maxLevel` is read from the artifact, not trusted from a
+    * call site. */
+  def consolidateHnswArtifact(spark: SparkSession, indexPath: String,
+                              vectorsPath: String, beam: Int, hops: Int,
+                              degree: Int, targetRowsPerFile: Long =
+                                DefaultTargetRowsPerFile): DataFrame = {
+    val layered = loadHnswIndex(spark, indexPath)
+    val live = loadVectors(spark, vectorsPath)
+    val (repaired, receipts) = Hnsw.forgetRepaired(layered, live,
+      danglingIds(layered, live), hnswMaxLevel(spark, indexPath), beam,
+      hops, degree)
+    val receiptsOut = receipts.localCheckpoint(true)
+    rewrite(hnswKind, spark, indexPath, repaired, targetRowsPerFile)
+    receiptsOut
+  }
+
+  /** The TOP LAYER of a persisted HNSW artifact WITHOUT scanning it:
+    * the base's layers are its `layer=N` partition DIRECTORIES (a
+    * metadata listing), and only the batch-sized delta generations —
+    * which may fold in rows at any layer — are read for rows. A
+    * per-trigger guard ([[graft.streaming.StreamingAnn
+    * .forgetHnswPersisted]]) must not pay an O(index) aggregation to
+    * learn a number the layout already states. */
+  def hnswMaxLevel(spark: SparkSession, path: String): Int = {
+    val fs = fsOf(spark, path)
+    val p = new Path(path)
+    val dirLayers = fs.listStatus(p).toSeq.filter(_.isDirectory)
+      .map(_.getPath.getName)
+      .collect { case s if s.startsWith("layer=") =>
+        s.stripPrefix("layer=").toInt }
+    val deltaPath = s"$path/$DeltaDir"
+    val deltaLayers =
+      if (!hasDataFiles(spark, deltaPath)) Seq.empty[Int]
+      else readDeltas(spark, deltaPath)
+        .agg(f.max(f.col("layer")))
+        .collect().toSeq.filterNot(_.isNullAt(0)).map(_.getInt(0))
+    val all = dirLayers ++ deltaLayers
+    require(all.nonEmpty, s"hnswMaxLevel($path): no layers found — not " +
+      "a layered artifact")
+    all.max
+  }
+
+  /** The cell-partitioned writer: co-locate each cell before the
+    * `partitionBy(centroid_id)` write (else each of P writer tasks opens
+    * a file in every cell — P × cells tiny files), SALTED so a cell
+    * bigger than `targetRowsPerFile` splits into ⌈cellRows/target⌉ files
+    * instead of one unsplittable giant: files scale with CELL size, the
+    * [[RangeSorted]] density story inside a pruned cell. Cell row counts
+    * come from one aggregate over the input, broadcast back (C-sized). */
+  private def saveCellPartitioned(projected: DataFrame, schema: StructType,
                                   path: String, append: Boolean,
                                   targetRowsPerFile: Long): Unit = {
     require(targetRowsPerFile >= 1,
       s"saveCellPartitioned: targetRowsPerFile=$targetRowsPerFile must " +
         "be >= 1")
-    val f = org.apache.spark.sql.functions
-    val cols = schema.fields.map(x =>
-      f.col(x.name).cast(x.dataType).as(x.name))
-    val projected = index.select(cols.toIndexedSeq: _*)
     val buckets = f.greatest(f.lit(1L),
       f.ceil(f.col("_cell_rows").cast("double") /
         f.lit(targetRowsPerFile.toDouble)).cast("long"))
@@ -144,13 +531,9 @@ object TrainedState {
         .write.mode(if (append) "append" else "overwrite")
         .partitionBy("centroid_id").parquet(path)
     else {
-      // one shuffle partition per (cell, salt) group: a plain
-      // repartition(cols) hashes groups into the session default, where
-      // two groups colliding into one task silently merge back into one
-      // file — range partitioning sized to the group count keeps every
-      // group its own task (equal keys never split across partitions;
-      // the range sampler's extra input pass is the price of the skew
-      // split, paid only when a cell actually exceeds the target)
+      // one shuffle partition per (cell, salt) group: hashing groups
+      // into the session default can merge two into one file; range
+      // partitioning sized to the group count keeps each its own task
       val sumRow = cellCounts.agg(f.sum(f.col("_buckets"))).head()
       val groups = (if (sumRow.isNullAt(0)) 1L else sumRow.getLong(0))
         .max(1L).min(Int.MaxValue.toLong).toInt
@@ -168,447 +551,11 @@ object TrainedState {
     }
   }
 
-  /** Load a codes index for [[Similarity.ivfTopKFromIndex]].
-    * Delta-aware like [[loadHnswIndex]]: [[appendIvfDelta]]
-    * generations (a rebalance's reassigned slice) reconcile
-    * newest-wins per `vec_id` — a vector that moved cells serves its
-    * NEW cell row and the superseded base row drops. NULL-embedding
-    * rows are TOMBSTONES ([[forgetIvfDelta]]) — they win the
-    * reconcile like any newest generation and are then dropped, so
-    * the flat probe (which scores the index's OWN embeddings, never
-    * touching the vectors artifact) cannot serve a deleted id. */
-  def loadIvfIndex(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    val got = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    ivfIndexSchema.fields.foreach { f =>
-      // partitionBy writes the partition column back as its directory-
-      // inferred type; ints widen to long on the cast-select below
-      require(got.contains(f.name),
-        s"trained-state schema mismatch at $path: missing ${f.name}")
-    }
-    val base = df.select(ivfIndexSchema.fields.map(f =>
-      org.apache.spark.sql.functions.col(f.name).cast(f.dataType)
-        .as(f.name)).toIndexedSeq: _*)
-    // embedding-carrying rows: a tighter row cap keeps the localized
-    // slice bounded by width too (2^12 rows x 4096-dim ceiling = 64 MB
-    // transient worst case; typical dims are an order less)
-    reconcileDeltas(base, spark, path, ivfIndexSchema, Seq("vec_id"),
-      localCap = 1L << 12)
-      .filter(org.apache.spark.sql.functions.col("embedding").isNotNull)
-  }
-
-  /** APPEND a REBALANCE's reassigned slice
-    * ([[Similarity.ivfRebalanceParts]]' changed output — the fat
-    * cells' rows under their new sub-cell ids) as a DELTA GENERATION
-    * under a saved IVF index: rebalance write cost scales with the
-    * fat-cell footprint while a full [[saveIvfIndex]] rewrite scales
-    * with the index. (Plain FOLD-IN never needed this —
-    * `saveIvfIndex(append = true)` lands new vectors as new files in
-    * only the touched cell directories; the delta path covers the
-    * REASSIGNMENT case, where existing rows change cells.) Probes of
-    * the reconciled load still partition-prune the corpus-sized base;
-    * the batch-bounded delta slice filters locally. */
-  def appendIvfDelta(delta: DataFrame, path: String): Unit =
-    appendDeltaGeneration(delta, path, ivfIndexSchema)
-
-  /** FORGET ids from a persisted IVF codes index as a TOMBSTONE delta
-    * generation — the [[forgetVectorsDelta]] discipline on the cell-
-    * partitioned index: `(vec_id, -1, NULL)` rows that the newest-wins
-    * reconcile keeps (superseding the live cell row) and the load then
-    * drops. The flat probe scores the index's own embeddings, so
-    * WITHOUT this the vectors-artifact tombstone alone leaves the
-    * deleted id servable from [[Similarity.ivfTopKFromIndex]]. Write
-    * cost is O(deletions); delete is ORDERED (a later
-    * [[appendIvfDelta]] re-assign of the id supersedes its tombstone);
-    * the next [[compactIvfIndex]] folds tombstones away PHYSICALLY
-    * (the rewrite saves the already-filtered load — the sentinel -1
-    * cell never materializes as a directory). */
-  def forgetIvfDelta(deleteIds: DataFrame, path: String): Unit = {
-    val f = org.apache.spark.sql.functions
-    appendDeltaGeneration(
-      deleteIds.select(f.col("vec_id").cast("long").as("vec_id"),
-        f.lit(-1L).as("centroid_id"),
-        f.lit(null).cast("array<float>").as("embedding")),
-      path, ivfIndexSchema)
-  }
-
-  /** Fold accumulated [[appendIvfDelta]] generations back into the
-    * cell-partitioned base — crash-safe ([[compactSwap]]). */
-  def compactIvfIndex(spark: SparkSession, path: String): Unit =
-    compactSwap(spark, path, loadIvfIndex(spark, path),
-      (df, p) => saveIvfIndex(df, p))
-
-  val ivfPqIndexSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType, nullable = false),
-    StructField("centroid_id", LongType, nullable = false),
-    StructField("codes", ArrayType(IntegerType), nullable = true)))
-
-  /** Persist an IVF-PQ codes index ([[IvfPq.encode]] output) — corpus-
-    * sized like the plain IVF index, so `partitionBy(centroid_id)` for
-    * partition-pruned probes; rows are numSub ints each (the whole
-    * point of PQ: the float corpus stays wherever it lives and only the
-    * re-rank join reads it). */
-  def saveIvfPqIndex(index: DataFrame, path: String,
-                     append: Boolean = false,
-                     targetRowsPerFile: Long = DefaultTargetRowsPerFile)
-      : Unit =
-    // salted cell-partitioned layout — the saveIvfIndex rationale
-    saveCellPartitioned(index, ivfPqIndexSchema, path, append,
-      targetRowsPerFile)
-
-  /** Load an IVF-PQ codes index for [[IvfPq.topKFromIndex]].
-    * Delta-aware: [[appendIvfPqDelta]] generations (re-encoded or
-    * reassigned vectors' replacement rows) reconcile newest-wins per
-    * `vec_id`; NULL-codes rows are TOMBSTONES ([[forgetIvfPqDelta]])
-    * and drop after winning the reconcile — the ADC shortlist can
-    * then never propose a deleted id, independent of the vectors-
-    * artifact tombstone the exact rerank already honors. */
-  def loadIvfPqIndex(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    val got = df.schema.fieldNames.toSet
-    ivfPqIndexSchema.fields.foreach { f =>
-      require(got.contains(f.name),
-        s"trained-state schema mismatch at $path: missing ${f.name}")
-    }
-    val base = df.select(ivfPqIndexSchema.fields.map(f =>
-      org.apache.spark.sql.functions.col(f.name).cast(f.dataType)
-        .as(f.name)).toIndexedSeq: _*)
-    // numSub-int code rows (~tens of bytes): the scalar-row cap holds,
-    // halved for the codes array
-    reconcileDeltas(base, spark, path, ivfPqIndexSchema, Seq("vec_id"),
-      localCap = 1L << 17)
-      .filter(org.apache.spark.sql.functions.col("codes").isNotNull)
-  }
-
-  /** APPEND re-encoded/reassigned vectors' replacement rows as a
-    * DELTA GENERATION under a saved IVF-PQ index — the
-    * [[appendIvfDelta]] story for the PQ-coded cells (a cell
-    * rebalance invalidates its vectors' residual codes; the re-encode
-    * batch persists as a delta instead of a full rewrite). */
-  def appendIvfPqDelta(delta: DataFrame, path: String): Unit =
-    appendDeltaGeneration(delta, path, ivfPqIndexSchema)
-
-  /** FORGET ids from a persisted IVF-PQ codes index as a TOMBSTONE
-    * delta generation (`(vec_id, -1, NULL)` — [[forgetIvfDelta]]'s
-    * contract on the PQ-coded cells): O(deletions) to write, ordered
-    * (a later re-encode supersedes), folded away physically by the
-    * next [[compactIvfPqIndex]]. */
-  def forgetIvfPqDelta(deleteIds: DataFrame, path: String): Unit = {
-    val f = org.apache.spark.sql.functions
-    appendDeltaGeneration(
-      deleteIds.select(f.col("vec_id").cast("long").as("vec_id"),
-        f.lit(-1L).as("centroid_id"),
-        f.lit(null).cast("array<int>").as("codes")),
-      path, ivfPqIndexSchema)
-  }
-
-  /** Fold accumulated [[appendIvfPqDelta]] generations back into the
-    * base — crash-safe ([[compactSwap]]). */
-  def compactIvfPqIndex(spark: SparkSession, path: String): Unit =
-    compactSwap(spark, path, loadIvfPqIndex(spark, path),
-      (df, p) => saveIvfPqIndex(df, p))
-
-  val pooledSchema: StructType = StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("pool", ArrayType(LongType), nullable = true),
-    StructField("dims", IntegerType, nullable = false)))
-
-  /** Persist a [[LateInteraction.poolSum]] output — the pooled-corpus
-    * artifact the MaxSim serving funnel's coarse stage reads
-    * ([[LateInteraction.maxSimFunnelWith]]'s contract: pooling the
-    * static side is corpus-sized work a per-trigger loop must not
-    * repeat). Corpus-sized, so partitioning is kept (no single-file
-    * coalesce); `dims` is RECORDED in the rows (the
-    * [[graft.multimodal.Multimodal.saveSigIndex]] convention) so the
-    * serving side reads the parameter instead of trusting its call
-    * site, and every row's pool width is CHECKED against it at write —
-    * a width-drifted row would make the serving dot_codes silently
-    * null, so the save fails loudly instead. */
-  def savePooled(pooled: DataFrame, path: String, dims: Int): Unit = {
-    require(dims >= 1, s"savePooled: dims=$dims must be >= 1")
-    val f = org.apache.spark.sql.functions
-    val checkedPool = f.when(f.size(f.col("pool")) === dims, f.col("pool"))
-      .otherwise(f.raise_error(f.concat(
-        f.lit(s"savePooled: pool width <> dims=$dims for id "),
-        f.col("id").cast("string"))).cast("array<long>"))
-    pooled.select(f.col("id").cast("long").as("id"),
-        f.col("n_tokens").cast("long").as("n_tokens"),
-        checkedPool.cast("array<long>").as("pool"),
-        f.lit(dims).as("dims"))
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** The recorded `dims` of a pooled artifact; fails fast if shards
-    * disagree (partial overwrite / mixed-save dir). */
-  def loadPooledParams(spark: SparkSession, path: String): Int = {
-    val f = org.apache.spark.sql.functions
-    val r = spark.read.parquet(path)
-      .agg(f.min(f.col("dims")).cast("int"), f.max(f.col("dims")).cast("int"))
-      .head()
-    require(!r.isNullAt(0) && r.getInt(0) == r.getInt(1),
-      s"loadPooledParams($path): shards disagree on dims — mixed or " +
-        "partial save")
-    r.getInt(0)
-  }
-
-  /** Load a pooled corpus for [[LateInteraction.maxSimFunnelWith]] /
-    * [[graft.streaming.StreamingAnn.serveMaxSimFunnelFromSaved]]; fails
-    * fast at the driver on schema drift. Delta-aware like
-    * [[loadVectors]]: [[appendPooledDelta]] generations (a funnel
-    * fold-in batch's pooled rows) reconcile newest-wins per `id`, and
-    * NULL-pool rows are TOMBSTONES ([[forgetPooledDelta]]) — dropped
-    * after winning, so a deleted doc stops burning shortlist slots in
-    * the brute coarse stage. */
-  def loadPooled(spark: SparkSession, path: String): DataFrame = {
-    val f = org.apache.spark.sql.functions
-    val df = spark.read.parquet(path)
-    val got = df.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
-    Seq("id" -> "bigint", "n_tokens" -> "bigint", "pool" -> "array<bigint>",
-      "dims" -> "int").foreach { case (n, t) =>
-      require(got.get(n).contains(t),
-        s"loadPooled($path): expected column $n: $t, found " +
-          s"${got.getOrElse(n, "ABSENT")} — not a pooled-corpus artifact")
-    }
-    val base = df.select(pooledSchema.fields.map(x =>
-      f.col(x.name).cast(x.dataType).as(x.name)).toIndexedSeq: _*)
-    // pool rows are dims longs (~0.5 KB at 64 dims) — scalar-ish cap
-    reconcileDeltas(base, spark, path, pooledSchema, Seq("id"),
-      localCap = 1L << 15)
-      .filter(f.col("pool").isNotNull)
-      .select(f.col("id"), f.col("n_tokens"), f.col("pool"))
-  }
-
-  /** [[loadPooled]] behind the fingerprint cache — the persisted
-    * funnel serving loop's per-trigger coarse-side load. */
-  def loadPooledCached(spark: SparkSession, path: String): DataFrame =
-    cachedLoad(spark, path)(loadPooled(spark, path))
-
-  /** The artifact's recorded dims from ONE row — the per-trigger read
-    * for the append/forget paths, where [[loadPooledParams]]' full
-    * min/max sweep would be an O(corpus) job per batch. Sound because
-    * [[savePooled]] enforces one dims across every row it writes (and
-    * checks every pool width against it), so any row speaks for the
-    * base. */
-  private def pooledDimsQuick(spark: SparkSession, path: String): Int = {
-    val r = spark.read.parquet(path)
-      .select(org.apache.spark.sql.functions.col("dims").cast("int"))
-      .limit(1).collect()
-    require(r.nonEmpty, s"pooledDims($path): empty pooled artifact")
-    r.head.getInt(0)
-  }
-
-  /** APPEND a funnel fold-in batch's pooled rows
-    * ([[LateInteraction.poolSum]] over the batch's token bags) as a
-    * DELTA GENERATION under a saved pooled artifact — write cost
-    * scales with the BATCH while a [[savePooled]] rewrite re-pools the
-    * corpus. The batch rows carry the width check savePooled enforces
-    * (a width-drifted pool would make the serving dot_codes silently
-    * null) against the artifact's own recorded dims. */
-  def appendPooledDelta(delta: DataFrame, path: String): Unit = {
-    val f = org.apache.spark.sql.functions
-    val dims = pooledDimsQuick(delta.sparkSession, path)
-    val checkedPool = f.when(f.size(f.col("pool")) === dims, f.col("pool"))
-      .otherwise(f.raise_error(f.concat(
-        f.lit(s"appendPooledDelta: pool width <> dims=$dims for id "),
-        f.col("id").cast("string"))).cast("array<long>"))
-    appendDeltaGeneration(
-      delta.select(f.col("id").cast("long").as("id"),
-        f.col("n_tokens").cast("long").as("n_tokens"),
-        checkedPool.cast("array<long>").as("pool"),
-        f.lit(dims).as("dims")),
-      path, pooledSchema)
-  }
-
-  /** FORGET doc ids from a persisted pooled artifact as a TOMBSTONE
-    * delta generation (`(id, 0, NULL, dims)` — the
-    * [[forgetVectorsDelta]] discipline on the coarse side): without
-    * it a deleted doc's stale pooled row keeps proposing the doc into
-    * every brute-funnel shortlist (the id-pruned rerank then drops it
-    * against the tombstoned tokens — correct but a wasted slot per
-    * query per trigger, forever). O(deletions), ordered, folded away
-    * physically by [[compactPooled]]. */
-  def forgetPooledDelta(deleteIds: DataFrame, path: String): Unit = {
-    val f = org.apache.spark.sql.functions
-    val dims = pooledDimsQuick(deleteIds.sparkSession, path)
-    appendDeltaGeneration(
-      deleteIds.select(f.col("id").cast("long").as("id"),
-        f.lit(0L).as("n_tokens"),
-        f.lit(null).cast("array<long>").as("pool"),
-        f.lit(dims).as("dims")),
-      path, pooledSchema)
-  }
-
-  /** Fold accumulated [[appendPooledDelta]] generations back into the
-    * base — crash-safe ([[compactSwap]]); tombstones leave the bytes
-    * (the rewrite saves the already-filtered load, so the savePooled
-    * width check never sees a NULL pool). */
-  def compactPooled(spark: SparkSession, path: String): Unit = {
-    val dims = loadPooledParams(spark, path)
-    compactSwap(spark, path, loadPooled(spark, path),
-      (df, p) => savePooled(df, p, dims))
-  }
-
-  val bandedSigSchema: StructType = StructType(Seq(
-    // t·2¹⁶ + bucket ([[Similarity.bandKeys]]); -1 on tombstone rows
-    StructField("bkey", LongType, nullable = false),
-    StructField("id", LongType, nullable = false),
-    // NULL = tombstone ([[forgetBandedSigsDelta]])
-    StructField("simhash", LongType, nullable = true),
-    StructField("blocks", IntegerType, nullable = false)))
-
-  /** Persist a pHash/simhash signature index PRE-BANDED — one row per
-    * (signature, 16-bit block), sorted by `bkey` so a probe batch's
-    * bucket `isin` ([[Similarity.simhashPairsAgainstIndex]]) reads
-    * only its buckets' row groups, where the in-memory admission
-    * loops re-band the whole index per trigger. `blocks` (the pHash
-    * blockhash parameter) rides in the rows — the
-    * [[graft.multimodal.Multimodal.saveSigIndex]] convention, so a
-    * serving loop reads the parameter instead of trusting its call
-    * site. Input is RAW `(id, simhash)` signatures. */
-  def saveBandedSigIndex(sigs: DataFrame, path: String, blocks: Int,
-                         numFiles: Int = 0): Unit = {
-    require(blocks >= 1 && blocks <= 60,
-      s"saveBandedSigIndex: blocks=$blocks")
-    val f = org.apache.spark.sql.functions
-    val banded = Similarity.bandKeys(
-        sigs.select(f.col("id").cast("long").as("id"),
-          f.col("simhash").cast("long").as("simhash")))
-      .withColumn("blocks", f.lit(blocks))
-    (if (numFiles > 0)
-       banded.repartitionByRange(numFiles, f.col("bkey"), f.col("id"))
-     else banded.repartitionByRange(f.col("bkey"), f.col("id")))
-      .sortWithinPartitions("bkey", "id")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** The recorded `blocks` of a banded signature index, from ONE row
-    * (the [[pooledDimsQuick]] rationale — save enforces uniformity). */
-  def bandedSigParams(spark: SparkSession, path: String): Int = {
-    val r = spark.read.parquet(path)
-      .select(org.apache.spark.sql.functions.col("blocks").cast("int"))
-      .limit(1).collect()
-    require(r.nonEmpty, s"bandedSigParams($path): empty signature index")
-    r.head.getInt(0)
-  }
-
-  /** Load a banded signature index. Delta-aware newest-wins per `id`
-    * (a re-appended signature's four fresh band rows supersede its
-    * old set — one key, whole-set replacement, the [[loadPqCodes]]
-    * contract) and NULL-simhash rows are TOMBSTONES, dropped after
-    * winning. */
-  def loadBandedSigIndex(spark: SparkSession, path: String): DataFrame =
-    reconcileDeltas(load(spark, bandedSigSchema, path), spark, path,
-      bandedSigSchema, Seq("id"))
-      .filter(org.apache.spark.sql.functions.col("simhash").isNotNull)
-
-  /** [[loadBandedSigIndex]] behind the fingerprint cache — the
-    * admission loop's per-trigger load. */
-  def loadBandedSigIndexCached(spark: SparkSession,
-                               path: String): DataFrame =
-    cachedLoad(spark, path)(loadBandedSigIndex(spark, path))
-
-  /** APPEND a batch of admitted signatures as a DELTA GENERATION —
-    * O(batch·4) rows where the in-memory loops re-checkpointed the
-    * full accumulated index per trigger. */
-  def appendBandedSigsDelta(sigs: DataFrame, path: String): Unit = {
-    val f = org.apache.spark.sql.functions
-    val blocks = bandedSigParams(sigs.sparkSession, path)
-    appendDeltaGeneration(
-      Similarity.bandKeys(
-          sigs.select(f.col("id").cast("long").as("id"),
-            f.col("simhash").cast("long").as("simhash")))
-        .withColumn("blocks", f.lit(blocks)),
-      path, bandedSigSchema)
-  }
-
-  /** FORGET signature ids — ONE `(-1, id, NULL, blocks)` tombstone row
-    * per id supersedes the id's whole band-row set under the per-`id`
-    * reconcile. O(deletions), ordered (a later
-    * [[appendBandedSigsDelta]] re-admit supersedes), folded away
-    * physically by [[compactBandedSigIndex]]. */
-  def forgetBandedSigsDelta(deleteIds: DataFrame, path: String): Unit = {
-    val f = org.apache.spark.sql.functions
-    val blocks = bandedSigParams(deleteIds.sparkSession, path)
-    appendDeltaGeneration(
-      deleteIds.select(f.lit(-1L).as("bkey"),
-        f.col("id").cast("long").as("id"),
-        f.lit(null).cast("long").as("simhash"),
-        f.lit(blocks).as("blocks")),
-      path, bandedSigSchema)
-  }
-
-  /** Fold accumulated generations back into the bkey-sorted base —
-    * crash-safe, data-sized, tombstones leave the bytes. */
-  def compactBandedSigIndex(spark: SparkSession, path: String,
-                            targetRowsPerFile: Long =
-                              DefaultTargetRowsPerFile): Unit = {
-    val f = org.apache.spark.sql.functions
-    val files = filesForRows(approxRows(spark, path), targetRowsPerFile)
-    compactSwap(spark, path, loadBandedSigIndex(spark, path),
-      (df, p) => df.repartitionByRange(math.max(1, files),
-          f.col("bkey"), f.col("id"))
-        .sortWithinPartitions("bkey", "id")
-        .write.mode("overwrite").parquet(p))
-  }
-
-  val graphIndexSchema: StructType = StructType(Seq(
-    StructField("query_id", LongType, nullable = false),
-    StructField("rank", IntegerType, nullable = false),
-    StructField("neighbor_id", LongType, nullable = false),
-    StructField("cos_sim", DoubleType, nullable = true)))
-
-  /** Persist a kNN-graph edge table ([[Similarity.knnGraph]]-family /
-    * [[GraphAnn.insertBySearch]] output). CORPUS-sized, so no
-    * single-file coalesce; instead range-partition + sort by the source
-    * id so every file carries tight `query_id` min/max stats — a beam
-    * hop that pre-filters on the frontier's ids ([[GraphAnn]]'s
-    * broadcast-frontier join) then reads only the row groups its
-    * frontier can touch, the IVF partition-pruning story with file
-    * statistics instead of directories (source ids are corpus-cardinal —
-    * `partitionBy` would mean one directory per vector). */
-  def saveGraphIndex(edges: DataFrame, path: String,
-                     numFiles: Int = 0): Unit = {
-    val f = org.apache.spark.sql.functions
-    val cols = graphIndexSchema.fields.map(x =>
-      f.col(x.name).cast(x.dataType).as(x.name))
-    val projected = edges.select(cols.toIndexedSeq: _*)
-    // numFiles is the SCALING KNOB the 100× leg measured (SCALE.md
-    // r14): the per-hop isin prunes at row-group/file granularity, so
-    // rows-per-file must stay roughly constant as the index grows —
-    // at a fixed file count a 100× corpus made every frontier hit
-    // scan 100× the bytes (search ratio 2.32, back to 1.12 with files
-    // ∝ corpus). 0 = the session's shuffle-partition default (fine
-    // when that is sized per job, as on a configured cluster).
-    (if (numFiles > 0)
-       projected.repartitionByRange(numFiles, f.col("query_id"))
-     else projected.repartitionByRange(f.col("query_id")))
-      .sortWithinPartitions("query_id", "rank")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a persisted graph index for [[GraphAnn.searchGraph]]; fails
-    * fast at the driver on schema drift. Delta-aware like
-    * [[loadHnswIndex]]: when [[appendGraphDelta]] generations exist
-    * under the artifact, the highest generation wins per source and the
-    * superseded base rows drop via a broadcast anti-join — untouched
-    * base rows read through verbatim. */
-  def loadGraphIndex(spark: SparkSession, path: String): DataFrame =
-    reconcileDeltas(load(spark, graphIndexSchema, path), spark, path,
-      graphIndexSchema, Seq("query_id"))
-
-  /** (fingerprint, reconciled plan) per (session, artifact path) —
-    * see [[loadGraphIndexCached]]. Keyed on [[SparkSession.sessionUUID]]
-    * (a real UUID — stable for the session's lifetime and collision-
-    * free, unlike an identityHashCode, which can be reused for a new
-    * session after the old one is collected and would then hand that
-    * new session a plan bound to a stopped one). Access-ordered and
-    * SIZE-BOUNDED ([[MaxCachedLoads]], LRU eviction), and every lookup
-    * opportunistically drops entries whose owning session has stopped —
-    * a long-lived multi-session driver (a notebook server cycling
-    * sessions) must not retain dead sessions' plans for the JVM's
-    * lifetime. All access synchronized on the map (bounded: lookups are
-    * driver-side, one per trigger). */
+  /** (fingerprint, reconciled plan) per (session, artifact path) — the
+    * cached loads. LRU-bounded ([[MaxCachedLoads]]); every lookup drops
+    * entries of stopped sessions, so a long-lived multi-session driver
+    * retains no dead session's plans. Access is synchronized on the map
+    * (driver-side, one lookup per trigger). */
   private val MaxCachedLoads = 256
   private val loadCache =
     new java.util.LinkedHashMap[String, (String, DataFrame)](16, 0.75f,
@@ -619,17 +566,16 @@ object TrainedState {
     }
 
   /** Metadata fingerprint of everything that can change a delta-aware
-    * load: the artifact root's TOP-LEVEL statuses (base data files — a
-    * compaction swap replaces them wholesale, and every file rename
-    * changes a name) plus `_delta`'s child statuses (gen directories
-    * and the lock dir — an append adds a child). Listing-only, no data
-    * read; generation directories never mutate after commit
-    * (write-once by the claim protocol), so child statuses suffice. */
+    * load: the root's TOP-LEVEL statuses (a compaction swap replaces the
+    * base files) plus `_delta`'s child statuses (an append adds a
+    * child). Listing-only; generations are write-once after commit. When
+    * it is unchanged, a cached load's reconciled plan (and its pinned
+    * file listing) is still valid and the delta localization is reused. */
   private def loadFingerprint(spark: SparkSession, path: String): String = {
     val fs = fsOf(spark, path)
     val out = Seq.newBuilder[String]
     def ls(p: String, prefix: String, depth: Int): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(p)
+      val hp = new Path(p)
       // a directory can vanish between exists and listStatus (a
       // concurrent compaction dropping _delta): treat it as absent —
       // at worst the caller does one uncached load this trigger
@@ -642,70 +588,24 @@ object TrainedState {
         val name = prefix + s.getPath.getName
         out += s"$name:${s.getModificationTime}:${s.getLen}"
         // object stores (e.g. S3A) return SYNTHETIC directory statuses
-        // (mtime 0, len 0): a rewrite INSIDE such a directory — a
-        // partitioned artifact whose top level is only layer=/
-        // centroid_id= dirs — would fingerprint identically across the
-        // rewrite and serve a stale cached plan naming deleted files.
-        // So descend until real statuses appear, bounded (the deepest
-        // shipped layout is batch=/centroid_id=/files). Real
-        // filesystems report live directory mtimes (a child add/remove
-        // touches the parent) — no descent, no extra listings.
+        // (mtime 0): a rewrite inside a layer=/centroid_id= directory
+        // would fingerprint identically and serve a stale plan. Descend
+        // until real statuses appear, bounded (the deepest layout is
+        // batch=/centroid_id=/files); real filesystems never descend.
         if (s.isDirectory && s.getModificationTime == 0L && depth < 4)
           ls(s.getPath.toString, name + "/", depth + 1)
       }
     }
     ls(path, "", 0)
-    // _delta children explicitly even on real filesystems: generation
-    // directories never mutate after commit (write-once by the claim
-    // protocol), so child statuses suffice — and an append adds one
+    // _delta children explicitly even on real filesystems
     ls(s"$path/$DeltaDir", "_delta/", 0)
     out.result().sorted.mkString("\n")
   }
 
-  /** [[loadGraphIndex]] behind a FINGERPRINT CACHE — the per-trigger
-    * serving-loop load: every uncached load of a delta-carrying
-    * artifact re-pays the bounded delta collect (the localized
-    * reconcile), which a loop that reloads per trigger multiplies by
-    * the trigger count. When the artifact's metadata fingerprint
-    * ([[loadFingerprint]]) is unchanged, the cached reconciled plan
-    * returns as-is — its base scan still reads the parquet files per
-    * action; only the reconcile localization is reused, and the plan's
-    * pinned file listing stays valid precisely because the fingerprint
-    * says nothing changed. Any append, compaction, or rewrite changes
-    * the fingerprint and forces a fresh [[loadGraphIndex]]. Plans are
-    * session-bound, so the cache key includes the session identity. */
-  def loadGraphIndexCached(spark: SparkSession, path: String): DataFrame =
-    cachedLoad(spark, path)(loadGraphIndex(spark, path))
-
-  /** [[loadHnswIndex]] behind the same fingerprint cache — the layered
-    * serving loops' per-trigger load. */
-  def loadHnswIndexCached(spark: SparkSession, path: String): DataFrame =
-    cachedLoad(spark, path)(loadHnswIndex(spark, path))
-
-  /** [[loadPqCodes]] behind the same fingerprint cache — the DiskANN
-    * serve paths' codes-table load. */
-  def loadPqCodesCached(spark: SparkSession, path: String): DataFrame =
-    cachedLoad(spark, path)(loadPqCodes(spark, path))
-
-  /** [[loadIvfIndex]] behind the same fingerprint cache (a fold-in
-    * batch adds a `batch=`/cell directory at the top level, so the
-    * fingerprint sees every growth path). */
-  def loadIvfIndexCached(spark: SparkSession, path: String): DataFrame =
-    cachedLoad(spark, path)(loadIvfIndex(spark, path))
-
-  /** [[loadIvfPqIndex]] behind the same fingerprint cache. */
-  def loadIvfPqIndexCached(spark: SparkSession, path: String): DataFrame =
-    cachedLoad(spark, path)(loadIvfPqIndex(spark, path))
-
-  /** Stable per-session cache key: the session's UUID (collision-free
-    * for the JVM's lifetime — `sessionUUID` is `private[sql]` in
-    * Spark's Scala source but public in bytecode, hence the
-    * reflective read), falling back to the identity hash. The
-    * fallback alone would be safe too: a cache entry strongly
-    * references its DataFrame → its session, so a keyed session can
-    * never be collected (and its identity hash never reused) while
-    * its entry lives — and the stopped-session sweep plus the LRU
-    * bound remove entries, after which reuse doesn't matter. */
+  /** Stable per-session cache key: the session's UUID (`private[sql]`
+    * in source, public in bytecode — hence the reflective read), else
+    * the identity hash, which is also safe: an entry pins its session,
+    * so the hash cannot be reused while the entry lives. */
   private def sessionKey(spark: SparkSession): String =
     try spark.getClass.getMethod("sessionUUID").invoke(spark).toString
     catch { case _: ReflectiveOperationException =>
@@ -734,30 +634,11 @@ object TrainedState {
     }
   }
 
-  /** APPEND an insert's changed slice ([[GraphAnn.insertBySearchParts]]'
-    * second output — touched sources' re-pruned out-lists + the new
-    * nodes' forward edges) as a DELTA GENERATION under a saved flat
-    * graph index — the [[appendHnswDelta]] machinery for the single-
-    * layer artifact: fold-in write cost scales with the BATCH while a
-    * full [[saveGraphIndex]] rewrite scales with the index. Newest
-    * generation wins per source on load; an EMPTY changed slice writes
-    * nothing (a `_SUCCESS`-only delta directory would otherwise brick
-    * the load with an unreadable parquet dir). */
-  def appendGraphDelta(delta: DataFrame, path: String): Unit =
-    appendDeltaGeneration(delta, path, graphIndexSchema)
-
-  /** Target per-file row density for DATA-SIZED rewrites: compactions
-    * re-save corpus-sized artifacts, and the r14 100× leg (SCALE.md)
-    * measured exactly what a FIXED file count does to them — at 32
-    * files a 100× corpus packs 100× more rows per file, so every
-    * frontier hit's row-group `isin` pruning drags in 100× the bytes
-    * (search 2.32× vs 1.12× with files ∝ corpus). Sizing the rewrite
-    * from the data keeps rows-per-file ~constant as the index grows
-    * through append→compact cycles, with no session-config coupling
-    * (the session's shuffle-partition default is sized for the JOBS,
-    * not for an artifact that outlives them). 2²⁰ edge/code rows ≈
-    * 20-30 MB files — small enough that pruning skips most of a file's
-    * siblings, large enough that a 100 TB artifact stays well under
+  /** Target per-file row density for DATA-SIZED rewrites
+    * ([[RangeSorted]]'s rationale), with no coupling to the session's
+    * shuffle default, which is sized for jobs, not for an artifact that
+    * outlives them. 2²⁰ edge/code rows ≈ 20-30 MB files: pruning skips
+    * most of a file's siblings, and a 100 TB artifact stays well under
     * filesystem listing limits. */
   val DefaultTargetRowsPerFile: Long = 1L << 20
 
@@ -765,26 +646,18 @@ object TrainedState {
   def filesForRows(rows: Long, targetRowsPerFile: Long): Int = {
     require(targetRowsPerFile >= 1,
       s"filesForRows: targetRowsPerFile=$targetRowsPerFile must be >= 1")
-    math.min(
-      math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile),
+    math.min(math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile),
       Int.MaxValue.toLong).toInt
   }
 
-  /** Approximate row count of a delta-capable artifact — base files
-    * plus pending delta generations, via column-less parquet scans
-    * (footer row counts, no data pages). "Approximate" because the
-    * reconcile DROPS superseded base rows the counts double-count —
-    * an over-estimate bounded by the batch-scaled deltas, which
-    * cannot meaningfully move a file-count decision. Returns 0 for a
-    * missing artifact (the compactor's [[compactSwap]] then fails
-    * with its recovery-pointer message instead of a raw read error). */
+  /** Approximate row count of a delta-capable artifact — base plus
+    * pending generations from parquet footers (superseded base rows are
+    * double-counted: an over-estimate bounded by the batch-sized
+    * deltas). 0 for a missing artifact, so [[compactSwap]] fails with
+    * its recovery-pointer message instead of a raw read error. */
   private def approxRows(spark: SparkSession, path: String): Long = {
-    // exact row count from parquet footers when the file count is
-    // small enough for a sequential driver-side read — zero Spark
-    // jobs, one scheduler round trip saved per compactor invocation.
-    // Past the bound (artifacts with files ∝ corpus at real scale) a
-    // distributed count reads the same footers in parallel instead of
-    // serializing them on the driver.
+    // footers read on the driver (zero jobs) up to 1024 files; past
+    // that a distributed count reads the same footers in parallel
     def rows(df: DataFrame): Long = {
       val files = df.inputFiles
       if (files.length <= 1024) footerRowCount(spark, files)
@@ -802,393 +675,19 @@ object TrainedState {
     }
   }
 
-  /** Fold accumulated [[appendGraphDelta]] generations back into the
-    * base — crash-safe ([[compactHnswIndex]]'s write-aside-then-swap
-    * contract). The rewrite is DATA-SIZED: `numFiles` derives from the
-    * artifact's row count at `targetRowsPerFile`
-    * ([[DefaultTargetRowsPerFile]]), so per-file row density — the
-    * thing the per-hop `isin` row-group pruning depends on — stays
-    * ~constant as the index grows through fold-in generations (the
-    * measured 100× file-density term cannot re-enter via compaction). */
-  def compactGraphIndex(spark: SparkSession, path: String,
-                        targetRowsPerFile: Long =
-                          DefaultTargetRowsPerFile): Unit = {
-    val files = filesForRows(approxRows(spark, path), targetRowsPerFile)
-    compactSwap(spark, path, loadGraphIndex(spark, path),
-      (df, p) => saveGraphIndex(df, p, numFiles = files))
-  }
-
-  /** CONSOLIDATE a lazily-deleted graph deployment: after
-    * [[forgetVectorsDelta]] tombstones (via
-    * [[graft.streaming.StreamingAnn.forgetGraphPersisted]] or direct
-    * calls), the edge artifact still NAMES the deleted ids — serving
-    * correctness holds (a node with no embedding can never be scored
-    * or returned) but the walk cannot expand THROUGH deleted nodes, so
-    * recall decays with the accumulated deletion fraction. This pass
-    * is the repair half: it derives the DANGLING ids (edge endpoints with
-    * no live vector — no deletion log needed, the artifacts ARE the
-    * log), removes their rows, re-derives every surviving source's
-    * out-list that lost an edge ([[GraphAnn.graphForgetRepaired]] — a
-    * bounded search per affected source, not a rebuild), and rewrites
-    * the edge base through the crash-safe data-sized swap. Run it on
-    * the [[maintainRoot]] cadence or when deletion receipts accumulate.
-    *
-    * @return the forget/repair receipts `(vec_id, n_out_removed,
-    *         n_in_removed, was_indexed, n_repaired)`, MATERIALIZED
-    *         before the swap (a lazy plan would read replaced files) */
-  def consolidateGraphArtifact(spark: SparkSession, indexPath: String,
-                               vectorsPath: String, entryId: Long,
-                               beam: Int, hops: Int, degree: Int,
-                               targetRowsPerFile: Long =
-                                 DefaultTargetRowsPerFile): DataFrame = {
-    val f = org.apache.spark.sql.functions
-    val edges = loadGraphIndex(spark, indexPath)
-    val live = loadVectors(spark, vectorsPath)
-    val endpoints = edges.select(f.col("query_id").as("vec_id"))
-      .unionByName(edges.select(f.col("neighbor_id").as("vec_id")))
-      .distinct()
-    val dangling = endpoints
-      .join(live.select(f.col("vec_id")), Seq("vec_id"), "left_anti")
-      .localCheckpoint(true)
-    require(dangling.filter(f.col("vec_id") === entryId).isEmpty,
-      s"consolidateGraphArtifact: entry $entryId has no live vector — " +
-        "repairs route through the entry; re-seed it before consolidating")
-    val (repaired, receipts) = GraphAnn.graphForgetRepaired(
-      edges, live, dangling, entryId, beam, hops, degree)
-    // deletion-footprint-sized; must not stay lazy across the swap
-    val receiptsOut = receipts.localCheckpoint(true)
-    // pre-delete row count — an upper bound on the rewrite, so file
-    // density errs dense-side by at most the deletion fraction
-    val files = filesForRows(approxRows(spark, indexPath),
-      targetRowsPerFile)
-    compactSwap(spark, indexPath, repaired,
-      (df, p) => saveGraphIndex(df, p, numFiles = files))
-    receiptsOut
-  }
-
-  /** [[consolidateGraphArtifact]] lifted to the LAYERED artifact: the
-    * dangling ids derive from the layered endpoints vs the live
-    * vectors, [[Hnsw.forgetRepaired]] repairs per layer (electing a
-    * live per-layer repair entry — a deleted global entry degrades,
-    * never strands), and the layered base rewrites through the same
-    * crash-safe data-sized swap. `maxLevel` is read from the artifact
-    * (its top layer), not trusted from a call site. */
-  def consolidateHnswArtifact(spark: SparkSession, indexPath: String,
-                              vectorsPath: String, beam: Int, hops: Int,
-                              degree: Int,
-                              targetRowsPerFile: Long =
-                                DefaultTargetRowsPerFile): DataFrame = {
-    val f = org.apache.spark.sql.functions
-    val layered = loadHnswIndex(spark, indexPath)
-    val live = loadVectors(spark, vectorsPath)
-    val maxLevel = hnswMaxLevel(spark, indexPath)
-    val endpoints = layered.select(f.col("query_id").as("vec_id"))
-      .unionByName(layered.select(f.col("neighbor_id").as("vec_id")))
-      .distinct()
-    val dangling = endpoints
-      .join(live.select(f.col("vec_id")), Seq("vec_id"), "left_anti")
-      .localCheckpoint(true)
-    val (repaired, receipts) = Hnsw.forgetRepaired(
-      layered, live, dangling, maxLevel, beam, hops, degree)
-    val receiptsOut = receipts.localCheckpoint(true)
-    val files = filesForRows(approxRows(spark, indexPath),
-      targetRowsPerFile)
-    compactSwap(spark, indexPath, repaired,
-      (df, p) => saveHnswIndex(df, p, numFiles = files))
-    receiptsOut
-  }
-
-  val vectorsSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType, nullable = false),
-    StructField("embedding", ArrayType(FloatType), nullable = true)))
-
-  /** Persist a CORPUS VECTORS artifact — the float side of a
-    * persisted ANN deployment (`(vec_id, embedding)`, the repo-wide
-    * vector contract). CORPUS-sized: range-partition + sort by
-    * `vec_id` (the [[saveGraphIndex]] layout) so every file carries
-    * tight id min/max stats — the walk's scoring join and the fold-in
-    * loops' redelivery check both probe this table with BOUNDED id
-    * sets (`isin` prefilters), so a hit reads only the row groups its
-    * ids can touch, never the corpus. This is what lets
-    * [[graft.streaming.StreamingAnn.buildGraphPersisted]] keep the
-    * vector state on disk and do O(batch) work per trigger instead of
-    * re-materializing an ever-growing in-memory union. */
-  def saveVectors(vectors: DataFrame, path: String,
-                  numFiles: Int = 0): Unit = {
-    val f = org.apache.spark.sql.functions
-    val cols = vectorsSchema.fields.map(x =>
-      f.col(x.name).cast(x.dataType).as(x.name))
-    val projected = vectors.select(cols.toIndexedSeq: _*)
-    // numFiles: the saveGraphIndex file-count scaling knob — id-probe
-    // row-group pruning needs rows-per-file ~constant as the corpus
-    // grows
-    (if (numFiles > 0)
-       projected.repartitionByRange(numFiles, f.col("vec_id"))
-     else projected.repartitionByRange(f.col("vec_id")))
-      .sortWithinPartitions("vec_id")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a persisted corpus-vectors artifact; fails fast on schema
-    * drift. Delta-aware like [[loadGraphIndex]]: [[appendVectorsDelta]]
-    * generations reconcile newest-wins per `vec_id` (an updated
-    * vector's replacement row supersedes its base row), and
-    * NULL-embedding rows are TOMBSTONES ([[forgetVectorsDelta]]) —
-    * they win the reconcile like any newest generation and are then
-    * dropped, so the load never serves a deleted id (and a LATER
-    * re-append of the same id supersedes its tombstone — delete is
-    * not forever, it is ordered). The localized reconcile uses the
-    * embedding-carrying row cap ([[loadIvfIndex]]'s rationale — rows ×
-    * width bounds the pull). */
-  def loadVectors(spark: SparkSession, path: String): DataFrame =
-    reconcileDeltas(load(spark, vectorsSchema, path), spark, path,
-      vectorsSchema, Seq("vec_id"), localCap = 1L << 12)
-      .filter(org.apache.spark.sql.functions.col("embedding").isNotNull)
-
-  /** FORGET ids from a persisted corpus-vectors artifact as a
-    * TOMBSTONE delta generation — `(vec_id, NULL)` rows that the
-    * newest-wins reconcile keeps (superseding the live row) and the
-    * load then drops. Write cost is O(deletions); the next
-    * [[compactVectors]] folds the tombstones away PHYSICALLY (the
-    * rewrite saves the already-filtered load, so deleted rows leave
-    * the bytes too — the ivfForget "deletion cost scales with the
-    * deletion" discipline on the float side). Deleting an id that was
-    * never saved is a harmless no-op row. */
-  def forgetVectorsDelta(deleteIds: DataFrame, path: String): Unit = {
-    val f = org.apache.spark.sql.functions
-    appendDeltaGeneration(
-      deleteIds.select(f.col("vec_id").cast("long").as("vec_id"),
-        f.lit(null).cast("array<float>").as("embedding")),
-      path, vectorsSchema)
-  }
-
-  /** [[loadVectors]] behind the fingerprint cache — the fold-in
-    * loops' per-trigger corpus load. */
-  def loadVectorsCached(spark: SparkSession, path: String): DataFrame =
-    cachedLoad(spark, path)(loadVectors(spark, path))
-
-  /** APPEND a fold-in batch's vectors as a DELTA GENERATION under a
-    * saved corpus artifact — write cost scales with the BATCH while a
-    * full [[saveVectors]] rewrite scales with the corpus (the
-    * [[appendGraphDelta]] discipline applied to the float side). */
-  def appendVectorsDelta(delta: DataFrame, path: String): Unit =
-    appendDeltaGeneration(delta, path, vectorsSchema)
-
-  /** Fold accumulated [[appendVectorsDelta]] generations back into the
-    * range-partitioned base — crash-safe ([[compactSwap]]), data-sized
-    * rewrite ([[compactGraphIndex]]'s density contract). */
-  def compactVectors(spark: SparkSession, path: String,
-                     targetRowsPerFile: Long =
-                       DefaultTargetRowsPerFile): Unit = {
-    val files = filesForRows(approxRows(spark, path), targetRowsPerFile)
-    compactSwap(spark, path, loadVectors(spark, path),
-      (df, p) => saveVectors(df, p, numFiles = files))
-  }
-
-  val tokensSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("token_idx", LongType, nullable = false),
-    StructField("embedding", ArrayType(FloatType), nullable = true)))
-
-  /** Persist a TOKEN-BAG artifact — the doc-side float state of a
-    * late-interaction deployment (`(doc_id, token_idx, embedding)`,
-    * the [[LateInteraction]] contract; |tokens|× a single-vector
-    * corpus, so this is usually the LARGEST float table in the fleet).
-    * Range-partition + sort by `doc_id` (the [[saveVectors]] layout)
-    * so every file carries tight doc-id min/max stats: the MaxSim
-    * rerank fetches the shortlisted docs' tokens through a bounded
-    * `isin` ([[LateInteraction.maxSimRerank]]), and with this layout
-    * that read touches only the row groups those ids can live in —
-    * never the token corpus. */
-  def saveTokens(tokens: DataFrame, path: String,
-                 numFiles: Int = 0): Unit = {
-    val f = org.apache.spark.sql.functions
-    val cols = tokensSchema.fields.map(x =>
-      f.col(x.name).cast(x.dataType).as(x.name))
-    val projected = tokens.select(cols.toIndexedSeq: _*)
-    (if (numFiles > 0)
-       projected.repartitionByRange(numFiles, f.col("doc_id"))
-     else projected.repartitionByRange(f.col("doc_id")))
-      .sortWithinPartitions("doc_id", "token_idx")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a persisted token-bag artifact; fails fast on schema drift.
-    * Delta-aware: [[appendTokensDelta]] generations reconcile
-    * newest-wins per `(doc_id, token_idx)`, and NULL-embedding rows
-    * are TOMBSTONES ([[forgetTokensDelta]]) — kept by the reconcile,
-    * dropped from the served rows. NOTE the per-token key's re-ingest
-    * contract: appending a SHORTER bag for an existing doc replaces
-    * only the token_idx values it carries — the old bag's higher
-    * indices survive as orphans. Re-ingest with a changed token count
-    * must [[forgetTokensDelta]] the doc first, then append (one
-    * tombstone generation + one append generation — both
-    * batch-sized). Embedding-carrying localized-reconcile cap, as
-    * [[loadVectors]]. */
-  def loadTokens(spark: SparkSession, path: String): DataFrame =
-    reconcileDeltas(load(spark, tokensSchema, path), spark, path,
-      tokensSchema, Seq("doc_id", "token_idx"), localCap = 1L << 12)
-      .filter(org.apache.spark.sql.functions.col("embedding").isNotNull)
-
-  /** Row cap for localizing a deletion id list — single-long rows, so
-    * the [[Similarity]] shortlist cap's rationale applies. */
-  private val MaxLocalForgetIds = 1 << 17
-
-  /** FORGET whole documents from a persisted token-bag artifact: one
-    * TOMBSTONE delta generation covering every live `(doc_id,
-    * token_idx)` of the deleted docs. The deleted docs' token keys are
-    * enumerated FROM the artifact (the caller knows doc ids, not bag
-    * widths), read id-pruned: the deletion list localizes (deletions
-    * are small by nature — the ivfForget rationale) and pushes into
-    * the doc_id-sorted scan as an `isin`; past [[MaxLocalForgetIds]]
-    * a broadcast left-semi does the same rows. Write cost is
-    * O(deleted tokens); [[compactTokens]] folds the tombstones away
-    * physically. This + [[appendTokensDelta]] is the shrinking-bag
-    * re-ingest recipe ([[loadTokens]]). */
-  def forgetTokensDelta(spark: SparkSession, deleteDocIds: DataFrame,
-                        path: String): Unit = {
-    val f = org.apache.spark.sql.functions
-    val live = loadTokens(spark, path)
-    val ids = deleteDocIds.select(f.col("doc_id").cast("long").as("doc_id"))
-    val rows = ids.limit(MaxLocalForgetIds + 1).collect()
-    val doomed =
-      if (rows.length > MaxLocalForgetIds)
-        live.join(f.broadcast(ids), Seq("doc_id"), "left_semi")
-      else {
-        val idSeq = rows.map(_.getLong(0)).distinct.toIndexedSeq
-        if (idSeq.isEmpty) return
-        live.filter(f.col("doc_id").isin(idSeq: _*))
-      }
-    appendDeltaGeneration(
-      doomed.select(f.col("doc_id"), f.col("token_idx"),
-        f.lit(null).cast("array<float>").as("embedding")),
-      path, tokensSchema)
-  }
-
-  /** [[loadTokens]] behind the fingerprint cache — the funnel serving
-    * loop's per-trigger doc-side load. */
-  def loadTokensCached(spark: SparkSession, path: String): DataFrame =
-    cachedLoad(spark, path)(loadTokens(spark, path))
-
-  /** APPEND a batch of newly ingested documents' token bags as a DELTA
-    * GENERATION — write cost scales with the batch, not the token
-    * corpus (the [[appendVectorsDelta]] discipline). */
-  def appendTokensDelta(delta: DataFrame, path: String): Unit =
-    appendDeltaGeneration(delta, path, tokensSchema)
-
-  /** Fold accumulated [[appendTokensDelta]] generations back into the
-    * range-partitioned base — crash-safe, data-sized rewrite. */
-  def compactTokens(spark: SparkSession, path: String,
-                    targetRowsPerFile: Long =
-                      DefaultTargetRowsPerFile): Unit = {
-    val files = filesForRows(approxRows(spark, path), targetRowsPerFile)
-    compactSwap(spark, path, loadTokens(spark, path),
-      (df, p) => saveTokens(df, p, numFiles = files))
-  }
-
-  val hnswIndexSchema: StructType = StructType(Seq(
-    StructField("layer", IntegerType, nullable = false),
-    StructField("query_id", LongType, nullable = false),
-    StructField("rank", IntegerType, nullable = false),
-    StructField("neighbor_id", LongType, nullable = false),
-    StructField("cos_sim", DoubleType, nullable = true)))
-
-  /** Persist an [[Hnsw.buildIndex]] LAYERED graph index. Layout: one
-    * DIRECTORY per layer (`partitionBy("layer")` — layer cardinality is
-    * maxLevel+1, a handful, so directory partitioning is right here
-    * where it would be wrong for corpus-cardinal ids), each layer's
-    * files range-partitioned + sorted by source id exactly like
-    * [[saveGraphIndex]]. A search descends reading ONLY the layer
-    * directories on its path, with the same `query_id` row-group
-    * pruning per layer; layer 0 — the corpus-sized one — behaves
-    * byte-for-byte like the flat graph index. */
-  def saveHnswIndex(layered: DataFrame, path: String,
-                    numFiles: Int = 0): Unit = {
-    val f = org.apache.spark.sql.functions
-    val cols = hnswIndexSchema.fields.map(x =>
-      f.col(x.name).cast(x.dataType).as(x.name))
-    val projected = layered.select(cols.toIndexedSeq: _*)
-    // numFiles: the saveGraphIndex file-count scaling knob, applied
-    // across layers (layer 0 holds ~all rows, so its share of the
-    // range partitions scales the same way)
-    (if (numFiles > 0)
-       projected.repartitionByRange(numFiles, f.col("layer"),
-         f.col("query_id"))
-     else projected.repartitionByRange(f.col("layer"), f.col("query_id")))
-      .sortWithinPartitions("layer", "query_id", "rank")
-      .write.mode("overwrite").partitionBy("layer").parquet(path)
-  }
-
-  /** Load a persisted layered HNSW index for [[Hnsw.search]]; fails
-    * fast on schema drift ([[loadGraphIndex]]'s contract). When the
-    * artifact carries DELTA generations ([[appendHnswDelta]]), the
-    * load RECONCILES: for every (layer, source) present in a delta,
-    * the HIGHEST-generation delta rows win and the base rows are
-    * superseded; untouched base rows read through verbatim. The delta
-    * key set is batch-bounded, so the base side passes the anti-join
-    * broadcast-style without a shuffle — reconciliation cost scales
-    * with the deltas, not the index. */
-  def loadHnswIndex(spark: SparkSession, path: String): DataFrame =
-    reconcileDeltas(loadHnswBase(spark, path), spark, path,
-      hnswIndexSchema, Seq("layer", "query_id"))
-
-  /** The TOP LAYER of a persisted HNSW artifact WITHOUT scanning it:
-    * the base's layers are its `layer=N` partition DIRECTORIES (a
-    * metadata listing), and only the batch-sized delta generations —
-    * which may fold in rows at any layer — are read for rows. A
-    * per-trigger guard ([[graft.streaming.StreamingAnn
-    * .forgetHnswPersisted]]) must not pay an O(index) aggregation to
-    * learn a number the layout already states. */
-  def hnswMaxLevel(spark: SparkSession, path: String): Int = {
-    val fs = fsOf(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val dirLayers = fs.listStatus(p).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("layer=") =>
-        s.stripPrefix("layer=").toInt }
-    val deltaPath = s"$path/$DeltaDir"
-    val deltaLayers =
-      if (!hasDataFiles(spark, deltaPath)) Seq.empty[Int]
-      else readDeltas(spark, deltaPath)
-        .agg(org.apache.spark.sql.functions.max(
-          org.apache.spark.sql.functions.col("layer")))
-        .collect().toSeq.filterNot(_.isNullAt(0)).map(_.getInt(0))
-    val all = dirLayers ++ deltaLayers
-    require(all.nonEmpty, s"hnswMaxLevel($path): no layers found — not " +
-      "a layered artifact")
-    all.max
-  }
-
   private val DeltaDir = "_delta" // "_"-prefix: hidden from the
                                   // base parquet listing
   private val DeltaSeqCol = "_seq"
   private val DeltaLockDir = "_locks" // one atomically-created marker
                                       // file per claimed generation
 
-  private def loadHnswBase(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    val got = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    hnswIndexSchema.fields.foreach { f =>
-      // partitionBy writes `layer` back as a partition column — parquet
-      // infers INT for it, matching the declared schema
-      require(got.get(f.name).contains(f.dataType),
-        s"trained-state schema mismatch at $path: expected ${f.name}: " +
-          s"${f.dataType.sql}, found " +
-          got.get(f.name).map(_.sql).getOrElse("<missing>"))
-    }
-    df.select(hnswIndexSchema.fields.map(f =>
-      org.apache.spark.sql.functions.col(f.name)).toIndexedSeq: _*)
-  }
-
   private def pathExists(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
+    val hp = new Path(p)
     hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
   }
 
-  private def fsOf(spark: SparkSession, p: String)
-      : org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fsOf(spark: SparkSession, p: String): FileSystem =
+    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Whether `dir` holds at least one DATA file (recursively, skipping
     * "_"/"."-prefixed names — committer markers and lock files): a
@@ -1197,18 +696,15 @@ object TrainedState {
     * crash `spark.read.parquet` with an unreadable-dir error. */
   private def hasDataFiles(spark: SparkSession, dir: String): Boolean = {
     val fs = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     if (!fs.exists(p)) false
     else {
       // the listing returns FULLY-QUALIFIED paths (file:/…); qualify
       // the root the same way or every ancestor check walks past it
       val root = fs.makeQualified(p)
       // bound the ancestor walk by URI-PATH STRING, not Path equality:
-      // qualified URIs can differ in authority spelling across listing
-      // APIs (viewfs/object stores) — a failed equality would walk past
-      // the root to `_delta` itself, classify EVERY delta file hidden,
-      // and silently drop all committed generations at load (the
-      // requireGenLayout containment convention)
+      // authority spelling differs across listing APIs, and walking past
+      // the root would classify EVERY delta file hidden
       val rootStr = root.toUri.getPath.stripSuffix("/")
       val it = fs.listFiles(p, true)
       var found = false
@@ -1217,7 +713,7 @@ object TrainedState {
         val name = s.getPath.getName
         // a file inside a hidden subtree (e.g. _locks/gen-3) must not
         // count either — check every ancestor up to `dir`
-        def hiddenAnywhere(q: org.apache.hadoop.fs.Path): Boolean =
+        def hiddenAnywhere(q: Path): Boolean =
           if (q == null ||
               q.toUri.getPath.stripSuffix("/") == rootStr) false
           else if (q.getName.startsWith("_") || q.getName.startsWith("."))
@@ -1230,35 +726,23 @@ object TrainedState {
     }
   }
 
-  /** Row cap for LOCALIZING the delta slice at load: deltas are
-    * batch-bounded by contract, so the common case collects them once
-    * (2¹⁸ rows ≈ a few MB of ids/scores). Localizing matters because a
-    * `broadcast(plan)` RE-EXECUTES the plan on every action of every
-    * consumer (the measured walk-loop lesson) — a delta-loaded index is
-    * consumed by every descent hop's adjacency fetch, and the
-    * distributed reconcile would re-run the delta read + aggregate per
-    * hop, where Project/Filter over a LocalRelation broadcasts
-    * job-free. Past the cap (generations left to accumulate far past
-    * compaction policy) the load falls back to the distributed
-    * reconcile — same rows, lazier shape. */
+  /** Row cap for LOCALIZING the delta slice at load (2¹⁸ rows ≈ a few
+    * MB of ids/scores): a `broadcast(plan)` RE-EXECUTES its plan on every
+    * action of every consumer (each descent hop), while a LocalRelation
+    * broadcasts job-free. Past the cap the load falls back to the
+    * distributed reconcile — same rows, lazier shape. */
   private[similarity] val LocalDeltaCap = 1 << 18
 
-  /** Exact row count of a parquet relation from its file FOOTERS, read
-    * driver-side — zero Spark jobs. Used by [[reconcileDeltas]] to
-    * decide localize-vs-distributed without the `delta.count()` action
-    * the decision used to pay: the count job was one scheduler round
-    * trip per delta-bearing sub-artifact per load, on every serving
-    * trigger. The files come from the RELATION'S OWN pinned listing
-    * (`df.inputFiles`), so the count and the subsequent collect see
-    * exactly the same generation set — the same consistency the old
-    * count/collect pair got from sharing one InMemoryFileIndex.
-    * Footer reads are cheap here by construction: one file per
-    * generation, generations bounded by compaction policy. */
+  /** Exact row count of parquet files from their FOOTERS, read on the
+    * driver — zero Spark jobs (a `count()` was one scheduler round trip
+    * per delta-bearing artifact per load). Given a relation's own
+    * pinned `inputFiles`, the count and a later collect see the same
+    * generation set. */
   private[similarity] def footerRowCount(spark: SparkSession,
                              files: Array[String]): Long = {
     val conf = spark.sessionState.newHadoopConf()
     def one(uri: String): Long = {
-      val p = new org.apache.hadoop.fs.Path(new java.net.URI(uri))
+      val p = new Path(new java.net.URI(uri))
       val in = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
       try in.getRecordCount finally in.close()
@@ -1295,7 +779,6 @@ object TrainedState {
                               keyCols: Seq[String],
                               localCap: Long = LocalDeltaCap.toLong)
       : DataFrame = {
-    val f = org.apache.spark.sql.functions
     val deltaPath = s"$path/$DeltaDir"
     if (!hasDataFiles(spark, deltaPath)) base
     else {
@@ -1306,14 +789,9 @@ object TrainedState {
       val cols = schema.fields.map(x => f.col(x.name)).toIndexedSeq
       val keyIdx = keyCols.map(schema.fieldNames.indexOf(_))
       val seqIdx = schema.fields.length // _seq appended after the schema
-      // the footer count reads the SAME pinned file listing the
-      // collect will scan (delta.inputFiles — InMemoryFileIndex lists
-      // once at relation construction), so a generation committed
-      // between the two is invisible to both and the cap genuinely
-      // bounds the pull; the newcomer serves from the next load. The
-      // footer read replaces what used to be a delta.count() ACTION —
-      // one fewer scheduler round trip per delta-bearing sub-artifact
-      // per load, which a serving loop pays on every trigger
+      // the footer count reads the SAME pinned listing the collect will
+      // scan, so a generation committed between the two is invisible to
+      // both and the cap genuinely bounds the pull
       val deltaRows =
         if (footerRowCount(spark, delta.inputFiles) <= localCap)
           Some(delta.select(cols :+ f.col(DeltaSeqCol): _*).collect())
@@ -1339,8 +817,7 @@ object TrainedState {
           val latestLocal = spark.createDataFrame(latestRows.asJava, schema)
           val keySchema = StructType(keyCols.map(n =>
             schema.fields(schema.fieldNames.indexOf(n))))
-          val keysLocal = spark.createDataFrame(
-            maxSeq.keysIterator
+          val keysLocal = spark.createDataFrame(maxSeq.keysIterator
               .map(k => org.apache.spark.sql.Row.fromSeq(k)).toSeq.asJava,
             keySchema)
           base.join(f.broadcast(keysLocal), keyCols, "left_anti")
@@ -1360,10 +837,310 @@ object TrainedState {
     }
   }
 
+  /** How a kind lays out its corpus-sized base. */
+  private sealed trait Layout
+
+  /** `repartitionByRange(range)` + `sortWithinPartitions(sort)`: every
+    * file carries tight min/max key stats, so a bounded-id `isin` reads
+    * only the row groups its ids can touch (`partitionBy` on
+    * corpus-cardinal ids would mint a directory per vector). Files: the
+    * caller's `numFiles` (0 = shuffle default); data-sized on compaction
+    * — the r14 100× leg (SCALE.md) measured search 2.32× at a fixed file
+    * count, 1.12× with files ∝ rows. `partitionBy`: one directory per
+    * value of a low-cardinality column. Empty `range`: rows as given. */
+  private final case class RangeSorted(range: Seq[String], sort: Seq[String],
+                                       partitionBy: Option[String] = None)
+      extends Layout
+
+  /** `partitionBy(centroid_id)` with hot cells salted into several
+    * files ([[saveCellPartitioned]]): a probe of `nprobe` cells is a
+    * partition-pruned read of exactly those cells. The partition
+    * column's type is inferred on read, so the load checks its presence
+    * and casts it. */
+  private case object CellPartitioned extends Layout
+
+  /** One delta-capable artifact kind, stated once; the generic lifecycle
+    * ([[saveKind]], [[loadKind]], [[appendKind]], [[forgetKind]],
+    * [[compactKind]]) runs any descriptor.
+    *
+    * @param kind      [[detectArtifactKind]] name (shared by the three
+    *                  retrieval sub-artifacts, `sub` below the root)
+    * @param noun      what a schema-mismatch error says the path is not
+    * @param keys      reconcile key: owns its newest generation's row set
+    * @param tombstone payload column whose NULL is a tombstone (None: no
+    *                  forget)
+    * @param localCap  localized-reconcile row cap: 2¹² for embedding rows
+    *                  (2¹² × 4096 dims = 64 MB worst case), wider if narrow
+    * @param detect    (child dirs, base columns) test, in registry order
+    * @param param     one value per artifact: given to the save, read back
+    *                  by every append/forget
+    * @param fill      tombstone values of non-key, non-payload columns
+    * @param input     hook `(op, rows, path, param)` reshaping caller rows
+    *                  for "save", "append" or "forget" (key rows) */
+  private final case class ArtifactKind(
+      kind: String, sub: String, noun: String, schema: StructType,
+      keys: Seq[String], tombstone: Option[String], localCap: Long,
+      layout: Layout, detect: (Set[String], Set[String]) => Boolean,
+      param: Option[String] = None, fill: Map[String, Any] = Map.empty,
+      input: Option[(String, DataFrame, String, Int) => DataFrame] = None) {
+    def at(root: String): String = if (sub.isEmpty) root else s"$root/$sub"
+  }
+
+  /** A BM25 artifact-set root: directory-shaped, so tried first. */
+  private val retrievalRoot: (Set[String], Set[String]) => Boolean =
+    (d, _) => Set("postings", "terms", "doclens", "stats").subsetOf(d)
+
+  /** [[graft.text.Retrieval]] postings, range-sorted by (term, doc_id). */
+  private val postingsKind = ArtifactKind("retrieval", "postings",
+    "retrieval-postings", postingsSchema, Seq("term", "doc_id"), None,
+    LocalDeltaCap.toLong, RangeSorted(Seq("term", "doc_id"),
+      Seq("term", "doc_id")), retrievalRoot)
+
+  /** Per-term document frequencies; a fold-in's accumulated df row
+    * supersedes the base row. */
+  private val termsKind = ArtifactKind("retrieval", "terms",
+    "retrieval-terms", retrievalTermsSchema, Seq("term"), None,
+    LocalDeltaCap.toLong, RangeSorted(Seq("term"), Seq("term")), retrievalRoot)
+
+  /** Document lengths — the serve's membership side: a NULL-dl tombstone
+    * removes the doc from results at once. */
+  private val docLensKind = ArtifactKind("retrieval", "doclens",
+    "retrieval-doclens", docLensSchema, Seq("doc_id"), Some("dl"),
+    LocalDeltaCap.toLong, RangeSorted(Seq("doc_id"), Seq("doc_id")),
+    retrievalRoot)
+
+  /** Layered graph: one `layer=` directory per layer, each range-sorted
+    * by source like the flat graph; the newest generation wins per
+    * (layer, source). */
+  private val hnswKind = ArtifactKind("hnsw", "", "layered-graph",
+    hnswIndexSchema, Seq("layer", "query_id"), None, LocalDeltaCap.toLong,
+    RangeSorted(Seq("layer", "query_id"), Seq("layer", "query_id", "rank"),
+      Some("layer")), (d, _) => d.exists(_.startsWith("layer=")))
+
+  /** IVF-PQ codes: numSub ints per row, so the scalar-row cap halved. */
+  private val ivfPqKind = ArtifactKind("ivfpq", "", "IVF-PQ-index",
+    ivfPqIndexSchema, Seq("vec_id"), Some("codes"), 1L << 17, CellPartitioned,
+    (d, c) => d.exists(_.startsWith("centroid_id=")) && c("codes"),
+    fill = Map("centroid_id" -> -1L))
+
+  /** IVF codes index: the flat probe scores the index's OWN embeddings,
+    * so a tombstone here (not only on the vectors artifact) is what
+    * keeps a deleted id from being served. */
+  private val ivfKind = ArtifactKind("ivf", "", "IVF-index",
+    ivfIndexSchema, Seq("vec_id"), Some("embedding"), 1L << 12,
+    CellPartitioned,
+    (d, c) => d.exists(_.startsWith("centroid_id=")) && c("embedding"),
+    fill = Map("centroid_id" -> -1L))
+
+  /** Flat kNN-graph edges; a re-touched source's out-list is replaced
+    * whole. */
+  private val graphKind = ArtifactKind("graph", "", "graph-index",
+    graphIndexSchema, Seq("query_id"), None, LocalDeltaCap.toLong,
+    RangeSorted(Seq("query_id"), Seq("query_id", "rank")),
+    (_, c) => Seq("query_id", "rank", "neighbor_id").forall(c))
+
+  /** Flat PQ codes (DiskANN cold side): keyed per `vec_id`, so ONE
+    * `(vec_id, 0, NULL)` tombstone outranks the id's whole code set. */
+  private val pqCodesKind = ArtifactKind("pqcodes", "", "PQ-codes",
+    pqCodesSchema, Seq("vec_id"), Some("code"), LocalDeltaCap.toLong,
+    RangeSorted(Seq("vec_id"), Seq("vec_id", "sub")),
+    (_, c) => Seq("vec_id", "sub", "code").forall(c), fill = Map("sub" -> 0))
+
+  /** Row cap for localizing a deletion id list — single-long rows, so
+    * the [[Similarity]] shortlist cap's rationale applies. */
+  private val MaxLocalForgetIds = 1 << 17
+
+  /** Late-interaction token bags, keyed per (doc_id, token_idx): a
+    * SHORTER re-ingested bag leaves the old higher indices as orphans,
+    * so a changed bag is forgotten first, then appended. A forget names
+    * doc ids; the hook enumerates their live token keys, id-pruned (the
+    * deletion list localizes into an `isin` on the doc_id-sorted scan;
+    * past [[MaxLocalForgetIds]] a broadcast left-semi). */
+  private val tokensKind: ArtifactKind = ArtifactKind("tokens", "",
+    "token-bag", tokensSchema, Seq("doc_id", "token_idx"), Some("embedding"),
+    1L << 12, RangeSorted(Seq("doc_id"), Seq("doc_id", "token_idx")),
+    (_, c) => Seq("doc_id", "token_idx", "embedding").forall(c),
+    input = Some((op, rows, path, _) => if (op != "forget") rows else {
+      val live = loadKind(tokensKind, rows.sparkSession, path)
+      val ids = rows.select(f.col("doc_id").cast("long").as("doc_id"))
+      val local = ids.limit(MaxLocalForgetIds + 1).collect()
+      if (local.length > MaxLocalForgetIds)
+        live.join(f.broadcast(ids), Seq("doc_id"), "left_semi")
+      else live.filter(f.col("doc_id").isin(
+        local.map(_.getLong(0)).distinct.toIndexedSeq: _*))
+    }))
+
+  /** Pooled corpus for the MaxSim funnel's coarse stage. `dims` rides in
+    * the rows, and every written pool's width is checked against it: a
+    * width-drifted row would make the serving dot_codes silently null.
+    * Not range-sorted — the brute coarse stage scans it whole. */
+  private val pooledKind = ArtifactKind("pooled", "", "pooled-corpus",
+    pooledSchema, Seq("id"), Some("pool"), 1L << 15, RangeSorted(Nil, Nil),
+    (_, c) => Seq("id", "n_tokens", "pool", "dims").forall(c),
+    param = Some("dims"), fill = Map("n_tokens" -> 0L),
+    input = Some((op, rows, _, dims) => if (op == "forget") rows else {
+      require(dims >= 1, s"savePooled: dims=$dims must be >= 1")
+      rows.select(f.col("id").cast("long").as("id"),
+        f.col("n_tokens").cast("long").as("n_tokens"),
+        f.when(f.size(f.col("pool")) === dims, f.col("pool"))
+          .otherwise(f.raise_error(f.concat(f.lit(
+            s"savePooled contract ($op): pool width <> dims=$dims for id "),
+            f.col("id").cast("string"))).cast("array<long>")).as("pool"))
+    }))
+
+  /** pHash/simhash signatures PRE-BANDED: one row per (signature, 16-bit
+    * block), sorted by `bkey` so a probe batch's bucket `isin` reads only
+    * its buckets' row groups. Keyed per `id`: a re-admitted signature's
+    * band rows replace the old set, and ONE `(-1, id, NULL)` row
+    * tombstones it. Caller rows are raw `(id, simhash)`. */
+  private val bandedSigsKind = ArtifactKind("bandedsigs", "",
+    "banded-signature", bandedSigSchema, Seq("id"), Some("simhash"),
+    LocalDeltaCap.toLong, RangeSorted(Seq("bkey", "id"), Seq("bkey", "id")),
+    (_, c) => Seq("bkey", "id", "simhash", "blocks").forall(c),
+    param = Some("blocks"), fill = Map("bkey" -> -1L),
+    input = Some((op, rows, _, blocks) => if (op == "forget") rows else {
+      require(blocks >= 1 && blocks <= 60,
+        s"saveBandedSigIndex: blocks=$blocks")
+      Similarity.bandKeys(rows.select(f.col("id").cast("long").as("id"),
+        f.col("simhash").cast("long").as("simhash")))
+    }))
+
+  /** Corpus vectors, the float side of a persisted ANN deployment,
+    * range-sorted by `vec_id` for the walks' and fold-ins' bounded id
+    * probes. Tried last: the IVF embedding shape matches it too. */
+  private val vectorsKind = ArtifactKind("vectors", "", "corpus-vectors",
+    vectorsSchema, Seq("vec_id"), Some("embedding"), 1L << 12,
+    RangeSorted(Seq("vec_id"), Seq("vec_id")),
+    (_, c) => Seq("vec_id", "embedding").forall(c))
+
+  /** Every delta-capable kind, in [[detectArtifactKind]]'s order
+    * (directory layouts first, then the narrower column sets). */
+  private val registry: Seq[ArtifactKind] = Seq(postingsKind, termsKind,
+    docLensKind, hnswKind, ivfPqKind, ivfKind, graphKind, pqCodesKind,
+    tokensKind, pooledKind, bandedSigsKind, vectorsKind)
+
+  /** The descriptors of a [[detectArtifactKind]] kind, roots first. */
+  private def partsOf(kind: String): Seq[ArtifactKind] = {
+    val parts = registry.filter(_.kind == kind)
+    require(parts.nonEmpty, s"unknown artifact kind $kind")
+    parts
+  }
+
+  /** Caller rows as the kind stores them: the input hook, then the
+    * recorded parameter. */
+  private def stored(k: ArtifactKind, op: String, rows: DataFrame,
+                     path: String, param: Int): DataFrame = {
+    val shaped = k.input.fold(rows)(_(op, rows, path, param))
+    k.param.fold(shaped)(c => shaped.withColumn(c, f.lit(param)))
+  }
+
+  /** The recorded parameter from ONE row: the save writes one value on
+    * every row, so any row speaks for the base — where a full min/max
+    * sweep ([[loadPooledParams]]) would be an O(corpus) job per batch. */
+  private def paramOf(spark: SparkSession, path: String, c: String): Int = {
+    val r = spark.read.parquet(path).select(f.col(c).cast("int"))
+      .limit(1).collect()
+    require(r.nonEmpty, s"trained-state at $path is empty: no $c recorded")
+    r.head.getInt(0)
+  }
+
+  private def saveKind(k: ArtifactKind, rows: DataFrame, path: String,
+                       numFiles: Int = 0, param: Int = 0,
+                       append: Boolean = false,
+                       targetRowsPerFile: Long = DefaultTargetRowsPerFile)
+      : Unit =
+    write(k, stored(k, "save", rows, path, param), path, numFiles, append,
+      targetRowsPerFile)
+
+  /** Write a base in the kind's layout (schema columns only). */
+  private def write(k: ArtifactKind, rows: DataFrame, path: String,
+                    numFiles: Int, append: Boolean = false,
+                    targetRowsPerFile: Long = DefaultTargetRowsPerFile)
+      : Unit = {
+    val projected = rows.select(k.schema.fields.map(x =>
+      f.col(x.name).cast(x.dataType).as(x.name)).toIndexedSeq: _*)
+    k.layout match {
+      case CellPartitioned => saveCellPartitioned(projected, k.schema, path,
+        append, targetRowsPerFile)
+      case RangeSorted(range, sort, partitionBy) =>
+        val laid =
+          if (range.isEmpty) projected
+          else (if (numFiles > 0)
+                  projected.repartitionByRange(numFiles, range.map(f.col): _*)
+                else projected.repartitionByRange(range.map(f.col): _*))
+            .sortWithinPartitions(sort.head, sort.tail: _*)
+        val w = laid.write.mode("overwrite")
+        partitionBy.fold(w)(c => w.partitionBy(c)).parquet(path)
+    }
+  }
+
+  /** Schema-checked base + newest-wins deltas ([[reconcileDeltas]]),
+    * tombstones dropped after winning: the load never serves a deleted
+    * key, and a later append of the key supersedes its tombstone. */
+  private def loadKind(k: ArtifactKind, spark: SparkSession,
+                       path: String): DataFrame = {
+    val inferred =
+      if (k.layout == CellPartitioned) Set("centroid_id") else Set.empty[String]
+    val live = reconcileDeltas(load(spark, k.schema, path, k.noun, inferred),
+      spark, path, k.schema, k.keys, k.localCap)
+    k.tombstone.fold(live)(c => live.filter(f.col(c).isNotNull))
+  }
+
+  private def cachedKind(k: ArtifactKind, spark: SparkSession,
+                         path: String): DataFrame =
+    cachedLoad(spark, path)(loadKind(k, spark, path))
+
+  /** One delta generation of caller rows — write cost scales with the
+    * batch, not the artifact. Returns the materialized slice. */
+  private def appendKind(k: ArtifactKind, rows: DataFrame,
+                         path: String): DataFrame = {
+    val param = k.param.fold(0)(paramOf(rows.sparkSession, path, _))
+    appendDeltaGeneration(stored(k, "append", rows, path, param), path,
+      k.schema)
+  }
+
+  /** One TOMBSTONE generation — O(deletions); ordered (a later append of
+    * the key supersedes it); folded out of the bytes by the next
+    * compaction, which rewrites the already-filtered load. Forgetting a
+    * never-saved id writes a harmless row. */
+  private def forgetKind(k: ArtifactKind, ids: DataFrame,
+                         path: String): Unit = {
+    val param = k.param.fold(0)(paramOf(ids.sparkSession, path, _))
+    val keyed = stored(k, "forget", ids, path, param)
+    appendDeltaGeneration(keyed.select(k.schema.fields.map { x =>
+      val c =
+        if (k.keys.contains(x.name) || k.param.contains(x.name))
+          f.col(x.name)
+        else f.lit(k.fill.getOrElse(x.name, null))
+      c.cast(x.dataType).as(x.name)
+    }.toIndexedSeq: _*), path, k.schema)
+  }
+
+  /** Fold pending generations into the base, crash-safely
+    * ([[compactSwap]]). */
+  private def compactKind(k: ArtifactKind, spark: SparkSession, path: String,
+                          targetRowsPerFile: Long = DefaultTargetRowsPerFile)
+      : Unit =
+    rewrite(k, spark, path, loadKind(k, spark, path), targetRowsPerFile)
+
+  /** Swap `live` in as the base of `path` in the kind's layout; a
+    * range-sorted rewrite is DATA-SIZED (files from the artifact's rows
+    * at `targetRowsPerFile`), a cell-partitioned one splits hot cells at
+    * the same target. */
+  private def rewrite(k: ArtifactKind, spark: SparkSession, path: String,
+                      live: => DataFrame, targetRowsPerFile: Long): Unit = {
+    val files = k.layout match {
+      case RangeSorted(range, _, _) if range.nonEmpty =>
+        filesForRows(approxRows(spark, path), targetRowsPerFile)
+      case _ => 0
+    }
+    compactSwap(spark, path, live,
+      (df, p) => write(k, df, p, files, targetRowsPerFile = targetRowsPerFile))
+  }
+
   /** Claimed-generation numbers visible as lock markers. */
-  private def lockNumbers(fs: org.apache.hadoop.fs.FileSystem,
-                          deltaPath: String): Seq[Long] = {
-    val lockDir = new org.apache.hadoop.fs.Path(s"$deltaPath/$DeltaLockDir")
+  private def lockNumbers(fs: FileSystem, deltaPath: String): Seq[Long] = {
+    val lockDir = new Path(s"$deltaPath/$DeltaLockDir")
     if (!fs.exists(lockDir)) Seq.empty
     else fs.listStatus(lockDir).toSeq.map(_.getPath.getName)
       .collect { case s if s.startsWith("gen-") =>
@@ -1371,9 +1148,8 @@ object TrainedState {
   }
 
   /** Committed-generation numbers visible as `gen-N` directories. */
-  private def genDirNumbers(fs: org.apache.hadoop.fs.FileSystem,
-                            deltaPath: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(deltaPath)
+  private def genDirNumbers(fs: FileSystem, deltaPath: String): Seq[Long] = {
+    val p = new Path(deltaPath)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.filter(_.isDirectory)
       .map(_.getPath.getName)
@@ -1382,22 +1158,15 @@ object TrainedState {
   }
 
   /** Claim-FLOOR markers (`_locks/floor-N`): a compaction pre-seeds the
-    * rewritten tree with the highest generation number it folded, so
-    * the next [[claimGeneration]] can never reuse a folded number even
-    * when the folded `gen-N` directories and their spent locks are gone
-    * from the live tree. Load-bearing for the post-swap-crash
-    * interleaving: without the floor, a crash after the swap but before
-    * the late-generation carryover leaves a live tree with an EMPTY
-    * `_delta` while the parked trash still holds the folded gens — a
-    * post-crash append would restart numbering at gen-1, and the next
-    * compaction's stranded-trash recovery would carry the old higher-
-    * numbered gens back in, letting their stale `_seq` outrank the
-    * newer acknowledged append under newest-wins reconcile. Floor
-    * markers never count toward [[deltaGenerations]] (they are not
-    * pending work — only a numbering lower bound). */
-  private def floorNumbers(fs: org.apache.hadoop.fs.FileSystem,
-                           deltaPath: String): Seq[Long] = {
-    val lockDir = new org.apache.hadoop.fs.Path(s"$deltaPath/$DeltaLockDir")
+    * rewritten tree with the highest number it folded, so
+    * [[claimGeneration]] never reuses a folded number. Without it, a
+    * crash after the swap but before the carryover would restart
+    * numbering at gen-1, and the stranded-trash recovery would carry
+    * higher-numbered stale gens back in over a newer acknowledged
+    * append. Floors are a numbering lower bound, never pending work
+    * ([[deltaGenerations]] ignores them). */
+  private def floorNumbers(fs: FileSystem, deltaPath: String): Seq[Long] = {
+    val lockDir = new Path(s"$deltaPath/$DeltaLockDir")
     if (!fs.exists(lockDir)) Seq.empty
     else fs.listStatus(lockDir).toSeq.map(_.getPath.getName)
       .collect { case s if s.startsWith("floor-") =>
@@ -1405,18 +1174,14 @@ object TrainedState {
   }
 
   /** Fail loudly on the pre-r13 delta layout (files appended directly
-    * under `_delta` / `layer=` directories): the recursive reconcile
-    * read would silently null out the partition-directory columns and
-    * DROP those generations' updates — an r12 artifact with pending
-    * deltas must be compacted with r12 code before upgrading
-    * (MIGRATION.md). Detectable purely from layout: data files exist
-    * but no `gen-N` directory does, or a data file sits outside every
-    * `gen-N` subtree. */
+    * under `_delta` / `layer=` directories), which the recursive
+    * reconcile read would silently drop (MIGRATION.md): a data file
+    * outside every `gen-N` subtree. */
   private def requireGenLayout(spark: SparkSession,
                                deltaPath: String): Unit = {
     val fs = fsOf(spark, deltaPath)
     if (hasDataFiles(spark, deltaPath)) {
-      val root = fs.makeQualified(new org.apache.hadoop.fs.Path(deltaPath))
+      val root = fs.makeQualified(new Path(deltaPath))
       // string-path containment, not Path equality — qualified URIs
       // differ in authority spelling across listing APIs (the
       // hasDataFiles makeQualified lesson, one level harder)
@@ -1447,14 +1212,11 @@ object TrainedState {
     }
   }
 
-  /** The number of delta generations CLAIMED under a saved artifact
-    * (0 = none; ≥ the committed count if a writer claimed and then
-    * failed) — the compaction-policy input: reconcile cost at load
-    * grows with accumulated generations, so a serving fleet compacts
-    * past a threshold. Driver-side FS metadata only: the count is the
-    * distinct union of lock markers and committed `gen-N` directories,
-    * so generations whose locks were lost (pre-lock writers, a carried
-    * swap) still count. Works for any delta-capable artifact. */
+  /** The number of delta generations CLAIMED under a saved artifact —
+    * the compaction-policy input (reconcile cost at load grows with
+    * it). FS metadata only: the distinct union of lock markers and
+    * committed `gen-N` directories, so a claimed-then-failed writer and
+    * a generation whose lock was lost both count. */
   def deltaGenerations(spark: SparkSession, path: String): Long = {
     val deltaPath = s"$path/$DeltaDir"
     requireGenLayout(spark, deltaPath)
@@ -1463,25 +1225,16 @@ object TrainedState {
       .distinct.size.toLong
   }
 
-  /** Default `maxGenerations` for policy-driven compaction in the
-    * serving loops ([[graft.streaming.StreamingAnn.buildGraphPersisted]]):
-    * reconcile cost at load grows with accumulated generations (the
-    * delta listing and the localized collect both scale with them), so
-    * a long-running fold-in fleet compacts once the claimed count
-    * reaches this. 16 keeps the per-load delta slice trivially bounded
-    * while amortizing each corpus-sized fold rewrite over 16
-    * batch-scaled appends; raise it for write-heavy loops, lower it
-    * for read-latency-sensitive ones. */
+  /** Default `maxGenerations` for policy-driven compaction: 16 keeps
+    * the per-load delta slice trivially bounded while amortizing each
+    * corpus-sized fold over 16 batch-sized appends; raise it for
+    * write-heavy loops, lower it for read-latency-sensitive ones. */
   val DefaultMaxGenerations = 16L
 
-  /** The compaction-policy loop in one call: compact `path` with the
-    * artifact's compaction (e.g. [[compactGraphIndex]],
-    * [[compactHnswIndex]]) when the claimed-generation count reaches
-    * `maxGenerations`; returns whether a compaction ran. A serving
-    * fleet calls this after each fold-in — reconcile cost at load
-    * grows with accumulated generations, and this bounds it. */
-  def compactIfNeeded(spark: SparkSession, path: String,
-                      maxGenerations: Long)
+  /** Compact `path` with `compact` once the claimed-generation count
+    * reaches `maxGenerations`; returns whether it ran. A serving loop
+    * calls this after each fold-in. */
+  def compactIfNeeded(spark: SparkSession, path: String, maxGenerations: Long)
                      (compact: (SparkSession, String) => Unit): Boolean = {
     require(maxGenerations >= 1,
       s"compactIfNeeded: maxGenerations=$maxGenerations must be >= 1")
@@ -1492,19 +1245,16 @@ object TrainedState {
   /** Bytes under the committed `gen-N` directories of an artifact's
     * `_delta` (FS metadata only) — the size-tiered policy's delta-side
     * input. */
-  private def deltaBytes(fs: org.apache.hadoop.fs.FileSystem,
-                         deltaPath: String): Long =
+  private def deltaBytes(fs: FileSystem, deltaPath: String): Long =
     genDirNumbers(fs, deltaPath).foldLeft(0L) { (acc, n) =>
-      acc + fs.getContentSummary(
-        new org.apache.hadoop.fs.Path(s"$deltaPath/gen-$n")).getLength
+      acc + fs.getContentSummary(new Path(s"$deltaPath/gen-$n")).getLength
     }
 
   /** Bytes of the artifact's BASE (everything under `path` except the
     * `_delta` tree and hidden siblings) — the size-tiered policy's
     * base-side input. */
-  private def baseBytes(fs: org.apache.hadoop.fs.FileSystem,
-                        path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
+  private def baseBytes(fs: FileSystem, path: String): Long = {
+    val p = new Path(path)
     if (!fs.exists(p)) 0L
     else fs.listStatus(p).toSeq
       .filterNot(s => s.getPath.getName.startsWith("_") ||
@@ -1514,9 +1264,9 @@ object TrainedState {
   }
 
   /** MERGE the committed delta generations of a delta-capable artifact
-    * into ONE generation — the size-tiered (LSM-style minor) compaction
-    * (r15 verdict #4): write cost scales with the DELTAS, never the
-    * corpus-sized base, so a long-running fold-in fleet stops paying an
+    * into ONE generation — the size-tiered (LSM-style minor) compaction:
+    * write cost scales with the DELTAS, never the corpus-sized base, so
+    * a long-running fold-in fleet stops paying an
     * O(artifact) rewrite every [[DefaultMaxGenerations]] appends. The
     * merged generation carries the newest-wins survivors of the merged
     * gens — for each key, the row-SET of its highest-generation delta —
@@ -1530,7 +1280,12 @@ object TrainedState {
     *    reconcile deterministically — no duplicates, no stale winners;
     *  - a generation committed CONCURRENTLY (claimed after M) keeps
     *    winning over the merged rows, exactly as it won over the
-    *    originals.
+    *    originals;
+    *  - a generation claimed BEFORE M that the listing missed (a fold-in
+    *    still writing, or committed after the listing) makes the merge
+    *    release M and return false: restamped rows would outrank it.
+    *    [[compactOrMergeIfNeeded]] then takes the full fold. A lock
+    *    left by a crashed writer keeps deferring merges the same way.
     *
     * The merged generation is written ASIDE (hidden `.merge-tmp-M`),
     * verified (`_SUCCESS`), renamed into place, and only then are the
@@ -1540,30 +1295,38 @@ object TrainedState {
     * merge/compaction at a time per artifact.
     *
     * Returns false (no-op) when fewer than two committed generations
-    * exist. */
+    * exist or a lower claim is outstanding. */
   def mergeDeltaGenerations(spark: SparkSession, path: String,
                             schema: StructType,
                             keyCols: Seq[String]): Boolean = {
-    val f = org.apache.spark.sql.functions
     val deltaPath = s"$path/$DeltaDir"
     requireGenLayout(spark, deltaPath)
     val fs = fsOf(spark, deltaPath)
     // stale pre-rename work from a crashed merge: base + gens intact,
     // safe to discard
-    if (fs.exists(new org.apache.hadoop.fs.Path(deltaPath)))
-      fs.listStatus(new org.apache.hadoop.fs.Path(deltaPath)).toSeq
+    if (fs.exists(new Path(deltaPath)))
+      fs.listStatus(new Path(deltaPath)).toSeq
         .filter(_.getPath.getName.startsWith(".merge-tmp-"))
         .foreach(s => fs.delete(s.getPath, true))
     val gens0 = genDirNumbers(fs, deltaPath).sorted
     if (gens0.size < 2) return false
     val m = claimGeneration(spark, deltaPath) // > every gens0 number
+    // a fold-in that claimed a number below m but is not in gens0 (its
+    // gen-N uncommitted, or committed after the listing) would lose
+    // every overlapping key to rows restamped m: release m and defer to
+    // the full fold, which carries late generations over
+    if ((lockNumbers(fs, deltaPath) ++ genDirNumbers(fs, deltaPath))
+          .exists(n => n < m && !gens0.contains(n))) {
+      fs.delete(new Path(s"$deltaPath/$DeltaLockDir/gen-$m"), false)
+      return false
+    }
     val merged = spark.read
       .option("recursiveFileLookup", "true")
       .parquet(gens0.map(n => s"$deltaPath/gen-$n"): _*)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols.map(f.col).toIndexedSeq: _*)
     val sortCols = schema.fields.map(_.name).toIndexedSeq
-    val tmp = new org.apache.hadoop.fs.Path(s"$deltaPath/.merge-tmp-$m")
+    val tmp = new Path(s"$deltaPath/.merge-tmp-$m")
     merged
       .withColumn("_mx", f.max(f.col(DeltaSeqCol)).over(w))
       .filter(f.col(DeltaSeqCol) === f.col("_mx"))
@@ -1572,76 +1335,43 @@ object TrainedState {
       .repartition(1)
       .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
       .write.parquet(tmp.toString)
-    require(fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")),
+    require(fs.exists(new Path(tmp, "_SUCCESS")),
       s"mergeDeltaGenerations: merged generation at $tmp did not commit " +
         s"(_SUCCESS missing) — original generations at $deltaPath are " +
         "untouched")
-    require(fs.rename(tmp,
-        new org.apache.hadoop.fs.Path(s"$deltaPath/gen-$m")),
+    require(fs.rename(tmp, new Path(s"$deltaPath/gen-$m")),
       s"mergeDeltaGenerations: could not activate gen-$m — merged tree " +
         s"left at $tmp, original generations untouched")
     // drop the merged gens and their spent locks; a crash mid-delete
     // leaves leftovers that lose every reconcile (seq < M) and are
     // re-merged away by the next pass
     gens0.foreach { n =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$deltaPath/gen-$n"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$deltaPath/$DeltaLockDir/gen-$n"), false)
+      fs.delete(new Path(s"$deltaPath/gen-$n"), true)
+      fs.delete(new Path(s"$deltaPath/$DeltaLockDir/gen-$n"), false)
     }
     true
   }
 
-  /** (schema, reconcile keys) for each delta-capable
-    * [[detectArtifactKind]] kind — the merge dispatcher's table.
-    * `retrieval` is handled by [[mergerFor]] directly (three delta-
-    * bearing sub-artifacts). */
-  private def mergeParams(kind: String): (StructType, Seq[String]) =
-    kind match {
-      case "hnsw"    => (hnswIndexSchema, Seq("layer", "query_id"))
-      case "graph"   => (graphIndexSchema, Seq("query_id"))
-      case "pqcodes" => (pqCodesSchema, Seq("vec_id"))
-      case "ivf"     => (ivfIndexSchema, Seq("vec_id"))
-      case "ivfpq"   => (ivfPqIndexSchema, Seq("vec_id"))
-      case "vectors" => (vectorsSchema, Seq("vec_id"))
-      case "tokens"  => (tokensSchema, Seq("doc_id", "token_idx"))
-      case "pooled"  => (pooledSchema, Seq("id"))
-      case "bandedsigs" => (bandedSigSchema, Seq("id"))
-      case other => sys.error(s"mergeParams: unknown artifact kind $other")
-    }
-
   /** The generation-merge for a [[detectArtifactKind]] kind — the
-    * size-tiered counterpart of [[compactorFor]]. */
-  def mergerFor(kind: String): (SparkSession, String) => Boolean =
-    kind match {
-      case "retrieval" => (s, p) =>
-        Seq(("postings", postingsSchema, Seq("term", "doc_id")),
-            ("terms", retrievalTermsSchema, Seq("term")),
-            ("doclens", docLensSchema, Seq("doc_id")))
-          .map { case (sub, sch, keys) =>
-            mergeDeltaGenerations(s, s"$p/$sub", sch, keys) }
-          .exists(identity)
-      case k =>
-        val (schema, keys) = mergeParams(k)
-        (s, p) => mergeDeltaGenerations(s, p, schema, keys)
-    }
+    * size-tiered counterpart of [[compactorFor]]; true when any of the
+    * kind's artifacts merged. */
+  def mergerFor(kind: String): (SparkSession, String) => Boolean = {
+    val parts = partsOf(kind)
+    (s, p) => parts.map(k =>
+      mergeDeltaGenerations(s, k.at(p), k.schema, k.keys)).exists(identity)
+  }
 
-  /** A full base fold costs O(base + deltas) bytes written; a
-    * generation merge costs O(deltas). Merge while the pending deltas
-    * are under base/[[MergeSizeRatio]] (write amplification bounded:
-    * each byte is re-merged at most ~log_2(base/delta) times before a
-    * full fold claims it); past the ratio the deltas are a meaningful
-    * fraction of the artifact and the full fold both bounds reconcile
-    * work AND re-establishes the data-sized file layout. */
+  /** Merge (O(deltas) written) while the pending deltas are under
+    * base/[[MergeSizeRatio]] — each byte is re-merged ~log₂(base/delta)
+    * times at most; past it, the full fold (O(base + deltas)) also
+    * restores the data-sized file layout. */
   val MergeSizeRatio = 8L
 
-  /** Size-tiered maintenance policy (r15 verdict #4): when the claimed
-    * generation count reaches `maxGenerations`, MERGE the delta
-    * generations (O(deltas) write) while they are small relative to
-    * the base, and run the artifact's full compaction (O(artifact)
-    * write, data-sized layout restored) once they are not. Returns the
-    * action taken ("none" | "merged" | "compacted"). The serving
-    * loops' [[compactIfNeeded]] remains the always-full-fold policy;
-    * this is the long-running-fleet variant [[maintainRoot]] runs. */
+  /** Size-tiered maintenance: once the claimed generation count reaches
+    * `maxGenerations`, MERGE the generations while they are small
+    * relative to the base (and no lower claim is outstanding), else run
+    * the full `compact`. Returns "none" | "merged" | "compacted".
+    * [[maintainRoot]] runs this; [[compactIfNeeded]] always folds. */
   def compactOrMergeIfNeeded(spark: SparkSession, path: String,
                              maxGenerations: Long, kind: String)
                             (compact: (SparkSession, String) => Unit)
@@ -1652,10 +1382,7 @@ object TrainedState {
     val fs = fsOf(spark, path)
     // a retrieval ROOT carries no _delta of its own — policy inputs
     // are the max/sums over its delta-bearing sub-artifacts
-    val subs =
-      if (kind == "retrieval")
-        Seq("postings", "terms", "doclens").map(s => s"$path/$s")
-      else Seq(path)
+    val subs = partsOf(kind).map(_.at(path))
     val gens = subs.map(deltaGenerations(spark, _)).max
     if (gens < maxGenerations) "none"
     else {
@@ -1675,96 +1402,46 @@ object TrainedState {
     * whether this sweep compacted it. `kind` None = unclassifiable
     * layout (left untouched — the receipt is the loud signal). */
   final case class MaintenanceReceipt(path: String, kind: Option[String],
-                                      generations: Long,
-                                      compacted: Boolean)
+                                      generations: Long, compacted: Boolean)
 
   /** Best-effort artifact-KIND detection from layout + schema — the
-    * [[maintainRoot]] dispatcher. Layout first (partition directories
-    * are unambiguous), then the base schema: `layer=` dirs → layered
-    * HNSW; `centroid_id=` dirs → IVF (embedding rows) or IVF-PQ
-    * (codes rows); flat files with (query_id, rank, neighbor_id) →
-    * graph; (vec_id, sub, code) → flat PQ codes. None when nothing
-    * matches — a sweep must never guess a compactor. */
-  def detectArtifactKind(spark: SparkSession,
-                         path: String): Option[String] = {
+    * [[maintainRoot]] dispatcher: the first registry descriptor whose
+    * test accepts the path's child directories and base columns. None
+    * when nothing matches — a sweep must never guess a compactor. */
+  def detectArtifactKind(spark: SparkSession, path: String): Option[String] = {
     val fs = fsOf(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     if (!fs.exists(p)) None
     else {
       val childDirs = fs.listStatus(p).toSeq.filter(_.isDirectory)
-        .map(_.getPath.getName)
+        .map(_.getPath.getName).toSet
       val fields =
         try spark.read.parquet(path).schema.fieldNames.toSet
         catch { case scala.util.control.NonFatal(_) => Set.empty[String] }
-      if (Set("postings", "terms", "doclens", "stats")
-            .subsetOf(childDirs.toSet))
-        Some("retrieval") // BM25 artifact-set root (directory-shaped,
-                          // so checked before any schema read)
-      else if (childDirs.exists(_.startsWith("layer="))) Some("hnsw")
-      else if (childDirs.exists(_.startsWith("centroid_id=")))
-        if (fields.contains("codes")) Some("ivfpq")
-        else if (fields.contains("embedding")) Some("ivf")
-        else None
-      else if (Set("query_id", "rank", "neighbor_id").subsetOf(fields))
-        Some("graph")
-      else if (Set("vec_id", "sub", "code").subsetOf(fields))
-        Some("pqcodes")
-      else if (Set("doc_id", "token_idx", "embedding").subsetOf(fields))
-        Some("tokens") // late-interaction token bags
-      else if (Set("id", "n_tokens", "pool", "dims").subsetOf(fields))
-        Some("pooled") // funnel coarse-side pooled corpus
-      else if (Set("bkey", "id", "simhash", "blocks").subsetOf(fields))
-        Some("bandedsigs") // banded pHash/simhash signature index
-      else if (Set("vec_id", "embedding").subsetOf(fields))
-        Some("vectors") // flat corpus vectors — the IVF embedding
-                        // shape is caught above by its centroid_id=
-                        // directories
-      else None
+      registry.find(_.detect(childDirs, fields)).map(_.kind)
     }
   }
 
   /** The compaction for a [[detectArtifactKind]] kind. */
-  def compactorFor(kind: String): (SparkSession, String) => Unit =
-    kind match {
-      case "hnsw"    => compactHnswIndex(_, _)
-      case "graph"   => compactGraphIndex(_, _)
-      case "pqcodes" => compactPqCodes(_, _)
-      case "ivf"     => compactIvfIndex
-      case "ivfpq"   => compactIvfPqIndex
-      case "vectors" => compactVectors(_, _)
-      case "tokens"  => compactTokens(_, _)
-      case "pooled"  => compactPooled
-      case "bandedsigs" => compactBandedSigIndex(_, _)
-      case "retrieval" => (s, p) => {
-        compactRetrievalPostings(s, s"$p/postings")
-        compactRetrievalTerms(s, s"$p/terms")
-        compactRetrievalDocLens(s, s"$p/doclens")
-      }
-      case other => sys.error(s"compactorFor: unknown artifact kind $other")
-    }
+  def compactorFor(kind: String): (SparkSession, String) => Unit = {
+    val parts = partsOf(kind)
+    (s, p) => parts.foreach(k => compactKind(k, s, k.at(p)))
+  }
 
-  /** ROOT-SWEEPING maintenance: inspect every artifact directory
-    * directly under `root` and compact each whose claimed-generation
-    * count has reached `maxGenerations` — the one-call fleet
-    * maintenance pass for a directory of persisted indexes (the
-    * per-loop policy hook [[compactIfNeeded]] covers indexes a
-    * serving loop owns; this covers everything else, e.g. artifacts
-    * written by ad-hoc jobs nobody's loop maintains). Skips hidden
-    * entries and `.compact-tmp`/`.compact-trash` siblings (in-flight
-    * or recoverable compaction state owned by their artifact's own
-    * next compaction). An artifact whose layout cannot be classified
-    * is NEVER touched — its receipt (kind = None, compacted = false)
-    * is the loud signal. A legacy pre-r13 delta layout still fails
-    * loudly ([[deltaGenerations]]'s contract) rather than being
-    * silently skipped — one bad artifact aborting the sweep beats a
-    * sweep that quietly stops maintaining it. */
+  /** ROOT-SWEEPING maintenance: every artifact directory directly under
+    * `root` whose claimed-generation count reached `maxGenerations` is
+    * merged or compacted ([[compactOrMergeIfNeeded]]) — the fleet pass
+    * for artifacts no serving loop owns. Skips hidden entries and
+    * `.compact-tmp`/`.compact-trash` siblings. An unclassifiable
+    * artifact is NEVER touched (its receipt is the loud signal); a
+    * pre-r13 delta layout aborts the sweep rather than being skipped. */
   def maintainRoot(spark: SparkSession, root: String,
                    maxGenerations: Long = DefaultMaxGenerations)
       : Seq[MaintenanceReceipt] = {
     require(maxGenerations >= 1,
       s"maintainRoot: maxGenerations=$maxGenerations must be >= 1")
     val fs = fsOf(spark, root)
-    val rp = new org.apache.hadoop.fs.Path(root)
+    val rp = new Path(root)
     if (!fs.exists(rp)) Seq.empty
     else fs.listStatus(rp).toSeq.filter(_.isDirectory)
       .map(_.getPath.getName)
@@ -1776,23 +1453,15 @@ object TrainedState {
         val kind = detectArtifactKind(spark, p)
         // a retrieval ROOT carries no _delta of its own — its pending
         // state is the max over the delta-bearing sub-artifacts
-        val gens =
-          if (kind.contains("retrieval"))
-            Seq("postings", "terms", "doclens")
-              .map(s => deltaGenerations(spark, s"$p/$s")).max
-          else deltaGenerations(spark, p)
+        val gens = kind.fold(deltaGenerations(spark, p))(k =>
+          partsOf(k).map(x => deltaGenerations(spark, x.at(p))).max)
         if (gens < maxGenerations)
           MaintenanceReceipt(p, kind, gens, compacted = false)
         else kind match {
           case Some(k) =>
-            // size-tiered (r15 verdict #4): merge small delta
-            // generations O(deltas) while the base dwarfs them; full
-            // fold O(artifact) once they are a meaningful fraction —
-            // bounded write amplification on a long-running fleet
             val action = compactOrMergeIfNeeded(spark, p,
               maxGenerations, k)(compactorFor(k))
-            MaintenanceReceipt(p, Some(k), gens,
-              compacted = action != "none")
+            MaintenanceReceipt(p, Some(k), gens, compacted = action != "none")
           case None =>
             MaintenanceReceipt(p, None, gens, compacted = false)
         }
@@ -1808,11 +1477,10 @@ object TrainedState {
     * still blocks its number). On stores without atomic create (some
     * object stores) this degrades to the documented single-writer
     * contract. */
-  private def claimGeneration(spark: SparkSession,
-                              deltaPath: String): Long = {
+  private def claimGeneration(spark: SparkSession, deltaPath: String): Long = {
     requireGenLayout(spark, deltaPath)
     val fs = fsOf(spark, deltaPath)
-    val lockDir = new org.apache.hadoop.fs.Path(s"$deltaPath/$DeltaLockDir")
+    val lockDir = new Path(s"$deltaPath/$DeltaLockDir")
     fs.mkdirs(lockDir)
     // floor markers participate in the lower bound but never in the
     // generation COUNT: a compacted tree carries only its floor, so
@@ -1821,17 +1489,12 @@ object TrainedState {
     val seen = lockNumbers(fs, deltaPath) ++ genDirNumbers(fs, deltaPath) ++
       floorNumbers(fs, deltaPath)
     val floor = if (seen.isEmpty) 0L else seen.max
-    // atomic create-if-absent. On HDFS create(overwrite=false) is
-    // atomic namenode-side, but Hadoop's LOCAL filesystem implements
-    // createNewFile as check-then-create (no O_EXCL) — two racing
-    // claimants can both "succeed" — so the file: scheme goes through
-    // the JDK's createNewFile, which is genuinely atomic. Either
-    // implementation may also lose the race by THROWING rather than
-    // returning false; both shapes mean "claim failed, try the next" —
-    // BOUNDED, so a persistent failure (disk full, permissions)
-    // surfaces as an error instead of an infinite claim loop.
+    // atomic create-if-absent: Hadoop's LOCAL filesystem checks then
+    // creates (two claimants can both "succeed"), so file: goes through
+    // the JDK's atomic createNewFile. A throw also means "claim failed,
+    // try the next" — BOUNDED, so disk-full/permissions surface.
     def tryClaim(n: Long): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(lockDir, s"gen-$n")
+      val p = new Path(lockDir, s"gen-$n")
       try {
         if (fs.getScheme == "file")
           new java.io.File(fs.makeQualified(p).toUri.getPath)
@@ -1858,37 +1521,24 @@ object TrainedState {
     * that number). */
   private val MaxClaimAttempts = 10000
 
-  /** The shared delta-generation writer: skip EMPTY slices entirely
-    * (an empty write would leave a `_SUCCESS`-only directory that
-    * bricks naive readers), claim a generation atomically, stamp rows
-    * with it, and write the generation into ITS OWN directory
-    * (`_delta/gen-N/`). The per-generation directory is load-bearing
-    * for concurrency, not just tidiness: two Spark jobs appending into
-    * ONE directory share its `_temporary` staging tree and each job's
-    * commit/abort deletes the other's in-flight task files — the
-    * atomic `_seq` claim alone cannot prevent that. With one directory
-    * per claimed generation, concurrent fold-ins never share staging
-    * (also the object-store-safe layout). Each generation is one
-    * sorted file (batch-bounded by contract) with every schema column
-    * INCLUDED as data — no `partitionBy` inside the generation, so the
-    * recursive reconcile read keeps all columns; deltas are small, so
-    * losing directory-level layer pruning on them costs ~nothing while
-    * the corpus-sized base keeps its full pruning layout. */
+  /** The shared delta-generation writer: skip EMPTY slices (a
+    * `_SUCCESS`-only directory bricks naive readers), claim a generation
+    * atomically, stamp rows with it, and write it into ITS OWN
+    * directory (`_delta/gen-N/`): two jobs appending into one directory
+    * share its `_temporary` staging and each commit/abort deletes the
+    * other's files. A generation is one sorted, batch-bounded file with
+    * every schema column as data (no `partitionBy`), so the recursive
+    * reconcile read keeps all columns. */
   private def appendDeltaGeneration(delta: DataFrame, path: String,
                                     schema: StructType): DataFrame = {
-    val f = org.apache.spark.sql.functions
     val spark = delta.sparkSession
     val deltaPath = s"$path/$DeltaDir"
     val cols = schema.fields.map(x =>
       f.col(x.name).cast(x.dataType).as(x.name))
-    // ONE execution of the (possibly expensive — a fold-in's whole
-    // search lineage) slice plan: materialize eagerly, then both the
-    // emptiness probe and the write read the cached rows. The blocks
-    // are a transient write buffer, not the only copy — a lost
-    // executor fails the append and the caller's plan still stands.
-    // Returned so a caller that needs the slice AGAIN (e.g.
-    // foldInRetrieval's touched-vocabulary aggregation) reads these
-    // blocks instead of paying its own checkpoint job.
+    // ONE execution of the (possibly expensive) slice plan: both the
+    // emptiness probe and the write read the checkpointed rows, which
+    // are returned for a caller that needs the slice again
+    // (foldInRetrieval's touched-vocabulary aggregation)
     val projected = delta.select(cols.toIndexedSeq: _*)
       .localCheckpoint(true)
     if (projected.isEmpty) () // nothing changed — no generation
@@ -1903,13 +1553,9 @@ object TrainedState {
     projected
   }
 
-  /** Read every delta generation under an artifact (the gen-N
-    * directories), all schema columns plus [[DeltaSeqCol]]. Recursive
-    * lookup, not partition discovery — generations are self-contained
-    * files. A pre-r13 flat-append delta layout fails loudly BEFORE the
-    * read ([[requireGenLayout]] — the recursive read would otherwise
-    * null out partition-directory columns and silently drop those
-    * generations); see MIGRATION.md. */
+  /** Read every delta generation under an artifact, all schema columns
+    * plus [[DeltaSeqCol]], by recursive lookup (generations are
+    * self-contained files), after [[requireGenLayout]]. */
   private[similarity] def readDeltas(spark: SparkSession, deltaPath: String): DataFrame = {
     requireGenLayout(spark, deltaPath)
     spark.read.option("recursiveFileLookup", "true").parquet(deltaPath)
@@ -1932,20 +1578,19 @@ object TrainedState {
     * source inside it instead of replacing — the exists-guard is
     * load-bearing, not defensive). Shared by the post-swap late-
     * generation carryover and the stale-trash recovery below. */
-  private def carryOver(fs: org.apache.hadoop.fs.FileSystem,
-                        fromDelta: String, toDelta: String,
+  private def carryOver(fs: FileSystem, fromDelta: String, toDelta: String,
                         gens: Seq[Long], locks: Seq[Long],
                         floors: Seq[Long] = Seq.empty): Unit =
     if (gens.nonEmpty || locks.nonEmpty || floors.nonEmpty) {
-      val lockDir = new org.apache.hadoop.fs.Path(s"$toDelta/$DeltaLockDir")
+      val lockDir = new Path(s"$toDelta/$DeltaLockDir")
       fs.mkdirs(lockDir)
       // floor markers ride over too (monotone lower bound — a lower
       // carried floor beside a higher live one is harmless, the claim
       // takes the max); a lost floor is the post-swap-crash hazard
       floors.foreach { n =>
-        val dst = new org.apache.hadoop.fs.Path(lockDir, s"floor-$n")
+        val dst = new Path(lockDir, s"floor-$n")
         if (!fs.exists(dst))
-          require(fs.rename(new org.apache.hadoop.fs.Path(
+          require(fs.rename(new Path(
               s"$fromDelta/$DeltaLockDir/floor-$n"), dst),
             s"compact: could not carry floor marker floor-$n from " +
               s"$fromDelta into $toDelta — parked tree left intact")
@@ -1955,69 +1600,51 @@ object TrainedState {
       // turn the delete into permanent data loss — the exact hazard
       // the carryover exists to prevent
       gens.foreach { n =>
-        val dst = new org.apache.hadoop.fs.Path(s"$toDelta/gen-$n")
+        val dst = new Path(s"$toDelta/gen-$n")
         if (!fs.exists(dst))
-          require(fs.rename(
-              new org.apache.hadoop.fs.Path(s"$fromDelta/gen-$n"), dst),
+          require(fs.rename(new Path(s"$fromDelta/gen-$n"), dst),
             s"compact: could not carry generation $n from $fromDelta " +
               s"into $toDelta — parked tree left intact")
       }
       locks.foreach { n =>
-        val dst = new org.apache.hadoop.fs.Path(lockDir, s"gen-$n")
+        val dst = new Path(lockDir, s"gen-$n")
         if (!fs.exists(dst))
-          require(fs.rename(new org.apache.hadoop.fs.Path(
-              s"$fromDelta/$DeltaLockDir/gen-$n"), dst),
+          require(fs.rename(new Path(s"$fromDelta/$DeltaLockDir/gen-$n"), dst),
             s"compact: could not carry lock marker gen-$n from " +
               s"$fromDelta into $toDelta — parked tree left intact")
       }
     }
 
   /** Crash-safe compaction shared by every delta-capable artifact:
-    * write the reconciled index ASIDE to a sibling temp path first
-    * (the read of base + deltas completes before any byte of the
-    * original moves), verify the committer's `_SUCCESS`, then swap via
-    * two directory renames with the old tree parked at a trash path
-    * until the new one is live. At no point is the only copy of the
-    * index in executor memory or a half-deleted directory: a crash
-    * before the swap leaves base + deltas untouched (plus a stale temp
-    * this routine clears on the next run); a crash mid-swap leaves the
-    * COMPLETE new tree at the temp or live path and the complete old
+    * write the reconciled index ASIDE to a sibling temp path, verify
+    * its `_SUCCESS`, then swap via two renames with the old tree parked
+    * at a trash path until the new one is live. A crash before the swap
+    * leaves base + deltas untouched; a crash mid-swap leaves the
+    * complete new tree at the temp or live path and the complete old
     * tree at the trash path.
     *
-    * CONCURRENT APPENDS are preserved, not destroyed: a generation
-    * committed after the compaction's snapshot (so possibly absent
-    * from the rewrite) is CARRIED OVER from the parked tree into the
-    * new live `_delta` — together with every lock marker — before the
-    * trash drops. Carrying a generation the rewrite DID fold in is
-    * harmless: newest-wins reconcile over rows the base already holds
-    * is idempotent. So an acknowledged append survives any
-    * interleaving with a compaction; at worst it reconciles once more
-    * until the next compaction. */
+    * CONCURRENT APPENDS survive: a generation committed after the
+    * snapshot is CARRIED OVER from the parked tree into the new live
+    * `_delta`, with every unspent lock marker, before the trash drops
+    * (re-carrying a folded generation is idempotent under newest-wins). */
   private def compactSwap(spark: SparkSession, path: String,
                           reconciled: => DataFrame,
                           write: (DataFrame, String) => Unit): Unit = {
     val fs = fsOf(spark, path)
-    val live = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.compact-tmp")
-    val trash = new org.apache.hadoop.fs.Path(s"$path.compact-trash")
+    val live = new Path(path)
+    val tmp = new Path(s"$path.compact-tmp")
+    val trash = new Path(s"$path.compact-trash")
     val deltaPath = s"$path/$DeltaDir"
     require(fs.exists(live),
       s"compact: no artifact at $path" + (if (fs.exists(trash))
         s" — a prior compaction crashed mid-swap; the pre-compaction " +
           s"tree is intact at $trash (rename it back to recover)" else ""))
-    // stale leftovers from a prior crash: the temp is pre-swap work
-    // (base still live — safe to discard). A trash alongside a live
-    // path is a superseded old tree (swap completed) — but a crash
-    // AFTER the swap and BEFORE the late-generation carryover strands
-    // acknowledged generations (committed during that rewrite) under
-    // the parked tree, and a bare delete would destroy them
-    // permanently. So: carry over every gen directory (and lock
-    // marker) the live `_delta` does not already hold, THEN delete.
-    // Re-carrying a generation the crashed compaction DID fold is
-    // idempotent under newest-wins (and this compaction re-folds it
-    // anyway); a re-carried spent lock merely overcounts
-    // [[deltaGenerations]] toward an earlier next compaction — both
-    // errors are in the safe direction.
+    // stale leftovers from a prior crash: the temp is pre-swap work,
+    // safe to discard. A trash beside a live path is a superseded tree,
+    // but a crash after the swap and before the carryover strands
+    // acknowledged generations in it: carry over every gen directory
+    // and marker the live `_delta` lacks, THEN delete (re-carrying is
+    // idempotent; a spent lock only overcounts, the safe direction).
     fs.delete(tmp, true)
     if (fs.exists(trash)) {
       val staleDelta = s"${trash.toString}/$DeltaDir"
@@ -2036,26 +1663,19 @@ object TrainedState {
     val gens0 = genDirNumbers(fs, deltaPath).toSet
     write(reconciled, tmp.toString)
     compactTestHook.foreach(_.apply())
-    require(fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")),
+    require(fs.exists(new Path(tmp, "_SUCCESS")),
       s"compact: rewrite at $tmp did not commit (_SUCCESS missing) — " +
         s"original index at $path is untouched")
-    // PRE-SEED the claim floor inside the tmp tree BEFORE the swap: the
-    // highest number this compaction folds (or any writer has claimed,
-    // or a prior floor recorded) becomes a `floor-F` marker in the NEW
-    // tree's lock dir. So even a crash after the swap but before the
-    // late-generation carryover leaves a live tree whose next claim
-    // starts above every folded/claimed number — generation numbering
-    // never restarts, and the stranded-trash recovery's re-carried
-    // stale gens (with their old, lower `_seq`) can never outrank a
-    // post-crash acknowledged append under newest-wins reconcile.
+    // PRE-SEED the claim floor in the tmp tree BEFORE the swap: the
+    // highest folded/claimed/floor number becomes `floor-F`, so even a
+    // crash before the carryover leaves a tree whose next claim starts
+    // above every old number ([[floorNumbers]]).
     val floorF = (gens0.toSeq ++ lockNumbers(fs, deltaPath) ++
       floorNumbers(fs, deltaPath)).foldLeft(0L)(math.max)
     if (floorF > 0L) {
-      val tmpLockDir = new org.apache.hadoop.fs.Path(
-        s"${tmp.toString}/$DeltaDir/$DeltaLockDir")
+      val tmpLockDir = new Path(s"${tmp.toString}/$DeltaDir/$DeltaLockDir")
       fs.mkdirs(tmpLockDir)
-      fs.createNewFile(
-        new org.apache.hadoop.fs.Path(tmpLockDir, s"floor-$floorF"))
+      fs.createNewFile(new Path(tmpLockDir, s"floor-$floorF"))
     }
     require(fs.rename(live, trash),
       s"compact: could not park $path at $trash — original untouched")
@@ -2082,125 +1702,6 @@ object TrainedState {
     carryOver(fs, trashDelta, deltaPath, late, keepLocks)
     fs.delete(trash, true)
     ()
-  }
-
-  /** APPEND an insert's changed slice ([[Hnsw.insertWithDelta]]'s
-    * second output — touched sources' re-pruned out-lists + the new
-    * nodes' forward edges) as a DELTA GENERATION under the saved
-    * layered index, leaving every untouched base file in place: the
-    * production fold-in write path, whose cost scales with the BATCH
-    * while a full [[saveHnswIndex]] rewrite scales with the index.
-    * Generations are monotonically numbered; [[loadHnswIndex]] serves
-    * the highest generation per (layer, source), so repeated fold-ins
-    * that re-touch a source converge to the newest out-list —
-    * loading a delta-appended index equals loading a full rewrite,
-    * bit for bit (spec-pinned). Each generation lands in its OWN
-    * directory (`_delta/gen-N/`, one sorted batch-bounded file with
-    * `layer` kept as a data column — only the corpus-sized BASE needs
-    * the layer-directory pruning layout; see
-    * [[appendDeltaGeneration]]'s concurrency rationale). An EMPTY
-    * changed slice (a fully-passthrough fold-in batch) writes nothing.
-    * Generation numbers are claimed atomically (lock-marker files) and
-    * writers never share a staging directory, so concurrent fold-ins
-    * can neither collide on `_seq` nor clobber each other's commits.
-    * Compact with [[compactHnswIndex]] when generations accumulate
-    * ([[deltaGenerations]] is the policy input). */
-  def appendHnswDelta(delta: DataFrame, path: String): Unit =
-    appendDeltaGeneration(delta, path, hnswIndexSchema)
-
-  /** Fold accumulated delta generations back into the base: rewrite
-    * the reconciled index in the [[saveHnswIndex]] layout and drop the
-    * delta directory. Maintenance op — materializes the reconciled
-    * table once (corpus-sized, like the original save), CRASH-SAFELY:
-    * the rewrite lands at a sibling temp path and swaps in only after
-    * its commit marker verifies, so no failure mode loses both the
-    * base and the deltas ([[compactSwap]]'s contract). */
-  def compactHnswIndex(spark: SparkSession, path: String,
-                       targetRowsPerFile: Long =
-                         DefaultTargetRowsPerFile): Unit = {
-    // data-sized rewrite — the compactGraphIndex density contract,
-    // applied across layers (layer 0 holds ~all rows, so its share of
-    // the range partitions scales the same way)
-    val files = filesForRows(approxRows(spark, path), targetRowsPerFile)
-    compactSwap(spark, path, loadHnswIndex(spark, path),
-      (df, p) => saveHnswIndex(df, p, numFiles = files))
-  }
-
-  val pqCodesSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType, nullable = false),
-    StructField("sub", IntegerType, nullable = false),
-    // nullable: a NULL code row is a TOMBSTONE ([[forgetPqCodesDelta]])
-    StructField("code", IntegerType, nullable = true)))
-
-  /** Persist a FLAT PQ codes table ([[ProductQuantizer.encode]] output —
-    * no coarse cell, unlike [[saveIvfPqIndex]]): the cold-storage half
-    * of the DiskANN deployment shape ([[GraphAnn.searchGraphPq]] — graph
-    * adjacency + codes stay hot, float vectors stay cold). CORPUS-sized:
-    * range-partition + sort by `vec_id` so every file carries tight
-    * min/max stats and the hop scorer's candidate-id `isin` prunes at
-    * the row-group level, the [[saveGraphIndex]] layout. */
-  def savePqCodes(codes: DataFrame, path: String,
-                  numFiles: Int = 0): Unit = {
-    val f = org.apache.spark.sql.functions
-    val cols = pqCodesSchema.fields.map(x =>
-      f.col(x.name).cast(x.dataType).as(x.name))
-    val projected = codes.select(cols.toIndexedSeq: _*)
-    // numFiles: the saveGraphIndex file-count scaling knob — the hop
-    // scorer's candidate isin prunes this table the same way
-    (if (numFiles > 0)
-       projected.repartitionByRange(numFiles, f.col("vec_id"))
-     else projected.repartitionByRange(f.col("vec_id")))
-      .sortWithinPartitions("vec_id", "sub")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a persisted flat PQ codes table; fails fast on schema drift.
-    * Delta-aware like [[loadHnswIndex]]: [[appendPqCodesDelta]]
-    * generations reconcile newest-wins per `vec_id` (a re-encoded
-    * vector's full `numSub`-row code set replaces its base rows), and
-    * a NULL-code row is a TOMBSTONE ([[forgetPqCodesDelta]]) — it
-    * supersedes the id's whole code set (the reconcile key is
-    * `vec_id`, not `(vec_id, sub)`) and then drops, so the graph-PQ
-    * hop scorer cannot score a deleted id from cold codes. */
-  def loadPqCodes(spark: SparkSession, path: String): DataFrame =
-    reconcileDeltas(load(spark, pqCodesSchema, path), spark, path,
-      pqCodesSchema, Seq("vec_id"))
-      .filter(org.apache.spark.sql.functions.col("code").isNotNull)
-
-  /** FORGET ids from a persisted flat PQ codes table as a TOMBSTONE
-    * delta generation — ONE `(vec_id, 0, NULL)` row per id suffices:
-    * newest-wins reconciles per `vec_id`, so the single tombstone row
-    * outranks the id's entire `numSub`-row code set, and the load
-    * drops it. O(deletions) to write, ordered (a later
-    * [[appendPqCodesDelta]] re-encode supersedes), folded away
-    * physically by the next [[compactPqCodes]]. */
-  def forgetPqCodesDelta(deleteIds: DataFrame, path: String): Unit = {
-    val f = org.apache.spark.sql.functions
-    appendDeltaGeneration(
-      deleteIds.select(f.col("vec_id").cast("long").as("vec_id"),
-        f.lit(0).as("sub"), f.lit(null).cast("int").as("code")),
-      path, pqCodesSchema)
-  }
-
-  /** APPEND a fold-in batch's code rows (new vectors' codes, or
-    * re-encoded vectors' full replacement code sets) as a DELTA
-    * GENERATION under a saved flat codes table — write cost scales
-    * with the BATCH while a full [[savePqCodes]] rewrite scales with
-    * the corpus, completing the DiskANN serving artifact's lifecycle
-    * parity with the layered index ([[appendHnswDelta]]). Empty
-    * batches write nothing; generations are claimed atomically. */
-  def appendPqCodesDelta(delta: DataFrame, path: String): Unit =
-    appendDeltaGeneration(delta, path, pqCodesSchema)
-
-  /** Fold accumulated [[appendPqCodesDelta]] generations back into the
-    * base — crash-safe ([[compactSwap]]'s contract). */
-  def compactPqCodes(spark: SparkSession, path: String,
-                     targetRowsPerFile: Long =
-                       DefaultTargetRowsPerFile): Unit = {
-    // data-sized rewrite — the compactGraphIndex density contract
-    val files = filesForRows(approxRows(spark, path), targetRowsPerFile)
-    compactSwap(spark, path, loadPqCodes(spark, path),
-      (df, p) => savePqCodes(df, p, numFiles = files))
   }
 
   val rotationSchema: StructType = StructType(Seq(
@@ -2294,118 +1795,57 @@ object TrainedState {
       load(spark, backoffUniSchema, s"$path/uni"),
       load(spark, backoffTotalSchema, s"$path/total"))
 
-  val postingsSchema: StructType = StructType(Seq(
-    StructField("term", StringType, nullable = false),
-    StructField("doc_id", LongType, nullable = false),
-    StructField("tf", LongType, nullable = false)))
-  val retrievalTermsSchema: StructType = StructType(Seq(
-    StructField("term", StringType, nullable = false),
-    StructField("df", LongType, nullable = false)))
-  val docLensSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    // nullable: a NULL dl row is a TOMBSTONE ([[forgetRetrievalDocs]])
-    StructField("dl", LongType, nullable = true)))
-  val retrievalStatsSchema: StructType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("avgdl", DoubleType, nullable = false)))
-
   /** Persist a [[graft.text.Retrieval.buildIndex]] artifact set under
-    * one root. postings and terms are range-partitioned and SORTED by
-    * `term`, docLens by `doc_id` — every file carries tight min/max
-    * stats on its key, so the serve's localized query-term `isin`
-    * ([[graft.text.Retrieval.topK]]) and the fold-in/forget id probes
-    * read only the row groups their keys can touch (the saveGraphIndex
-    * file-statistics discipline; partitionBy(term) would mint one
-    * directory per vocabulary entry, the small-files failure mode).
-    * `numFiles` knobs scale files ∝ rows (0 = session default). */
+    * one root: postings and terms range-sorted by `term`, docLens by
+    * `doc_id` (the serve's localized query-term `isin` and the
+    * fold-in/forget id probes read only the row groups their keys can
+    * touch; partitionBy(term) would mint one directory per vocabulary
+    * entry). `numFiles` knobs scale files ∝ rows (0 = session default);
+    * stats is one row. */
   def saveRetrievalIndex(postings: DataFrame, terms: DataFrame,
                          docLens: DataFrame, stats: DataFrame,
                          path: String, postingsFiles: Int = 0,
                          termsFiles: Int = 0, docLensFiles: Int = 0)
       : Unit = {
-    val f = org.apache.spark.sql.functions
-    def sorted(df: DataFrame, schema: StructType, keys: Seq[String],
-               numFiles: Int, p: String): Unit = {
-      val cols = schema.fields.map(x =>
-        f.col(x.name).cast(x.dataType).as(x.name))
-      val projected = df.select(cols.toIndexedSeq: _*)
-      val keyCols = keys.map(f.col)
-      (if (numFiles > 0)
-         projected.repartitionByRange(numFiles, keyCols: _*)
-       else projected.repartitionByRange(keyCols: _*))
-        .sortWithinPartitions(keys.head, keys.tail: _*)
-        .write.mode("overwrite").parquet(p)
-    }
-    sorted(postings, postingsSchema, Seq("term", "doc_id"),
-      postingsFiles, s"$path/postings")
-    sorted(terms, retrievalTermsSchema, Seq("term"),
-      termsFiles, s"$path/terms")
-    sorted(docLens, docLensSchema, Seq("doc_id"),
-      docLensFiles, s"$path/doclens")
+    saveKind(postingsKind, postings, postingsKind.at(path), postingsFiles)
+    saveKind(termsKind, terms, termsKind.at(path), termsFiles)
+    saveKind(docLensKind, docLens, docLensKind.at(path), docLensFiles)
     save(stats, retrievalStatsSchema, s"$path/stats")
   }
 
-  /** Load a retrieval index for [[graft.text.Retrieval.topK]].
-    * Delta-aware per sub-artifact: [[foldInRetrieval]] generations
-    * reconcile newest-wins — postings per `(term, doc_id)`, terms per
-    * `term` (a fold-in's accumulated df row supersedes the base row),
-    * docLens per `doc_id` with NULL-dl TOMBSTONES
-    * ([[forgetRetrievalDocs]]) dropped after winning, which is the
-    * serve-side deletion: [[graft.text.Retrieval.topK]] inner-joins
-    * docLens, so a tombstoned doc leaves the results immediately.
-    * stats is overwrite-per-fold (1 row, no delta machinery). */
+  /** Load a retrieval index for [[graft.text.Retrieval.topK]]: postings
+    * newest-wins per `(term, doc_id)`, terms per `term`, docLens per
+    * `doc_id` with tombstoned docs dropped — the serve-side deletion
+    * (topK inner-joins docLens). stats is overwrite-per-fold. */
   def loadRetrievalIndex(spark: SparkSession, path: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val f = org.apache.spark.sql.functions
-    (reconcileDeltas(load(spark, postingsSchema, s"$path/postings"),
-        spark, s"$path/postings", postingsSchema, Seq("term", "doc_id")),
-      reconcileDeltas(load(spark, retrievalTermsSchema, s"$path/terms"),
-        spark, s"$path/terms", retrievalTermsSchema, Seq("term")),
-      reconcileDeltas(load(spark, docLensSchema, s"$path/doclens"),
-          spark, s"$path/doclens", docLensSchema, Seq("doc_id"))
-        .filter(f.col("dl").isNotNull),
+      : (DataFrame, DataFrame, DataFrame, DataFrame) =
+    (loadKind(postingsKind, spark, postingsKind.at(path)),
+      loadKind(termsKind, spark, termsKind.at(path)),
+      loadKind(docLensKind, spark, docLensKind.at(path)),
       load(spark, retrievalStatsSchema, s"$path/stats"))
-  }
 
-  /** [[loadRetrievalIndex]] behind the fingerprint cache (one cache
-    * entry per sub-artifact) — the serving loop's per-trigger load. */
+  /** [[loadRetrievalIndex]] behind the fingerprint cache, one entry per
+    * sub-artifact. */
   def loadRetrievalIndexCached(spark: SparkSession, path: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val f = org.apache.spark.sql.functions
-    (cachedLoad(spark, s"$path/postings")(
-        reconcileDeltas(load(spark, postingsSchema, s"$path/postings"),
-          spark, s"$path/postings", postingsSchema, Seq("term", "doc_id"))),
-      cachedLoad(spark, s"$path/terms")(
-        reconcileDeltas(load(spark, retrievalTermsSchema, s"$path/terms"),
-          spark, s"$path/terms", retrievalTermsSchema, Seq("term"))),
-      cachedLoad(spark, s"$path/doclens")(
-        reconcileDeltas(load(spark, docLensSchema, s"$path/doclens"),
-            spark, s"$path/doclens", docLensSchema, Seq("doc_id"))
-          .filter(f.col("dl").isNotNull)),
+      : (DataFrame, DataFrame, DataFrame, DataFrame) =
+    (cachedKind(postingsKind, spark, postingsKind.at(path)),
+      cachedKind(termsKind, spark, termsKind.at(path)),
+      cachedKind(docLensKind, spark, docLensKind.at(path)),
       cachedLoad(spark, s"$path/stats")(
         load(spark, retrievalStatsSchema, s"$path/stats")))
-  }
 
-  /** FOLD a batch of NEW documents into a persisted retrieval index —
-    * the online half of the BM25 lifecycle, O(batch + touched terms)
-    * where a [[saveRetrievalIndex]] rebuild scans the corpus. Inputs
-    * are [[graft.text.Retrieval.buildIndex]] over JUST the batch.
-    * Mechanics: batch postings and docLens rows append as delta
-    * generations (new docs ⇒ new keys — the caller guards
-    * redelivery); the batch's term dfs ACCUMULATE onto the current
-    * reconciled dfs for the touched vocabulary slice (read id-pruned
-    * via a bounded `isin` against the term-sorted artifact) and append
-    * as a newest-wins replacement generation; the 1-row stats artifact
-    * rewrites with the exact merged (n, avgdl). Addition is EXACT —
-    * the folded index serves bit-identically to a full rebuild over
-    * base ∪ batch (spec-pinned). NOT atomic across the four
-    * sub-artifacts: the write order (postings → terms → stats →
-    * docLens) puts the redelivery-guard column LAST, and a crash
-    * mid-fold is repaired by [[consolidateRetrievalIndex]], which
-    * recomputes terms and stats from the postings ground truth. */
+  /** FOLD a batch of NEW documents ([[graft.text.Retrieval.buildIndex]]
+    * over JUST the batch) into a persisted retrieval index,
+    * O(batch + touched terms): postings and docLens rows append as
+    * generations (the caller guards redelivery); the batch's term dfs
+    * ACCUMULATE onto the touched vocabulary slice's current dfs (read
+    * through a bounded `isin`) and append as replacement rows; stats
+    * rewrites with the exact merged (n, avgdl). The folded index serves
+    * bit-identically to a rebuild over base ∪ batch. NOT atomic across
+    * sub-artifacts: the redelivery-guard docLens lands LAST, and
+    * [[consolidateRetrievalIndex]] repairs a crash mid-fold. */
   def foldInRetrieval(spark: SparkSession, batchPostings: DataFrame,
                       batchDocLens: DataFrame, path: String): Unit = {
-    val f = org.apache.spark.sql.functions
     val lens = batchDocLens
       .select(f.col("doc_id").cast("long").as("doc_id"),
         f.col("dl").cast("long").as("dl"))
@@ -2421,11 +1861,7 @@ object TrainedState {
     // appendDeltaGeneration materializes the projected slice; reuse
     // its blocks for the vocabulary aggregation below instead of
     // paying a caller-side checkpoint of the same lineage
-    val posts = appendDeltaGeneration(
-      batchPostings.select(f.col("term"),
-        f.col("doc_id").cast("long").as("doc_id"),
-        f.col("tf").cast("long").as("tf")),
-      s"$path/postings", postingsSchema)
+    val posts = appendKind(postingsKind, batchPostings, postingsKind.at(path))
     // touched vocabulary slice: batch-bounded by construction, and the
     // >4096-term branch pulls it driver-side ANYWAY (that path
     // broadcasts it), so ONE collect replaces the old
@@ -2448,9 +1884,7 @@ object TrainedState {
         StructField("_bdf", LongType))))
     // only the terms reconcile + the 1-row stats — constructing the
     // full 4-tuple would pay the postings/docLens delta reads too
-    val curTerms = reconcileDeltas(
-      load(spark, retrievalTermsSchema, s"$path/terms"), spark,
-      s"$path/terms", retrievalTermsSchema, Seq("term"))
+    val curTerms = loadKind(termsKind, spark, termsKind.at(path))
     val curStats = load(spark, retrievalStatsSchema, s"$path/stats")
     val current =
       if (brows.length <= (1 << 12))
@@ -2461,7 +1895,7 @@ object TrainedState {
     val merged = batchLocal.join(current, Seq("term"), "left")
       .select(f.col("term"),
         (f.coalesce(f.col("df"), f.lit(0L)) + f.col("_bdf")).as("df"))
-    appendDeltaGeneration(merged, s"$path/terms", retrievalTermsSchema)
+    appendKind(termsKind, merged, termsKind.at(path))
     // exact stats merge: totals, not averages of averages
     val st = curStats.head()
     val (n0, avg0) = (st.getLong(0), st.getDouble(1))
@@ -2471,31 +1905,18 @@ object TrainedState {
     save(Seq((n1, avg1)).toDF("n", "avgdl"), retrievalStatsSchema,
       s"$path/stats")
     // the guard column lands last (see scaladoc)
-    appendDeltaGeneration(lens, s"$path/doclens", docLensSchema)
+    appendKind(docLensKind, lens, docLensKind.at(path))
   }
 
-  /** FORGET docs from a persisted retrieval index — the LAZY-DELETE
-    * half: one O(deletions) tombstone generation on docLens, which is
-    * the membership side of serving ([[graft.text.Retrieval.topK]]
-    * inner-joins it, so the docs leave the results IMMEDIATELY). The
-    * honest trade, same shape as the graph family's dangling edges:
-    * postings still carry the docs' rows and df/n/avgdl stay at their
-    * pre-delete values, so surviving docs' SCORES drift by the deleted
-    * fraction until [[consolidateRetrievalIndex]] recomputes them —
-    * membership is never wrong, magnitudes decay. A deleted doc is
-    * re-ingestable ([[foldInRetrieval]]'s guard reads the
-    * tombstone-aware load); its postings rows then supersede the stale
-    * ones per `(term, doc_id)` newest-wins, while its term dfs
-    * re-accumulate on top of the stale counts — one more bounded
-    * drift term in the same lazy regime, converging at the next
-    * [[consolidateRetrievalIndex]] recount. */
-  def forgetRetrievalDocs(deleteDocIds: DataFrame, path: String): Unit = {
-    val f = org.apache.spark.sql.functions
-    appendDeltaGeneration(
-      deleteDocIds.select(f.col("doc_id").cast("long").as("doc_id"),
-        f.lit(null).cast("long").as("dl")),
-      s"$path/doclens", docLensSchema)
-  }
+  /** FORGET docs from a persisted retrieval index — the LAZY delete:
+    * one tombstone generation on docLens, the membership side of
+    * serving, so the docs leave the results IMMEDIATELY. Postings and
+    * df/n/avgdl keep their pre-delete values, so surviving docs' SCORES
+    * drift by the deleted fraction (and a re-ingested doc's dfs
+    * re-accumulate on the stale counts) until
+    * [[consolidateRetrievalIndex]] recounts them. */
+  def forgetRetrievalDocs(deleteDocIds: DataFrame, path: String): Unit =
+    forgetKind(docLensKind, deleteDocIds, docLensKind.at(path))
 
   /** CONSOLIDATE a lazily-deleted retrieval index: drop the deleted
     * docs' postings rows (the docs absent from the live docLens),
@@ -2509,106 +1930,67 @@ object TrainedState {
   def consolidateRetrievalIndex(spark: SparkSession, path: String,
                                 targetRowsPerFile: Long =
                                   DefaultTargetRowsPerFile): Unit = {
-    val f = org.apache.spark.sql.functions
+    val (postings, terms, docLens) = (postingsKind.at(path),
+      termsKind.at(path), docLensKind.at(path))
     // 1. docLens: fold tombstones out of the bytes
-    val lensLive = reconcileDeltas(
-        load(spark, docLensSchema, s"$path/doclens"), spark,
-        s"$path/doclens", docLensSchema, Seq("doc_id"))
-      .filter(f.col("dl").isNotNull)
-    compactSwap(spark, s"$path/doclens", lensLive, (df, p) => {
-      val files = filesForRows(approxRows(spark, s"$path/doclens"),
-        targetRowsPerFile)
-      df.select(f.col("doc_id").cast("long").as("doc_id"),
-          f.col("dl").cast("long").as("dl"))
-        .repartitionByRange(math.max(1, files), f.col("doc_id"))
-        .sortWithinPartitions("doc_id").write.mode("overwrite").parquet(p)
-    })
+    compactKind(docLensKind, spark, docLens, targetRowsPerFile)
     // 2. postings: reconciled rows ∩ post-compaction live doc set
-    val postsLive = reconcileDeltas(
-        load(spark, postingsSchema, s"$path/postings"), spark,
-        s"$path/postings", postingsSchema, Seq("term", "doc_id"))
-      .join(load(spark, docLensSchema, s"$path/doclens")
-        .select(f.col("doc_id")), Seq("doc_id"), "left_semi")
-      .select(f.col("term"), f.col("doc_id"), f.col("tf"))
-    compactSwap(spark, s"$path/postings", postsLive, (df, p) => {
-      val files = filesForRows(approxRows(spark, s"$path/postings"),
-        targetRowsPerFile)
-      df.repartitionByRange(math.max(1, files), f.col("term"),
-          f.col("doc_id"))
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").parquet(p)
-    })
+    rewrite(postingsKind, spark, postings,
+      loadKind(postingsKind, spark, postings).join(
+        load(spark, docLensSchema, docLens).select(f.col("doc_id")),
+        Seq("doc_id"), "left_semi"), targetRowsPerFile)
     // 3. terms: exact recount from the surviving postings
-    val termsLive = load(spark, postingsSchema, s"$path/postings")
-      .groupBy(f.col("term")).agg(f.count(f.lit(1)).as("df"))
-    compactSwap(spark, s"$path/terms", termsLive, (df, p) => {
-      val files = filesForRows(approxRows(spark, s"$path/terms"),
-        targetRowsPerFile)
-      df.select(f.col("term"), f.col("df").cast("long").as("df"))
-        .repartitionByRange(math.max(1, files), f.col("term"))
-        .sortWithinPartitions("term").write.mode("overwrite").parquet(p)
-    })
+    rewrite(termsKind, spark, terms,
+      load(spark, postingsSchema, postings).groupBy(f.col("term"))
+        .agg(f.count(f.lit(1)).as("df")), targetRowsPerFile)
     // 4. stats: exact recount from the surviving docLens
-    val statsLive = load(spark, docLensSchema, s"$path/doclens")
+    save(load(spark, docLensSchema, docLens)
       .agg(f.count(f.lit(1)).cast("long").as("n"),
-        f.avg(f.col("dl")).as("avgdl"))
-    save(statsLive, retrievalStatsSchema, s"$path/stats")
+        f.avg(f.col("dl")).as("avgdl")), retrievalStatsSchema, s"$path/stats")
   }
 
   /** Fold a sub-artifact's pending generations without the doc-drop
-    * recount — the policy compactor ([[compactIfNeeded]]) for the
-    * retrieval root's delta-bearing pieces. */
-  def compactRetrievalDocLens(spark: SparkSession, path: String): Unit = {
-    val f = org.apache.spark.sql.functions
-    val live = reconcileDeltas(load(spark, docLensSchema, path), spark,
-      path, docLensSchema, Seq("doc_id"))
-    compactSwap(spark, path, live, (df, p) =>
-      df.repartitionByRange(f.col("doc_id"))
-        .sortWithinPartitions("doc_id").write.mode("overwrite").parquet(p))
-  }
+    * recount — the policy compactor ([[compactorFor]]) for the
+    * retrieval root's delta-bearing pieces; data-sized like every
+    * other kind. */
+  def compactRetrievalDocLens(spark: SparkSession, path: String): Unit =
+    compactKind(docLensKind, spark, path)
 
   /** [[compactRetrievalDocLens]] for the postings sub-artifact. */
-  def compactRetrievalPostings(spark: SparkSession, path: String): Unit = {
-    val f = org.apache.spark.sql.functions
-    val live = reconcileDeltas(load(spark, postingsSchema, path), spark,
-      path, postingsSchema, Seq("term", "doc_id"))
-    compactSwap(spark, path, live, (df, p) =>
-      df.repartitionByRange(f.col("term"), f.col("doc_id"))
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").parquet(p))
-  }
+  def compactRetrievalPostings(spark: SparkSession, path: String): Unit =
+    compactKind(postingsKind, spark, path)
 
   /** [[compactRetrievalDocLens]] for the terms sub-artifact. */
-  def compactRetrievalTerms(spark: SparkSession, path: String): Unit = {
-    val f = org.apache.spark.sql.functions
-    val live = reconcileDeltas(load(spark, retrievalTermsSchema, path),
-      spark, path, retrievalTermsSchema, Seq("term"))
-    compactSwap(spark, path, live, (df, p) =>
-      df.repartitionByRange(f.col("term"))
-        .sortWithinPartitions("term").write.mode("overwrite").parquet(p))
-  }
+  def compactRetrievalTerms(spark: SparkSession, path: String): Unit =
+    compactKind(termsKind, spark, path)
 
   private def save(df: DataFrame, schema: StructType, path: String,
                    singleFile: Boolean = true): Unit = {
-    val cols = schema.fields.map(f =>
-      org.apache.spark.sql.functions.col(f.name).cast(f.dataType).as(f.name))
-    val projected = df.select(cols.toIndexedSeq: _*)
+    val projected = df.select(schema.fields.map(x =>
+      f.col(x.name).cast(x.dataType).as(x.name)).toIndexedSeq: _*)
     // k-row artifacts coalesce to one copyable file; vocabulary-sized
     // ones (singleFile = false) keep their partitioning
     (if (singleFile) projected.repartition(1) else projected)
       .write.mode("overwrite").parquet(path)
   }
 
+  /** Read `path` as `schema`, failing fast at the driver on drift: every
+    * column must be present with its declared type, except `inferred`
+    * partition columns (type inferred from directory names), which only
+    * need to be present and are cast. */
   private[similarity] def load(spark: SparkSession, schema: StructType,
-                   path: String): DataFrame = {
+                   path: String, noun: String = "trained-state",
+                   inferred: Set[String] = Set.empty): DataFrame = {
     val df = spark.read.parquet(path)
-    val got = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    schema.fields.foreach { f =>
-      require(got.get(f.name).contains(f.dataType),
-        s"trained-state schema mismatch at $path: expected ${f.name}: " +
-          s"${f.dataType.sql}, found ${got.get(f.name).map(_.sql).getOrElse("<missing>")}")
+    val got = df.schema.fields.map(x => x.name -> x.dataType).toMap
+    schema.fields.foreach { x =>
+      require(got.get(x.name).exists(t =>
+          t == x.dataType || inferred.contains(x.name)),
+        s"trained-state schema mismatch at $path: expected ${x.name}: " +
+          s"${x.dataType.sql}, found ${got.get(x.name).map(_.sql)
+            .getOrElse("<missing>")} — not a $noun artifact")
     }
-    df.select(schema.fields.map(f =>
-      org.apache.spark.sql.functions.col(f.name)).toIndexedSeq: _*)
+    df.select(schema.fields.map(x =>
+      f.col(x.name).cast(x.dataType).as(x.name)).toIndexedSeq: _*)
   }
 }
