@@ -19,17 +19,19 @@ case object FailFast extends ParseMode
 /** The Green Button engine: ESPI Atom-XML feeds → one denormalized
   * TimeSeries DataFrame (SURVEY.md §1-§3) → CSV / Parquet / InfluxDB sinks.
   *
-  * Spark-first design, per file like the reference:
-  *   - one `map` over whole files does all shredding (S1-S8) into one
-  *     [[Schemas.ParsedFeed]] per file;
-  *   - one `flatMap` over those feeds does the reference's
-  *     denormalize_and_link (lib/personalgreenbutton/src/lib.rs:32-190) file
-  *     by file with hash lookups: the LocalTimeParameters check, the two-hop
-  *     link map, the enum decode and pow10 once per reading type, and the
-  *     per-year DST memo. A file's metadata never leaves its own task, so
-  *     nothing is joined, shuffled or broadcast, and the plan stays one
-  *     narrow stage whatever the number of files; the only per-task side
-  *     input is the fixed enum dictionary (a few hundred codes).
+  * Spark-first design, per file like the reference: the `espi` scan
+  * ([[graft.sources.EspiDataSource]]) parses each file inside a scan task
+  * and runs the reference's denormalize_and_link
+  * (lib/personalgreenbutton/src/lib.rs:32-190) on it with hash lookups
+  * ([[link]], [[denormalizeFeed]]): the LocalTimeParameters check, the
+  * two-hop link map, the enum decode and pow10 once per reading type, and
+  * the per-year DST memo. A file's metadata never leaves its own task, so
+  * nothing is joined, shuffled or broadcast, and the plan stays one narrow
+  * stage whatever the number of files; the only per-task side input is the
+  * fixed enum dictionary (a few hundred codes). The staging API
+  * ([[parse]], [[staging]], [[denormalize]], [[skippedFiles]]) runs the
+  * same two functions over a `Dataset[ParsedFeed]`, for callers that want
+  * the parsed feeds or the raw entry tables.
   */
 object GreenButton {
 
@@ -75,42 +77,39 @@ object GreenButton {
                      readings: DataFrame, readingTypes: DataFrame,
                      localTimeParams: DataFrame, errors: DataFrame)
 
-  /** `cache=true` persists the parsed feeds, so a caller that runs several
-    * actions over them (the CLI lists the skipped files, then converts)
-    * parses the XML once; the caller unpersists `feeds` when done.
-    * `cache=false` suits single-pass uses. */
-  def staging(parsed: Dataset[ParsedFeed], cache: Boolean = true): Staging = {
-    val src = if (cache) parsed.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else parsed
-    val ok = src.filter(col("error").isNull)
+  def staging(parsed: Dataset[ParsedFeed]): Staging = {
+    val ok = parsed.filter(col("error").isNull)
     def exploded(field: String): DataFrame =
       ok.select(col("file"), explode(col(field)).as("x")).select(col("file"), col("x.*"))
     Staging(
-      feeds = src,
+      feeds = parsed,
       entries = exploded("entries"),
       readings = exploded("readings"),
       readingTypes = exploded("readingTypes"),
       localTimeParams = exploded("localTimeParams"),
-      errors = src.filter(col("error").isNotNull).select(col("file"), col("error")))
+      errors = parsed.filter(col("error").isNotNull).select(col("file"), col("error")))
   }
 
   // ----------------------------------------------------------- denormalize
 
-  /** A file-level violation: the skip reason [[skippedFiles]] reports and
-    * the reference's error message, which FailFast raises. */
-  private final case class Fault(reason: String, message: String)
+  /** A file-level fault: the skip reason [[skippedFiles]] reports and the
+    * message FailFast raises. */
+  private[graft] final case class Fault(reason: String, message: String)
 
-  /** A feed's link map and its violations in the reference's order
-    * (lib.rs:42-83): exactly one LocalTimeParameters, then the two-hop link
-    * entry → meter-reading entry → reading-type entry for every entry with
-    * a meter link (the first bad entry by idx names the error), then a
-    * reading type for every entry that carries readings. `rtOf` maps an
-    * entry to the reading-type indexes its links reach, one per match
-    * (duplicate hrefs fan out like an equi-join); None is a missing hop. */
-  private final case class Linked(rtOf: Map[Int, Seq[Option[Int]]],
-                                  faults: Seq[Fault])
+  /** A feed's link map and its faults in the reference's order
+    * (lib.rs:42-83): a parse error alone, or exactly one
+    * LocalTimeParameters, then the two-hop link entry → meter-reading
+    * entry → reading-type entry for every entry with a meter link (the
+    * first bad entry by idx names the error), then a reading type for every
+    * entry that carries readings. `rtOf` maps an entry to the reading-type
+    * indexes its links reach, one per match (duplicate hrefs fan out like
+    * an equi-join); None is a missing hop. */
+  private[graft] final case class Linked(rtOf: Map[Int, Seq[Option[Int]]],
+                                         faults: Seq[Fault])
 
-  private def link(f: ParsedFeed): Linked = {
+  private[graft] def link(f: ParsedFeed): Linked = {
+    if (f.error != null)
+      return Linked(Map.empty, Seq(Fault(f.error, s"${f.file}: ${f.error}")))
     val faults = mutable.ArrayBuffer.empty[Fault]
     if (f.entries.nonEmpty) f.localTimeParams.size match {
       case 1 =>
@@ -148,26 +147,25 @@ object GreenButton {
     Linked(rtOf, faults.toSeq)
   }
 
-  /** One feed's denormalize_and_link: its TimeSeries rows, or none when the
-    * feed has a violation (Permissive) — FailFast throws the first
-    * violation's message instead. A feed that failed to parse has no
-    * entries, so it yields nothing here; [[skippedFiles]] reports it. */
-  private def denormalizeFeed(f: ParsedFeed, failFast: Boolean,
-                              rtCodes: Map[(String, Int), String],
-                              qualityCodes: Map[Int, String]): Iterator[TimeSeriesRow] = {
-    if (f.entries.isEmpty) return Iterator.empty
-    val linked = link(f)
+  /** One feed's denormalize_and_link given its [[link]]: its TimeSeries
+    * rows, or none when the feed has a fault (Permissive) — FailFast throws
+    * the first fault's message instead, a parse error included. */
+  private[graft] def denormalizeFeed(f: ParsedFeed, linked: Linked,
+                                     failFast: Boolean): Iterator[TimeSeriesRow] = {
     if (linked.faults.nonEmpty) {
       if (failFast)
         throw new EspiXml.EspiParseException(linked.faults.head.message)
       return Iterator.empty
     }
+    if (f.entries.isEmpty) return Iterator.empty
     val ltp = f.localTimeParams.head
     // F3: the enova patch keys off the FIRST entry's href (timeseries.rs:173-177)
     val enova = f.entries.head.href.contains("enova")
     val titles = f.entries.map(e => e.idx -> e.title).toMap
     // J5 + F1, once per reading type: the 8 enum decodes (gb_type_details.rs:
     // 8-31) and 10^powerOfTenMultiplier in f32 (lib.rs:86-108, 171-173)
+    val rtCodes = GbTypeDetails.readingTypeCodes
+    val qualityCodes = GbTypeDetails.qualityCodes
     def code(field: String, v: Int): String =
       rtCodes.getOrElse((field, v), GbTypeDetails.MissingAppInfo)
     val decoded = f.readingTypes.map { rt =>
@@ -203,50 +201,64 @@ object GreenButton {
     }
   }
 
-  /** The full denormalize_and_link, one task per file. Output: the 15
-    * TimeSeries columns plus `file` and `seq`. */
+  /** The full denormalize_and_link over staged feeds, file by file.
+    * Output: the 15 TimeSeries columns plus `file` and `seq`. */
   def denormalize(spark: SparkSession, st: Staging,
                   mode: ParseMode = FailFast): DataFrame = {
     val failFast = mode == FailFast
-    val rtCodes = GbTypeDetails.readingTypeCodes
-    val qualityCodes = GbTypeDetails.qualityCodes
-    st.feeds.flatMap(denormalizeFeed(_, failFast, rtCodes, qualityCodes))(
+    st.feeds.flatMap(f => denormalizeFeed(f, link(f), failFast))(
       Encoders.product[TimeSeriesRow]).toDF()
   }
 
-  /** Public diagnostics: (file, reason) for every input file the permissive
+  /** Public diagnostics: (file, reason) for every staged file the permissive
     * pipeline skips — parse failures plus denormalize violations, each
     * reason once per file. */
   def skippedFiles(spark: SparkSession, st: Staging): DataFrame = {
     import spark.implicits._
-    st.feeds.flatMap { f =>
-      if (f.error != null) Seq((f.file, f.error))
-      else link(f).faults.map(v => (f.file, v.reason))
-    }.toDF("file", "reason")
+    st.feeds.flatMap(f => link(f).faults.map(v => (f.file, v.reason)))
+      .toDF("file", "reason")
   }
+
+  /** The `espi` scan over path globs: `file`, `seq`, the 15 TimeSeries
+    * columns and `skip_reason`, set on the rows of skipped files
+    * ([[graft.sources.EspiDataSource]]). */
+  private[graft] def scan(spark: SparkSession, mode: ParseMode,
+                          paths: String*): DataFrame =
+    spark.read.format("espi").option("mode", modeOption(mode)).load(paths: _*)
+
+  /** The `espi` source's `mode` option for a [[ParseMode]]. */
+  private[graft] def modeOption(mode: ParseMode): String =
+    if (mode == FailFast) "failfast" else "permissive"
+
+  private val keyColumns = Seq("file", "seq", "skip_reason")
+
+  /** The scanned rows of the files kept, as the 15 TimeSeries columns. */
+  private[graft] def kept(scanned: DataFrame): DataFrame =
+    scanned.filter(col("skip_reason").isNull).drop(keyColumns: _*)
+
+  /** [[kept]] in the reference CLI's output order — file order then
+    * document order (cli-frontend/src/main.rs:30-38 never sorts; row order
+    * is ingestion order). */
+  private[graft] def keptInputOrdered(scanned: DataFrame): DataFrame =
+    scanned.filter(col("skip_reason").isNull)
+      .orderBy(col("file"), col("seq")).drop(keyColumns: _*)
 
   /** End-to-end: path glob → TimeSeries DataFrame (15 columns; file order is
     * not retained — the reference CLI doesn't sort either, use
     * [[TimeSeriesOps.sortSeries]] for the deterministic order). */
   def timeseries(spark: SparkSession, path: String,
-                 mode: ParseMode = Permissive): DataFrame = {
-    val parsed = parse(spark, path)
-    denormalize(spark, staging(parsed, cache = false), mode).drop("file", "seq")
-  }
+                 mode: ParseMode = Permissive): DataFrame =
+    kept(scan(spark, mode, path))
 
   /** Like [[timeseries]] but rows come back in the reference CLI's output
-    * order — file order then document order (cli-frontend/src/main.rs:30-38
-    * never sorts; row order is ingestion order). */
+    * order ([[keptInputOrdered]]). */
   def timeseriesInputOrdered(spark: SparkSession, path: String,
-                             mode: ParseMode = Permissive): DataFrame = {
-    val parsed = parse(spark, path)
-    denormalize(spark, staging(parsed, cache = false), mode)
-      .orderBy(col("file"), col("seq"))
-      .drop("file", "seq")
-  }
+                             mode: ParseMode = Permissive): DataFrame =
+    keptInputOrdered(scan(spark, mode, path))
 
+  /** Like [[timeseries]] over in-memory documents, through [[staging]]. */
   def timeseriesFromStrings(spark: SparkSession, docs: Seq[(String, String)],
                             mode: ParseMode = FailFast): DataFrame =
-    denormalize(spark, staging(parseStrings(spark, docs), cache = false), mode)
+    denormalize(spark, staging(parseStrings(spark, docs)), mode)
       .drop("file", "seq")
 }

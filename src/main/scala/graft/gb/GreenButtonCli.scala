@@ -1,6 +1,6 @@
 package graft.gb
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Batch conversion CLI — the Spark analog of the reference cli-frontend
@@ -45,24 +45,21 @@ object GreenButtonCli {
     }
     require(inputs.nonEmpty, "no input files")
     require(out.nonEmpty, "--out required")
+    val write: (DataFrame, String) => Unit = filetype match {
+      case "csv" => TimeSeriesOps.writeCsv(_, _)
+      case "parquet" => TimeSeriesOps.writeParquet
+      case "influxdb" => TimeSeriesOps.writeInflux(_, _)
+      case other => throw new IllegalArgumentException(s"Unknown filetype $other")
+    }
 
-    val st = GreenButton.staging(GreenButton.parse(spark, inputs.mkString(",")))
-    try {
-      // surface skipped files like the reference CLI (parse failures AND
-      // denormalize violations — both are file-level skips)
-      GreenButton.skippedFiles(spark, st).collect().foreach { r =>
+    val scanned = GreenButton.scan(spark, Permissive, inputs.toSeq: _*)
+    // surface skipped files like the reference CLI (parse failures AND
+    // denormalize violations — both are file-level skips)
+    scanned.filter(col("skip_reason").isNotNull)
+      .select("file", "skip_reason").collect().foreach { r =>
         System.err.println(s"Skipping ${r.getString(0)}: ${r.getString(1)}")
       }
-      val ts = GreenButton.denormalize(spark, st, Permissive)
-        .orderBy(col("file"), col("seq")).drop("file", "seq")
-
-      filetype match {
-        case "csv" => TimeSeriesOps.writeCsv(ts, out)
-        case "parquet" => TimeSeriesOps.writeParquet(ts, out)
-        case "influxdb" => TimeSeriesOps.writeInflux(ts, out)
-        case other => throw new IllegalArgumentException(s"Unknown filetype $other")
-      }
-    } finally st.feeds.unpersist()
+    write(GreenButton.keptInputOrdered(scanned), out)
     println(s"wrote $filetype to $out")
   }
 }

@@ -4,7 +4,8 @@ import java.util
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -13,21 +14,29 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.gb.{EspiXml, Schemas}
+import graft.gb.{EspiXml, GreenButton}
+import graft.gb.GreenButton.TimeSeriesRow
 
 /** DataSource V2 for ESPI Atom-XML feeds: `spark.read.format("espi")
-  * .load(pathGlob)` yields **one row per Atom entry** — the flattened
-  * entry-union of SURVEY.md §1.3 (envelope columns + nullable payload
-  * structs/arrays), the relational form of the reference's per-entity
-  * shredder (content.rs:14-74).
+  * .load(pathGlob, ...)` yields the denormalized TimeSeries table — one row
+  * per reading: `file`, `seq` (document order within the file), the 15
+  * TimeSeries columns and a null `skip_reason`. This is the one place the
+  * product paths (the CLI, `GreenButton.timeseries*`,
+  * `StreamingIngest.ingestXmlStream`) open an ESPI file.
   *
-  * Scale shape: one input partition per file (feeds are single-digit MB;
-  * parallelism = number of files), parsing runs inside the scan, and
-  * top-level column pruning is pushed into the reader (a projection that
-  * only needs the envelope never materializes readings arrays).
+  * Scale shape: files are packed into input partitions by size like Spark's
+  * own file splits (a file is never split; feeds are single-digit MB);
+  * parsing and denormalize_and_link run inside the scan's task
+  * (`GreenButton.link` / `denormalizeFeed`), so the plan is one narrow
+  * stage. `file` predicates prune whole files at planning time.
   *
-  * Options: `mode=permissive` (default: skip unparseable files) |
-  * `failfast`.
+  * Options:
+  *   - `mode=permissive` (default): a file that fails to parse or to link
+  *     gives one row per skip reason (`GreenButton.skippedFiles`' reasons)
+  *     with every column but `file` and `skip_reason` null, the permissive
+  *     `_corrupt_record` convention of Spark's CSV and JSON sources;
+  *   - `mode=failfast`: the first bad file raises its message;
+  *   - `maxFilesPerTrigger` bounds a streaming micro-batch.
   */
 class EspiDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "espi"
@@ -37,49 +46,23 @@ class EspiDataSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
-    new EspiTable(properties)
+    new EspiTable
 
   override def supportsExternalMetadata(): Boolean = false
 }
 
 object EspiDataSource {
-  val readingType: StructType = StructType(Seq(
-    StructField("cost", FloatType, nullable = false),
-    StructField("quality", IntegerType, nullable = false),
-    StructField("value", LongType, nullable = false),
-    StructField("tou", IntegerType, nullable = false),
-    StructField("start_unix", LongType, nullable = false),
-    StructField("duration_seconds", IntegerType, nullable = false)))
+  private[sources] lazy val rowEncoder: ExpressionEncoder[TimeSeriesRow] =
+    ExpressionEncoder[TimeSeriesRow]()
 
-  val rtType: StructType = StructType(Seq(
-    "accumulation_behaviour", "commodity", "currency", "data_qualifier",
-    "flow_direction", "kind", "power_of_ten_multiplier", "phase", "uom")
-    .map(StructField(_, IntegerType, nullable = false)))
-
-  val ltpType: StructType = StructType(Seq(
-    StructField("dst_start_rule", LongType, nullable = false),
-    StructField("dst_end_rule", LongType, nullable = false),
-    StructField("dst_offset", LongType, nullable = false),
-    StructField("tz_offset", LongType, nullable = false)))
-
-  val schema: StructType = StructType(Seq(
-    StructField("file", StringType, nullable = false),
-    StructField("idx", IntegerType, nullable = false),
-    StructField("entry_type", StringType, nullable = false),
-    StructField("rt_index", IntegerType, nullable = false),
-    StructField("href", StringType, nullable = false),
-    StructField("title", StringType, nullable = false),
-    StructField("published_unix", LongType, nullable = false),
-    StructField("updated_unix", LongType, nullable = false),
-    StructField("related_meter_reading_href", StringType, nullable = false),
-    StructField("related_reading_type_href", StringType, nullable = false),
-    StructField("readings", ArrayType(readingType, containsNull = false)),
-    StructField("reading_type", rtType),
-    StructField("local_time_params", ltpType)))
+  /** The row encoder's output plus `skip_reason`; every column but `file`
+    * is nullable, since a skip row carries only its file and reason. */
+  val schema: StructType = StructType(
+    rowEncoder.schema.fields.map(f => f.copy(nullable = f.name != "file")) :+
+      StructField("skip_reason", StringType, nullable = true))
 }
 
-class EspiTable(properties: util.Map[String, String])
-    extends Table with SupportsRead {
+class EspiTable extends Table with SupportsRead {
   override def name(): String = "espi"
   override def schema(): StructType = EspiDataSource.schema
   override def capabilities(): util.Set[TableCapability] =
@@ -90,20 +73,14 @@ class EspiTable(properties: util.Map[String, String])
 }
 
 class EspiScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = EspiDataSource.schema
+    extends ScanBuilder with SupportsPushDownFilters {
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
 
   /** `file` predicates prune WHOLE FILES at planning time (a query for one
     * meter's feed out of a 100TB corpus never lists, opens, or parses the
-    * rest); `entry_type` predicates skip rows before payload
-    * materialization. Every filter is also returned as a post-scan filter,
-    * so Spark re-applies them — pushdown is a pure pruning optimization,
-    * never a semantics change. */
+    * rest). Every filter is also returned as a post-scan filter, so Spark
+    * re-applies them — pushdown is a pure pruning optimization, never a
+    * semantics change. */
   override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
       : Array[org.apache.spark.sql.sources.Filter] = {
     pushed = filters.filter(EspiScan.pushable)
@@ -114,10 +91,11 @@ class EspiScanBuilder(options: CaseInsensitiveStringMap)
     pushed
 
   override def build(): Scan = {
-    val paths = Option(options.get("paths"))
-      .map(_.split(",").toSeq)
-      .orElse(Option(options.get("path")).map(Seq(_)))
-      .getOrElse(Seq.empty)
+    // `load(p1, p2, ...)` passes its paths as one JSON array
+    val paths = Option(options.get("paths")).toSeq.flatMap(json =>
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .readValue(json, classOf[Array[String]]).toSeq) ++
+      Option(options.get("path")).toSeq
     val failfast =
       Option(options.get("mode")).exists(_.equalsIgnoreCase("failfast"))
     val maxFilesPerTrigger =
@@ -128,40 +106,36 @@ class EspiScanBuilder(options: CaseInsensitiveStringMap)
     // exactly-once contract depends on skews mid-query
     val graceMs = Option(options.get("graceMs")).map(_.trim.toLong)
       .getOrElse(EspiOffset.graceMs)
-    new EspiScan(paths, required, failfast, pushed, maxFilesPerTrigger, graceMs)
+    new EspiScan(paths, failfast, pushed, maxFilesPerTrigger, graceMs)
   }
 }
 
-case class EspiFilePartition(path: String) extends InputPartition
+/** The files one task reads, in path order. */
+case class EspiFilePartition(paths: Seq[String]) extends InputPartition
 
 object EspiScan {
   import org.apache.spark.sql.sources._
 
-  /** Filters usable for pruning: file-path predicates (whole-file skip) and
-    * entry_type predicates (pre-materialization row skip). */
+  /** Filters usable for pruning: file-path predicates (whole-file skip). */
   def pushable(f: Filter): Boolean = f match {
-    case EqualTo(a, _) => a == "file" || a == "entry_type"
-    case In(a, _) => a == "file" || a == "entry_type"
-    case StringStartsWith("file", _) => true
-    case StringEndsWith("file", _) => true
-    case StringContains("file", _) => true
+    case EqualTo("file", _) | In("file", _) | StringStartsWith("file", _) |
+         StringEndsWith("file", _) | StringContains("file", _) => true
     case _ => false
   }
 
-  /** Evaluate the pushed predicates against one attribute value; filters on
-    * other attributes pass (conjunction semantics). */
-  def accepts(filters: Seq[Filter], attr: String, value: String): Boolean =
+  /** Evaluate the pushed predicates against a file path (conjunction). */
+  def accepts(filters: Seq[Filter], path: String): Boolean =
     filters.forall {
-      case EqualTo(`attr`, v) => value == v
-      case In(`attr`, vs) => vs.contains(value)
-      case StringStartsWith(`attr`, p) => value.startsWith(p)
-      case StringEndsWith(`attr`, s) => value.endsWith(s)
-      case StringContains(`attr`, s) => value.contains(s)
+      case EqualTo(_, v) => path == v
+      case In(_, vs) => vs.contains(path)
+      case StringStartsWith(_, p) => path.startsWith(p)
+      case StringEndsWith(_, s) => path.endsWith(s)
+      case StringContains(_, s) => path.contains(s)
       case _ => true
     }
 }
 
-class EspiScan(paths: Seq[String], required: StructType, failfast: Boolean,
+class EspiScan(paths: Seq[String], failfast: Boolean,
                pushed: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty,
                private[sources] val maxFilesPerTrigger: Option[Int] = None,
                // default arg evaluates at CONSTRUCTION (driver thread with
@@ -169,47 +143,82 @@ class EspiScan(paths: Seq[String], required: StructType, failfast: Boolean,
                // grace horizon for the scan's lifetime
                private[sources] val graceMs: Long = EspiOffset.graceMs)
     extends Scan with Batch {
-  override def readSchema(): StructType = required
+  override def readSchema(): StructType = EspiDataSource.schema
   override def toBatch: Batch = this
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new EspiMicroBatchStream(this)
 
-  private[sources] def listFiles(): Seq[String] = listFilesWithTimes().map(_._1)
-
-  /** (path, modificationTime) per matched file — mod times drive the
-    * compacted streaming offset's watermark. */
-  private[sources] def listFilesWithTimes(): Seq[(String, Long)] = {
+  /** (path, modificationTime, length) per matched file, in path order —
+    * mod times drive the compacted streaming offset's watermark.
+    * `mustMatch` raises PATH_NOT_FOUND for a path or glob that matches
+    * nothing, as Spark's batch file sources do; a stream's watch directory
+    * may still be empty. */
+  private[sources] def listFilesWithStats(mustMatch: Boolean = false)
+      : Seq[(String, Long, Long)] = {
     val conf = hadoopConf
     paths.flatMap { p =>
       val hp = new Path(p)
       val fs = hp.getFileSystem(conf)
       val matched = Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
+      if (mustMatch && matched.isEmpty)
+        throw new org.apache.spark.sql.AnalysisException(
+          "PATH_NOT_FOUND", Map("path" -> hp.toString))
       matched.flatMap { st =>
         if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile)
         else Seq(st)
-      }.map(st => st.getPath.toString -> st.getModificationTime)
+      }.map(st => (st.getPath.toString, st.getModificationTime, st.getLen))
     }.distinctBy(_._1)
-      .filter { case (p, _) => EspiScan.accepts(pushed, "file", p) }
+      .filter { case (p, _, _) => EspiScan.accepts(pushed, p) }
       .sortBy(_._1)
   }
 
+  private[sources] def listFilesWithTimes(): Seq[(String, Long)] =
+    listFilesWithStats().map { case (p, mt, _) => p -> mt }
+
+  /** Packs files, in path order, into partitions the way Spark's file
+    * sources pack splits: a file costs its length plus
+    * `spark.sql.files.openCostInBytes`, and a partition holds up to
+    * max(openCost, min(`spark.sql.files.maxPartitionBytes`,
+    * total cost / default parallelism)). A delivery of many small feeds
+    * then runs a few tasks, not one per file. */
+  private[sources] def partitions(files: Seq[(String, Long)]): Array[InputPartition] = {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val openCost = conf.filesOpenCostInBytes
+    val parallelism = org.apache.spark.sql.SparkSession.active
+      .sparkContext.defaultParallelism
+    val maxBytes = math.min(conf.filesMaxPartitionBytes, math.max(openCost,
+      files.map(_._2 + openCost).sum / parallelism))
+    val packed = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    var cur = Vector.empty[String]
+    var size = 0L
+    files.foreach { case (p, len) =>
+      if (cur.nonEmpty && size + len > maxBytes) {
+        packed += cur; cur = Vector.empty; size = 0L
+      }
+      cur :+= p
+      size += len + openCost
+    }
+    if (cur.nonEmpty) packed += cur
+    packed.map(EspiFilePartition(_): InputPartition).toArray
+  }
+
   private[sources] def readerFactory(): PartitionReaderFactory =
-    new EspiReaderFactory(required, failfast,
-      new org.apache.spark.util.SerializableConfiguration(hadoopConf), pushed)
+    new EspiReaderFactory(failfast,
+      new org.apache.spark.util.SerializableConfiguration(hadoopConf))
 
   override def description(): String =
-    s"espi PushedFilters: [${pushed.mkString(", ")}], " +
-      s"ReadSchema: ${required.catalogString}"
+    s"espi PushedFilters: [${pushed.mkString(", ")}]"
 
   private def hadoopConf = org.apache.spark.sql.SparkSession.active
     .sparkContext.hadoopConfiguration
 
-  // partition pruning inside listFiles: a file whose path fails the pushed
-  // predicates is never opened, read, or parsed
+  // partition pruning inside the listing: a file whose path fails the
+  // pushed predicates is never opened, read, or parsed
   override def planInputPartitions(): Array[InputPartition] =
-    listFiles().map(EspiFilePartition(_): InputPartition).toArray
+    partitions(listFilesWithStats(mustMatch = true)
+      .map { case (p, _, len) => p -> len })
 
   // ships the session's Hadoop conf to the executors so filesystem
   // settings/credentials (e.g. object-store keys) apply at read time,
@@ -426,9 +435,9 @@ object EspiOffset {
 }
 
 /** Micro-batch stream over an ESPI feed directory: each batch is the set of
-  * newly arrived files (one input partition per file — the same partition
-  * and reader code path as the batch scan, so column pruning and filter
-  * pushdown apply to the stream too). `spark.readStream.format("espi")`. */
+  * newly arrived files (packed into partitions by the same rule and read by
+  * the same reader as the batch scan, so file pushdown applies to the
+  * stream too). `spark.readStream.format("espi")`. */
 class EspiMicroBatchStream(scan: EspiScan)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
@@ -520,16 +529,10 @@ class EspiMicroBatchStream(scan: EspiScan)
     val e = end.asInstanceOf[EspiOffset]
     val sRecent = s.recent.toSet
     val eRecent = e.recent.toSet
-    val listing = scan.listFilesWithTimes()
-    val planned = listing.collect {
-      case (p, mt) if EspiOffset.isNew(s, sRecent, p, mt, scan.graceMs) &&
-        EspiOffset.seenBy(e, eRecent, p, mt, scan.graceMs) =>
-        EspiFilePartition(p): InputPartition
-    }.toArray
-    if (sys.env.contains("ESPI_DEBUG_OFFSETS"))
-      System.err.println(s"[espi-debug] plan start=${s.json()} end=${e.json()} " +
-        s"listing=$listing planned=${planned.mkString(",")}")
-    planned
+    scan.partitions(scan.listFilesWithStats().collect {
+      case (p, mt, len) if EspiOffset.isNew(s, sRecent, p, mt, scan.graceMs) &&
+        EspiOffset.seenBy(e, eRecent, p, mt, scan.graceMs) => p -> len
+    })
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -541,97 +544,56 @@ class EspiMicroBatchStream(scan: EspiScan)
   override def stop(): Unit = ()
 }
 
-class EspiReaderFactory(required: StructType, failfast: Boolean,
-                        conf: org.apache.spark.util.SerializableConfiguration,
-                        pushed: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty)
+class EspiReaderFactory(failfast: Boolean,
+                        conf: org.apache.spark.util.SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new EspiPartitionReader(
-      partition.asInstanceOf[EspiFilePartition].path, required, failfast,
-      conf.value, pushed)
+      partition.asInstanceOf[EspiFilePartition].paths, failfast, conf.value)
 }
 
-/** Parses one file and serves its entries as InternalRows, projecting only
-  * the pruned columns. */
-class EspiPartitionReader(path: String, required: StructType, failfast: Boolean,
-                          conf: org.apache.hadoop.conf.Configuration,
-                          pushed: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty)
+/** Opens each file of a partition in turn, parses, links and denormalizes
+  * it, and serves its TimeSeries rows (through the [[TimeSeriesRow]]
+  * encoder) followed by one skip row per fault — in Permissive mode only,
+  * since FailFast raises the first fault instead. */
+class EspiPartitionReader(paths: Seq[String], failfast: Boolean,
+                          conf: org.apache.hadoop.conf.Configuration)
     extends PartitionReader[InternalRow] {
 
-  private val feed: Schemas.ParsedFeed = {
+  private val toRow = EspiDataSource.rowEncoder.createSerializer()
+  private val noReason = new GenericInternalRow(1)
+  private val joined = new JoinedRow
+
+  private def rowsOf(path: String): Iterator[InternalRow] = {
     val hp = new Path(path)
-    val fs = hp.getFileSystem(conf)
-    val in = fs.open(hp)
+    val in = hp.getFileSystem(conf).open(hp)
     val bytes =
       try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
       finally in.close()
-    val parsed = EspiXml.parseFeed(path,
+    val feed = EspiXml.parseFeed(path,
       new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-    if (parsed.error != null && failfast)
-      throw new EspiXml.EspiParseException(s"$path: ${parsed.error}")
-    parsed
-  }
-
-  private val readingsByEntry: Map[Int, Seq[Schemas.IntervalReadingRaw]] =
-    if (feed.error != null) Map.empty else feed.readings.groupBy(_.entryIdx)
-  private val rtByEntry: Map[Int, Schemas.ReadingTypeRaw] =
-    if (feed.error != null) Map.empty
-    else feed.readingTypes.map(r => r.entryIdx -> r).toMap
-  // the reference attaches LTP to the entry that carried it; we attach the
-  // file's single LTP to its LocalTimeParameters entries in order
-  private var ltpServed = 0
-
-  // entry_type pushdown: skip rows before payload materialization (the
-  // readings array of a filtered-out entry is never built). NOTE: only safe
-  // ahead of the ltpServed bookkeeping because LocalTimeParameters rows are
-  // either all kept or all skipped by an entry_type predicate.
-  private val it =
-    if (feed.error != null) Iterator.empty
-    else feed.entries.iterator.filter(e =>
-      EspiScan.accepts(pushed, "entry_type", e.entryType))
-  private var cur: Schemas.EntryRaw = _
-
-  override def next(): Boolean = { val h = it.hasNext; if (h) cur = it.next(); h }
-
-  override def get(): InternalRow = {
-    val e = cur
-    val values: Array[Any] = required.fields.map { f =>
-      f.name match {
-        case "file" => UTF8String.fromString(feed.file)
-        case "idx" => e.idx
-        case "entry_type" => UTF8String.fromString(e.entryType)
-        case "rt_index" => e.rtIndex
-        case "href" => UTF8String.fromString(e.href)
-        case "title" => UTF8String.fromString(e.title)
-        case "published_unix" => e.publishedUnix
-        case "updated_unix" => e.updatedUnix
-        case "related_meter_reading_href" =>
-          UTF8String.fromString(e.relatedMeterReadingHref)
-        case "related_reading_type_href" =>
-          UTF8String.fromString(e.relatedReadingTypeHref)
-        case "readings" =>
-          readingsByEntry.get(e.idx).map { rs =>
-            new GenericArrayData(rs.map(r => InternalRow(
-              r.cost, r.quality, r.value, r.tou, r.startUnix, r.durationSec
-            )).toArray[Any]): ArrayData
-          }.orNull
-        case "reading_type" =>
-          rtByEntry.get(e.idx).map(rt => InternalRow(
-            rt.accumulationBehaviour, rt.commodity, rt.currency,
-            rt.dataQualifier, rt.flowDirection, rt.kind,
-            rt.powerOfTenMultiplier, rt.phase, rt.uom)).orNull
-        case "local_time_params" =>
-          if (e.entryType == "LocalTimeParameters" &&
-              ltpServed < feed.localTimeParams.length) {
-            val l = feed.localTimeParams(ltpServed)
-            ltpServed += 1
-            InternalRow(l.dstStartRule, l.dstEndRule, l.dstOffset, l.tzOffset)
-          } else null
-        case other => throw new IllegalArgumentException(s"unknown column $other")
+    val linked = GreenButton.link(feed)
+    val file = UTF8String.fromString(path)
+    GreenButton.denormalizeFeed(feed, linked, failfast)
+      .map(r => joined(toRow(r), noReason): InternalRow) ++
+      linked.faults.iterator.map { f =>
+        val skip = new GenericInternalRow(EspiDataSource.schema.length)
+        skip.update(0, file)
+        skip.update(skip.numFields - 1, UTF8String.fromString(f.reason))
+        skip
       }
-    }
-    InternalRow.fromSeq(values.toIndexedSeq)
   }
+
+  private val rows = paths.iterator.flatMap(rowsOf)
+  private var cur: InternalRow = _
+
+  override def next(): Boolean = {
+    val h = rows.hasNext
+    if (h) cur = rows.next()
+    h
+  }
+
+  override def get(): InternalRow = cur
 
   override def close(): Unit = ()
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
-import graft.gb.{EspiXml, GreenButton, ParseMode, Permissive, Schemas}
+import graft.gb.{GreenButton, ParseMode, Permissive}
 
 /** Structured-Streaming surfaces (SURVEY.md §2.8): the reference's only
   * incremental behavior is the browser's accumulate-then-recompute loop
@@ -15,43 +15,26 @@ import graft.gb.{EspiXml, GreenButton, ParseMode, Permissive, Schemas}
   */
 object StreamingIngest {
 
-  /** S3: incremental ESPI ingest — watch a directory for new XML feeds,
-    * parse each micro-batch with the same shredder, denormalize, and hand
-    * the TimeSeries increment to `sink` (append table, console, …).
-    * Trigger.AvailableNow gives the batch-ingest-then-stop behavior of the
-    * browser flow.
+  /** S3: incremental ESPI ingest — watch a directory for new XML feeds
+    * through the `espi` stream source (the batch scan's reader: parse and
+    * denormalize inside the scan), drop each micro-batch's skip rows and
+    * key columns, and hand the TimeSeries increment to `sink` (append
+    * table, console, …). Trigger.AvailableNow gives the
+    * batch-ingest-then-stop behavior of the browser flow.
     */
   def ingestXmlStream(spark: SparkSession, watchDir: String,
                       sink: (DataFrame, Long) => Unit,
-                      mode: ParseMode = Permissive): StreamingQuery = {
-    import spark.implicits._
-    val files = spark.readStream
-      .format("binaryFile")
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "path STRING, modificationTime TIMESTAMP, length LONG, content BINARY"))
-      .option("pathGlobFilter", "*.xml")
-      .load(watchDir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-    files.writeStream
+                      mode: ParseMode = Permissive): StreamingQuery =
+    spark.readStream.format("espi")
+      .option("mode", GreenButton.modeOption(mode))
+      .load(s"$watchDir/*.xml")
+      .writeStream
       .outputMode(OutputMode.Append)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[(String, Array[Byte])], batchId: Long) =>
-        val parsed = batch.map { case (p, bytes) =>
-          EspiXml.parseFeed(p,
-            new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-        }
-        // persist for the duration of THIS batch only: the sink may run
-        // several actions over the increment, and each would otherwise
-        // re-read and re-parse the batch's XML; the explicit unpersist stops
-        // executor storage growing across batches
-        val ts = GreenButton.denormalize(spark,
-          GreenButton.staging(parsed), mode).drop("file", "seq")
-        try sink(ts, batchId)
-        finally parsed.unpersist()
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        sink(GreenButton.kept(batch), batchId)
       }
       .start()
-  }
 
   /** Watermarked sliding-window aggregation over an event stream —
     * late data beyond the watermark is dropped, state is bounded. */

@@ -77,7 +77,7 @@ class DenormalizeSpec extends SparkTestBase {
     feed(ltp(), rt(), mr(), ib(readings))
 
   private def staging(docs: (String, String)*): GreenButton.Staging =
-    GreenButton.staging(GreenButton.parseStrings(spark, docs), cache = false)
+    GreenButton.staging(GreenButton.parseStrings(spark, docs))
 
   private def rows(docs: Seq[(String, String)], mode: ParseMode): Seq[Row] =
     GreenButton.denormalize(spark, staging(docs: _*), mode)
@@ -87,16 +87,16 @@ class DenormalizeSpec extends SparkTestBase {
     GreenButton.skippedFiles(spark, staging(docs: _*)).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
 
+  /** The messages of an exception chain. */
+  private def msgs(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+
   /** FailFast on one file: the message its exception chain carries. */
-  private def failure(xml: String): Seq[String] = {
-    val e = intercept[Exception] {
+  private def failure(xml: String): Seq[String] =
+    msgs(intercept[Exception] {
       GreenButton.denormalize(spark, staging("bad.xml" -> xml), FailFast)
         .collect()
-    }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    msgs(e)
-  }
+    })
 
   /** FailFast raises `msg`; Permissive drops the whole file, keeps a good
     * one, and reports `reasons` for it. */
@@ -232,6 +232,32 @@ class DenormalizeSpec extends SparkTestBase {
     for (mode <- Seq(FailFast, Permissive))
       assert(rows(Seq("empty.xml" -> empty), mode).isEmpty)
     assert(skipped("empty.xml" -> empty).isEmpty)
+  }
+
+  test("an unparseable file raises under FailFast through the staging " +
+      "path and the scan alike") {
+    val m = failure("<notfeed/>")
+    assert(m.exists(_.contains("bad.xml: EspiParseException: Missing feed")),
+      s"staging path: $m")
+    val fromStrings = intercept[Exception] {
+      GreenButton.timeseriesFromStrings(spark, Seq("bad.xml" -> "<notfeed/>"),
+        FailFast).collect()
+    }
+    assert(msgs(fromStrings).exists(_.contains(
+      "bad.xml: EspiParseException: Missing feed")), msgs(fromStrings))
+    val dir = java.nio.file.Files.createTempDirectory("failfast_parse").toFile
+    val f = new java.io.File(dir, "bad.xml")
+    java.nio.file.Files.writeString(f.toPath, "<notfeed/>")
+    val scanned = intercept[Exception] {
+      GreenButton.timeseries(spark, f.getAbsolutePath, FailFast).collect()
+    }
+    assert(msgs(scanned).exists(_.contains(
+      s"file:${f.getAbsolutePath}: EspiParseException: Missing feed")),
+      msgs(scanned))
+    // Permissive skips it with the parse error as its reason
+    assert(GreenButton.timeseries(spark, f.getAbsolutePath).count() == 0)
+    assert(skipped("bad.xml" -> "<notfeed/>") ==
+      Set("bad.xml" -> "EspiParseException: Missing feed"))
   }
 
   test("duplicate hrefs fan out like an equi-join: one row per match") {

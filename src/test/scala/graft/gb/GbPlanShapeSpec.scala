@@ -92,10 +92,9 @@ class GbPlanShapeSpec extends SparkTestBase {
       s"denormalize planned a join or exchange: $wide\n${nodes.head}")
   }
 
-  test("denormalize on the reference corpus runs no join: no sort-merge, " +
+  test("denormalize on the ESPI test corpus runs no join: no sort-merge, " +
       "no cartesian") {
-    val ts = GreenButton.timeseries(spark,
-      "/root/reference/test_files/*.xml", Permissive)
+    val ts = GreenButton.timeseries(spark, EspiCorpus.glob, Permissive)
     val names = executedNodes(ts).map(_.nodeName)
     assert(!names.exists(n => n.contains("Join") || n.contains("Exchange")),
       s"denormalize planned a join or exchange: $names")

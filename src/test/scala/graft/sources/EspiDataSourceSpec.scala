@@ -2,65 +2,146 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
+import graft.gb.{EspiCorpus, EspiXml, GreenButton, Permissive}
 
 class EspiDataSourceSpec extends SparkTestBase {
 
-  val corpus = "/root/reference/test_files/*.xml"
+  private val corpus = EspiCorpus.glob
 
   lazy val df = spark.read.format("espi").load(corpus)
 
-  test("reads one row per Atom entry with the union schema") {
-    assert(df.schema.fieldNames.toSeq == EspiDataSource.schema.fieldNames.toSeq)
-    assert(df.count() > 0)
-    // entry types partition the rows
-    val types = df.groupBy("entry_type").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(types.contains("IntervalBlock"))
-    assert(types.contains("ReadingType"))
-    assert(types.contains("LocalTimeParameters"))
+  private def name(file: String): String = file.substring(file.lastIndexOf('/') + 1)
+
+  /** The files a micro-batch from `start` to `end` reads, in plan order. */
+  private def planned(stream: EspiMicroBatchStream,
+                      start: org.apache.spark.sql.connector.read.streaming.Offset,
+                      end: org.apache.spark.sql.connector.read.streaming.Offset)
+      : Seq[String] =
+    stream.planInputPartitions(start, end).toSeq
+      .flatMap(_.asInstanceOf[EspiFilePartition].paths)
+
+  private val parseError =
+    EspiXml.parseFeed("f.xml", EspiCorpus.text("feed_0001.xml")).error
+
+  private val skipReasons = Map(
+    "feed_0001.xml" -> Set(parseError), // truncated
+    "feed_0002.xml" -> Set("unresolvable reading-type link",
+      "Missing reading type"), // dangling ReadingType link
+    "feed_0003.xml" -> Set("LocalTimeParameters count != 1"))
+
+  test("reads one row per reading: file, seq, the 15 TimeSeries columns " +
+      "and skip_reason") {
+    assert(df.schema.fieldNames.toSeq ==
+      Seq("file", "seq") ++ GreenButton.outputColumns :+ "skip_reason")
+    val perFile = df.filter(col("skip_reason").isNull).groupBy("file").count()
+      .collect().map(r => name(r.getString(0)) -> r.getLong(1)).toMap
+    assert(perFile == EspiCorpus.manifest.filterNot(_._3)
+      .map { case (n, rows, _) => n -> rows.toLong }.toMap)
   }
 
-  test("payload structs attach only to their entry type") {
-    assert(df.filter(col("entry_type") =!= "IntervalBlock" &&
-      col("readings").isNotNull).count() == 0)
-    assert(df.filter(col("entry_type") === "ReadingType" &&
-      col("reading_type").isNull).count() == 0)
-    assert(df.filter(col("entry_type") === "LocalTimeParameters" &&
-      col("local_time_params").isNull).count() == 0)
+  test("rows match the generator's ground truth") {
+    val got = df.filter(col("skip_reason").isNull).orderBy("file", "seq")
+      .collect().toSeq
+    assert(got.length == EspiCorpus.expected.length)
+    got.zip(EspiCorpus.expected).foreach { case (r, e) =>
+      val Seq(file, seq, title, start, value, cost, quality, tou, dur, flow,
+        currency) = e
+      def f32(s: String): Float =
+        if (s == "nan") Float.NaN else s.toDouble.toFloat
+      val exp = Seq(file, seq.toInt, title, start.toLong, f32(value),
+        f32(cost), quality, tou.toInt, dur.toInt, flow, currency)
+      val act = Seq(name(r.getAs[String]("file")), r.getAs[Int]("seq"),
+        r.getAs[String]("title"), r.getAs[Long]("time_period_start_unix"),
+        r.getAs[Float]("value"), r.getAs[Float]("cost"),
+        r.getAs[String]("quality"), r.getAs[Int]("tou"),
+        r.getAs[Int]("time_period_duration_seconds"),
+        r.getAs[String]("flow_direction"), r.getAs[String]("currency"))
+      // compare floats as bits: NaN cost equals NaN cost
+      def bits(v: Any): Any = v match {
+        case x: Float => java.lang.Float.floatToIntBits(x)
+        case o => o
+      }
+      assert(act.map(bits) == exp.map(bits), s"row $act, expected $exp")
+    }
   }
 
-  test("column pruning: envelope-only projection works") {
-    val slim = df.select("title", "href")
-    assert(slim.count() == df.count())
-    val plan = slim.queryExecution.executedPlan.toString
-    assert(!plan.contains("readings") || plan.contains("title"))
+  test("permissive: a skipped file gives one row per reason, data columns " +
+      "null") {
+    val skips = df.filter(col("skip_reason").isNotNull).collect().toSeq
+    val got = skips.groupBy(r => name(r.getAs[String]("file")))
+      .map { case (n, rs) => n -> rs.map(_.getAs[String]("skip_reason")) }
+    assert(got.keySet == skipReasons.keySet)
+    got.foreach { case (n, reasons) =>
+      assert(reasons.sorted == skipReasons(n).toSeq.sorted, s"$n: $reasons")
+    }
+    skips.foreach { r =>
+      assert((1 until r.length - 1).forall(r.isNullAt), s"data in $r")
+    }
   }
 
-  test("explode(readings) matches the flatMap staging row count") {
-    val viaSource = df.select(explode(col("readings"))).count()
-    val staging = graft.gb.GreenButton.staging(
-      graft.gb.GreenButton.parse(spark, corpus))
-    assert(viaSource == staging.readings.count())
+  test("the scan and the staging path give the same rows and skips") {
+    val st = GreenButton.staging(GreenButton.parse(spark, corpus))
+    val viaStaging = GreenButton.denormalize(spark, st, Permissive).collect()
+    val viaScan = df.filter(col("skip_reason").isNull).drop("skip_reason")
+      .collect()
+    assert(viaScan.toSet == viaStaging.toSet)
+    assert(viaScan.length == viaStaging.length)
+    assert(df.filter(col("skip_reason").isNotNull)
+      .select("file", "skip_reason").collect().toSet ==
+      GreenButton.skippedFiles(spark, st).collect().toSet)
+  }
+
+  test("failfast raises the first bad file's message") {
+    val e = intercept[Exception] {
+      spark.read.format("espi").option("mode", "failfast").load(corpus)
+        .collect()
+    }
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    assert(msgs(e).exists(m => m.contains(s"feed_0001.xml: $parseError") ||
+      m.contains("Mismatched reading type missing") ||
+      m.contains("Missing LocalTimeParameters.")), msgs(e).mkString("\n"))
+  }
+
+  test("load(p1, p2) reads every glob") {
+    val two = spark.read.format("espi")
+      .load(EspiCorpus.path("feed_000[0-3].xml"),
+        EspiCorpus.path("feed_000[4-7].xml"))
+    assert(two.collect().toSet == df.collect().toSet)
+  }
+
+  test("small files pack into at most one partition per core, each file " +
+      "once, in path order") {
+    val dir = java.nio.file.Files.createTempDirectory("espi_pack").toFile
+    (0 until 30).foreach(i => java.nio.file.Files.writeString(
+      new java.io.File(dir, f"f$i%03d.xml").toPath, "<feed/>"))
+    val scan = new EspiScan(Seq(dir.getAbsolutePath + "/*.xml"),
+      failfast = false)
+    val parts = scan.planInputPartitions().toSeq
+      .map(_.asInstanceOf[EspiFilePartition].paths)
+    assert(parts.length <= spark.sparkContext.defaultParallelism,
+      s"${parts.length} partitions for 30 small files")
+    assert(parts.flatten == (0 until 30).map(i =>
+      "file:" + new java.io.File(dir, f"f$i%03d.xml").getAbsolutePath))
+  }
+
+  test("a batch path that matches nothing raises PATH_NOT_FOUND") {
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.read.format("espi").load(corpus, EspiCorpus.path("nope_*.xml"))
+        .collect()
+    }
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
   }
 
   test("file-predicate pushdown prunes whole files before they are opened") {
-    // two files, one unparseable; failfast would throw if the bad file were
-    // ever parsed — the file predicate must prune it at planning time
-    val dir = java.nio.file.Files.createTempDirectory("espi_push").toFile
-    val good = new java.io.File(dir, "good.xml")
-    val bad = new java.io.File(dir, "bad.xml")
-    val feed = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(
-        "/root/reference/test_files/EGD_Gas_EnergyUsage_20221225_20241225.xml")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    java.nio.file.Files.writeString(good.toPath, feed)
-    java.nio.file.Files.writeString(bad.toPath, "<feed><entry>not espi")
-    val read = spark.read.format("espi")
-      .option("mode", "failfast").load(dir.getAbsolutePath + "/*.xml")
-    val n = read.filter(col("file").endsWith("good.xml")).count()
-    assert(n > 0)
+    // a good and a malformed file; failfast would throw if the bad file
+    // were ever parsed — the file predicate must prune it at planning time
+    val read = spark.read.format("espi").option("mode", "failfast")
+      .load(EspiCorpus.path("feed_000[01].xml"))
+    val n = read.filter(col("file").endsWith("feed_0000.xml")).count()
+    assert(n == 12)
     // and the pushed filter is visible in the plan
-    val plan = read.filter(col("file").endsWith("good.xml"))
+    val plan = read.filter(col("file").endsWith("feed_0000.xml"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") || plan.contains("StringEndsWith"),
       s"pushdown not visible:\n$plan")
@@ -68,37 +149,23 @@ class EspiDataSourceSpec extends SparkTestBase {
     intercept[Exception] { read.count() }
   }
 
-  test("entry_type pushdown matches post-filter semantics") {
-    val filtered = df.filter(col("entry_type") === "ReadingType")
-      .select("file", "idx", "href").collect().toSet
-    val manual = df.collect().filter(_.getAs[String]("entry_type") == "ReadingType")
-      .map(r => org.apache.spark.sql.Row(
-        r.getAs[String]("file"), r.getAs[Int]("idx"), r.getAs[String]("href")))
-      .toSet
-    assert(filtered == manual)
-    assert(filtered.nonEmpty)
-  }
-
   test("streaming: micro-batch source ingests newly arrived files exactly once") {
     val dir = java.nio.file.Files.createTempDirectory("espi_stream").toFile
     val ckpt = java.nio.file.Files.createTempDirectory("espi_ckpt").toFile
-    val feed = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(
-        "/root/reference/test_files/EGD_Gas_EnergyUsage_20221225_20241225.xml")),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val feed = EspiCorpus.text("feed_0005.xml")
     java.nio.file.Files.writeString(
       new java.io.File(dir, "a.xml").toPath, feed)
     val q = spark.readStream.format("espi")
       .load(dir.getAbsolutePath + "/*.xml")
-      .select("file", "idx", "entry_type")
+      .select("file", "seq")
       .writeStream.format("memory").queryName("espi_mem")
       .option("checkpointLocation", ckpt.getAbsolutePath)
       .start()
     try {
       q.processAllAvailable()
       val n1 = spark.sql("SELECT count(*) FROM espi_mem").head.getLong(0)
-      assert(n1 > 0)
-      // second file arrives; only its entries are appended (exactly once)
+      assert(n1 == 48)
+      // second file arrives; only its rows are appended (exactly once)
       java.nio.file.Files.writeString(
         new java.io.File(dir, "b.xml").toPath, feed)
       q.processAllAvailable()
@@ -113,16 +180,13 @@ class EspiDataSourceSpec extends SparkTestBase {
   test("streaming: restart from checkpoint does not reprocess committed files") {
     val dir = java.nio.file.Files.createTempDirectory("espi_restart").toFile
     val ckpt = java.nio.file.Files.createTempDirectory("espi_restart_ck").toFile
-    val feed = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(
-        "/root/reference/test_files/EGD_Gas_EnergyUsage_20221225_20241225.xml")),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val feed = EspiCorpus.text("feed_0005.xml")
     val out = java.nio.file.Files.createTempDirectory("espi_restart_out").toFile
     java.nio.file.Files.writeString(new java.io.File(dir, "a.xml").toPath, feed)
     // file sink: supports checkpoint recovery (the memory sink doesn't)
     def startQuery() = spark.readStream.format("espi")
       .load(dir.getAbsolutePath + "/*.xml")
-      .select("file", "idx")
+      .select("file", "seq")
       .writeStream.format("parquet")
       .option("path", out.getAbsolutePath)
       .option("checkpointLocation", ckpt.getAbsolutePath)
@@ -161,7 +225,7 @@ class EspiDataSourceSpec extends SparkTestBase {
       assert(f.setLastModified(base + i * 60000L))
     }
     val scan = new EspiScan(Seq(dir.getAbsolutePath + "/*.xml"),
-      EspiDataSource.schema, failfast = false)
+      failfast = false)
     val stream = new EspiMicroBatchStream(scan)
     val latest = stream.latestOffset().asInstanceOf[EspiOffset]
     // only files within graceMs of the newest mod time ride the offset
@@ -169,10 +233,10 @@ class EspiDataSourceSpec extends SparkTestBase {
       s"offset not compacted: ${latest.recent.size} of $nFiles files retained")
     assert(latest.watermark == base + (nFiles - 1) * 60000L)
     // ...yet the first batch still covers every file
-    val batch = stream.planInputPartitions(stream.initialOffset(), latest)
+    val batch = planned(stream, stream.initialOffset(), latest)
     assert(batch.length == nFiles)
     // and a no-change step is empty (no reprocessing)
-    assert(stream.planInputPartitions(latest, latest).isEmpty)
+    assert(planned(stream, latest, latest).isEmpty)
     // ties inside the grace window stay in `recent` and are deduped by name
     val lateTwin = new java.io.File(dir, "f999.xml")
     java.nio.file.Files.writeString(lateTwin.toPath, "<feed/>")
@@ -180,9 +244,9 @@ class EspiDataSourceSpec extends SparkTestBase {
     val latest2 = stream.latestOffset().asInstanceOf[EspiOffset]
     assert(latest2.recent.toSet ==
       Set(latest.recent.head, lateTwin.getAbsolutePath.replaceFirst("^", "file:")))
-    val batch2 = stream.planInputPartitions(latest, latest2)
+    val batch2 = planned(stream, latest, latest2)
     assert(batch2.length == 1, s"grace-window twin missed or duplicated: " +
-      batch2.map(_.asInstanceOf[EspiFilePartition].path).mkString(","))
+      batch2.mkString(","))
   }
 
   test("admission control: maxFilesPerTrigger bounds each micro-batch and " +
@@ -203,7 +267,7 @@ class EspiDataSourceSpec extends SparkTestBase {
           "maxFilesPerTrigger", "2"))).build().asInstanceOf[EspiScan]
     assert(viaBuilder.maxFilesPerTrigger == Some(2))
     val scan = new EspiScan(Seq(dir.getAbsolutePath + "/*.xml"),
-      EspiDataSource.schema, failfast = false,
+      failfast = false,
       maxFilesPerTrigger = Some(2))
     val stream = new EspiMicroBatchStream(scan)
     assert(stream.getDefaultReadLimit.toString.contains("2"))
@@ -216,8 +280,8 @@ class EspiDataSourceSpec extends SparkTestBase {
         .asInstanceOf[EspiOffset]
       if (end == start) done = true
       else {
-        batches += stream.planInputPartitions(start, end)
-          .map(_.asInstanceOf[EspiFilePartition].path).toSeq.sorted
+        batches += planned(stream, start, end)
+          .toSeq.sorted
         start = end
       }
     }
@@ -247,12 +311,12 @@ class EspiDataSourceSpec extends SparkTestBase {
     java.nio.file.Files.writeString(a.toPath, "<feed/>")
     assert(a.setLastModified(t))
     val scan = new EspiScan(Seq(dir.getAbsolutePath + "/*.xml"),
-      EspiDataSource.schema, failfast = false, graceMs = 5000L)
+      failfast = false, graceMs = 5000L)
     val stream = new EspiMicroBatchStream(scan)
     val init = stream.initialOffset().asInstanceOf[EspiOffset]
     val o1 = stream.latestOffset(init, ReadLimit.allAvailable())
       .asInstanceOf[EspiOffset]
-    assert(stream.planInputPartitions(init, o1).length == 1)
+    assert(planned(stream, init, o1).length == 1)
     // late delivery: mtime 2s OLDER than the watermark, inside the 5s grace
     val late = new java.io.File(dir, "late.xml")
     java.nio.file.Files.writeString(late.toPath, "<feed/>")
@@ -260,14 +324,14 @@ class EspiDataSourceSpec extends SparkTestBase {
     val o2 = stream.latestOffset(o1, ReadLimit.allAvailable())
       .asInstanceOf[EspiOffset]
     assert(o2.watermark == o1.watermark, "end watermark regressed below start")
-    val batch = stream.planInputPartitions(o1, o2)
-      .map(_.asInstanceOf[EspiFilePartition].path)
+    val batch = planned(stream, o1, o2)
+      
     assert(batch.toSeq == Seq("file:" + late.getAbsolutePath),
       s"late-within-grace file withheld: planned=$batch off=${o2.json()}")
     // the state must not recur: the next trigger is a clean no-op
     val o3 = stream.latestOffset(o2, ReadLimit.allAvailable())
       .asInstanceOf[EspiOffset]
-    assert(o3 == o2 && stream.planInputPartitions(o2, o3).isEmpty)
+    assert(o3 == o2 && planned(stream, o2, o3).isEmpty)
   }
 
   test("an equal-mtime arrival keeps already-ingested same-mtime files in " +
@@ -288,24 +352,24 @@ class EspiDataSourceSpec extends SparkTestBase {
     }
     mk("a.xml"); val c = mk("c.xml")
     val scan = new EspiScan(Seq(dir.getAbsolutePath + "/*.xml"),
-      EspiDataSource.schema, failfast = false, graceMs = 5000L)
+      failfast = false, graceMs = 5000L)
     val stream = new EspiMicroBatchStream(scan)
     val init = stream.initialOffset().asInstanceOf[EspiOffset]
     val o1 = stream.latestOffset(init, ReadLimit.allAvailable())
       .asInstanceOf[EspiOffset]
-    assert(stream.planInputPartitions(init, o1).length == 2)
+    assert(planned(stream, init, o1).length == 2)
     val b = mk("b.xml") // same mtime, sorts between a and c
     val o2 = stream.latestOffset(o1, ReadLimit.allAvailable())
       .asInstanceOf[EspiOffset]
     assert(o2.recent.contains("file:" + c.getAbsolutePath),
       s"same-mtime file dropped from the end offset: ${o2.json()}")
-    val batch = stream.planInputPartitions(o1, o2)
-      .map(_.asInstanceOf[EspiFilePartition].path)
+    val batch = planned(stream, o1, o2)
+      
     assert(batch.toSeq == Seq("file:" + b.getAbsolutePath))
     // next trigger: nothing re-enters
     val o3 = stream.latestOffset(o2, ReadLimit.allAvailable())
       .asInstanceOf[EspiOffset]
-    assert(o3 == o2 && stream.planInputPartitions(o2, o3).isEmpty,
+    assert(o3 == o2 && planned(stream, o2, o3).isEmpty,
       s"re-ingestion after same-mtime arrival: ${o3.json()}")
   }
 
@@ -318,12 +382,12 @@ class EspiDataSourceSpec extends SparkTestBase {
     java.nio.file.Files.writeString(a.toPath, "<feed/>")
     assert(a.setLastModified(t))
     val scan = new EspiScan(Seq(dir.getAbsolutePath + "/*.xml"),
-      EspiDataSource.schema, failfast = false, graceMs = 5000L)
+      failfast = false, graceMs = 5000L)
     val stream = new EspiMicroBatchStream(scan)
     val init = stream.initialOffset().asInstanceOf[EspiOffset]
     val o1 = stream.latestOffset(init, ReadLimit.allAvailable())
       .asInstanceOf[EspiOffset]
-    assert(stream.planInputPartitions(init, o1).length == 1)
+    assert(planned(stream, init, o1).length == 1)
     assert(o1.mts == Seq(t), s"offset lost the member mtime: ${o1.json()}")
     // retention pipeline: the ingested file is deleted, and a new file
     // arrives WELL past the grace window — the dead path must age out of
@@ -334,8 +398,8 @@ class EspiDataSourceSpec extends SparkTestBase {
     assert(b.setLastModified(t + 60000L))
     val o2 = stream.latestOffset(o1, ReadLimit.allAvailable())
       .asInstanceOf[EspiOffset]
-    assert(stream.planInputPartitions(o1, o2)
-      .map(_.asInstanceOf[EspiFilePartition].path).toSeq ==
+    assert(planned(stream, o1, o2)
+      .toSeq ==
       Seq("file:" + b.getAbsolutePath))
     assert(o2.recent == Seq("file:" + b.getAbsolutePath),
       s"deleted path retained past the grace horizon: ${o2.json()}")
@@ -349,7 +413,7 @@ class EspiDataSourceSpec extends SparkTestBase {
     val f = new java.io.File(dir, "a.xml")
     java.nio.file.Files.writeString(f.toPath, "<feed/>")
     val scan = new EspiScan(Seq(dir.getAbsolutePath + "/*.xml"),
-      EspiDataSource.schema, failfast = false)
+      failfast = false)
     val stream = new EspiMicroBatchStream(scan)
     val o1 = stream.latestOffset().asInstanceOf[EspiOffset]
     assert(o1.recent.nonEmpty)
@@ -358,7 +422,7 @@ class EspiDataSourceSpec extends SparkTestBase {
     val o2 = stream.latestOffset().asInstanceOf[EspiOffset]
     assert(o2 == o1, s"offset regressed to $o2 on an empty listing")
     // and the held offset plans an empty batch, not a re-ingest
-    assert(stream.planInputPartitions(o1, o2).isEmpty)
+    assert(planned(stream, o1, o2).isEmpty)
   }
 
   test("a file whose mod time advances after ingest is NOT re-ingested " +
@@ -408,11 +472,10 @@ class EspiDataSourceSpec extends SparkTestBase {
   }
 
   test("SQL over the source") {
-    df.createOrReplaceTempView("espi_entries")
+    df.createOrReplaceTempView("espi_rows")
     val n = spark.sql(
-      """SELECT count(*) FROM espi_entries
-        |LATERAL VIEW explode(readings) AS r
-        |WHERE r.value > 0""".stripMargin).head.getLong(0)
-    assert(n > 0)
+      """SELECT count(*) FROM espi_rows
+        |WHERE skip_reason IS NULL AND value > 0""".stripMargin).head.getLong(0)
+    assert(n > 0 && n <= EspiCorpus.keptReadings)
   }
 }

@@ -13,18 +13,17 @@ class StreamingSpec extends SparkTestBase {
   test("ingestXmlStream micro-batch parses dropped XML files") {
     val watch = Files.createTempDirectory("gb_stream").toFile
     val out = Files.createTempDirectory("gb_stream_out").toFile
-    // drop the real corpus file into the watched dir
-    val src = new java.io.File(
-      "/root/reference/test_files/EGD_Gas_EnergyUsage_20221225_20241225.xml")
-    Files.copy(src.toPath,
-      new java.io.File(watch, "feed1.xml").toPath)
+    // drop the test corpus, malformed feeds included, into the watched dir
+    new java.io.File(graft.gb.EspiCorpus.dir).listFiles()
+      .filter(_.getName.endsWith(".xml"))
+      .foreach(f => Files.copy(f.toPath, new java.io.File(watch, f.getName).toPath))
 
     val q = StreamingIngest.ingestXmlStream(spark, watch.getAbsolutePath,
       (ts, _) => ts.write.mode("append").parquet(out.getAbsolutePath + "/ts"))
     q.awaitTermination(120000)
 
     val got = spark.read.parquet(out.getAbsolutePath + "/ts")
-    assert(got.count() == 20)
+    assert(got.count() == graft.gb.EspiCorpus.keptReadings)
     assert(got.columns.toSeq == graft.gb.GreenButton.outputColumns)
   }
 
