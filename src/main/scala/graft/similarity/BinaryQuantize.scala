@@ -90,17 +90,6 @@ object BinaryQuantize {
       .withColumn("_r", row_number().over(wH))
       .filter(col("_r") <= k * rerank)
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb")))
-    // localized shortlist fetch — id-pruned corpus read
-    val scored = Similarity.shortlistEmbeddings(shortlist, corpus)
-      .join(q, Seq("query_id"))
-      .withColumn("cos_sim",
-        Similarity.cosineGuarded(col("q_emb"), col("c_emb")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos_sim"))
+    Similarity.rerankShortlist(shortlist, queries, corpus, k)
   }
 }

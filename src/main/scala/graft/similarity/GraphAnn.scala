@@ -522,7 +522,8 @@ object GraphAnn {
       val seedCount = entries.count()
       if (seedCount > mirrorCap) {
         val visited0 = score(entries, entryIds)
-        return walkDistributed(visited0, adj, score, beam, hops, maxInline)
+        return walkDistributed(visited0, adj, score, beam, hops, maxInline,
+          emptyOk, failMsg)
       }
     }
     val ePairs = entries.select(col("query_id"), col("node")).collect()
@@ -617,26 +618,29 @@ object GraphAnn {
         }
       }
     }
-    if (sys.env.contains("GRAFT_WALK_TRACE"))
-      println(s"[walkLoop] hops=$hop/$hops converged=$converged " +
-        s"spill=$spill visited=${mirror.length} adjRows=$adjRows")
     val mirrorDf = localScored(spark, mirror)
     if (!spill) mirrorDf
     // spill: the walk continues distributed over the same visited
     // content with the CLUSTER-shaped scorer — the recurrence is
     // content-deterministic, so the handoff cannot change the answer
-    else walkDistributed(mirrorDf, adj, score, beam, hops - hop, maxInline)
+    else walkDistributed(mirrorDf, adj, score, beam, hops - hop, maxInline,
+      emptyOk, failMsg)
   }
 
   /** The pre-mirror distributed walk: per hop, eager checkpoint +
     * count (the iterative-lineage convention) with the unchanged-count
-    * fixpoint exit. [[walkLoop]]'s over-cap entry and spill target. */
+    * fixpoint exit. [[walkLoop]]'s over-cap entry and spill target. The
+    * first checkpoint's count doubles as the scored-seed emptiness
+    * check, so an over-cap seed that drops entirely in scoring fails
+    * with `failMsg` like the mirrored walk, at no extra job. */
   private def walkDistributed(visitedIn: DataFrame, adj: DataFrame,
                               score: (DataFrame, Seq[Long]) => DataFrame,
-                              beam: Int, hops: Int,
-                              maxInline: Int): DataFrame = {
+                              beam: Int, hops: Int, maxInline: Int,
+                              emptyOk: => Boolean,
+                              failMsg: => String): DataFrame = {
     var visited = visitedIn.localCheckpoint(true)
     var visitedCount = visited.count()
+    require(visitedCount > 0 || emptyOk, failMsg)
     var hop = 0
     var converged = false
     while (hop < hops && !converged) {
@@ -851,15 +855,11 @@ object GraphAnn {
       s"searchGraphPq: numSub=$numSub must divide dim=$dim — a silent " +
         "floor would drop the tail dimensions from every ADC score")
     val subDim = dim / numSub
-    val spark = queries.sparkSession
-    import scala.jdk.CollectionConverters._
-    // bounded probe batch → local relation (the topKWith convention: all
-    // downstream broadcasts derive from memory, not repeated scans)
-    val qRows = queries
-      .select(col("vec_id").cast("long"), col("embedding")).collect()
-    val qLocal = spark.createDataFrame(qRows.toSeq.asJava,
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "vec_id BIGINT, embedding ARRAY<FLOAT>"))
+    // bounded probe batch → local relation holding each query once (the
+    // topKWith convention: all downstream broadcasts derive from memory,
+    // not repeated scans); re-collecting the local relation is job-free
+    val qLocal = ProductQuantizer.localQueries(queries)
+    val qRows = qLocal.collect()
     // codebooks are broadcast-sized BY CONTRACT — collect them once, so
     // the lookup tables below derive entirely from memory and no hop's
     // scoring job ever re-executes the caller's codebook-training plan
@@ -955,23 +955,7 @@ object GraphAnn {
       .withColumn("_r", row_number().over(wBeam))
       .filter(col("_r") <= k * rerank)
       .select(col("query_id"), col("node").as("neighbor_id"))
-    val q = broadcast(ctx.qLocal.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb")))
-    // localized shortlist fetch: id-pruned corpus read, never a full
-    // per-batch scan (Similarity.shortlistEmbeddings)
-    val scored = Similarity.shortlistEmbeddings(shortlist, corpus)
-      .join(q, Seq("query_id"))
-      // cosineGuarded, not cosine: a zero-norm corpus vector in the ADC
-      // shortlist would otherwise score NaN, and NaN sorts ABOVE every
-      // double in a desc rank — the guarded form pins degenerates last
-      .withColumn("cos_sim",
-        Similarity.cosineGuarded(col("q_emb"), col("c_emb")))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("cos_sim"))
+    Similarity.rerankShortlist(shortlist, ctx.qLocal, corpus, k)
   }
 
   /** NSW-style INCREMENTAL INSERT: attach a batch of new vectors to an

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,10 +26,18 @@ import org.apache.spark.sql.functions._
   *
   * Scale ledger: build = two broadcast passes over the corpus (cell
   * argmin + code argmin, both map-side partial aggregations; one
-  * shuffle row per vector each). Serve = broadcast probes × broadcast
-  * ADC against the CODES index (centroid_id-pruned, numSub ints per
-  * row); only the ≤ k·rerank ADC survivors per query touch the float
-  * corpus, via one id-keyed join.
+  * shuffle row per vector each). Serve = localized probes × ADC against
+  * the CODES index (centroid_id-pruned, numSub ints per row); only the
+  * ≤ k·rerank ADC survivors per query touch the float corpus, through
+  * the shared exact re-rank tail ([[Similarity.rerankShortlist]]).
+  *
+  * Both encodings (global and residual) serve through ONE body: the
+  * residual form adds the probe row's coarse `dot(q, c_cell)` outside
+  * the ADC fold. Within it the candidate scoring is written twice on
+  * purpose — the fused [[graft.functions.AdcLut]] expression for a
+  * bounded probe set, and the distributed explode→join→groupBy→fold
+  * shape past [[Similarity.MaxLocalProbedRows]] probe rows (AdcLutSpec
+  * pins the two bit-identical; IvfPqSpec runs the past-cap branch).
   */
 object IvfPq {
 
@@ -42,33 +50,57 @@ object IvfPq {
   def encode(corpus: DataFrame, centroidsDf: DataFrame, booksDf: DataFrame,
              dim: Int, numSub: Int): DataFrame = {
     ProductQuantizer.requireSubDiv("IvfPq.encode", dim, numSub)
-    val cells = Similarity.ivfAssign(corpus, centroidsDf)
-      .select(col("vec_id"), col("centroid_id"))
-    val codes = ProductQuantizer.encode(corpus, broadcast(booksDf), dim, numSub)
+    withCodes(Similarity.ivfAssign(corpus, centroidsDf), corpus, booksDf,
+      dim, numSub)
+  }
+
+  /** `(vec_id, centroid_id)` of `cells` joined with the code array of
+    * each `vectors` row — the codes regroup [[encode]] and
+    * [[encodeResidual]] share (they differ only in WHICH vector is
+    * quantized: the raw one or its residual). */
+  private def withCodes(cells: DataFrame, vectors: DataFrame,
+                        books: DataFrame, dim: Int,
+                        numSub: Int): DataFrame = {
+    val codes = ProductQuantizer.encode(vectors, broadcast(books), dim, numSub)
       .groupBy(col("vec_id"))
       .agg(sort_array(collect_list(struct(col("sub"), col("code")))).as("_sc"))
       .select(col("vec_id"),
         transform(col("_sc"), p => p.getField("code")).as("codes"))
-    cells.join(codes, Seq("vec_id"))
+    cells.select(col("vec_id"), col("centroid_id")).join(codes, Seq("vec_id"))
   }
 
   /** ANN top-k over a prebuilt IVF-PQ codes index. Stages: (1) each
     * query picks its `nprobe` nearest cells (broadcast, query-batch
-    * sized); (2) ADC — probed cells' code rows join the broadcast
+    * sized); (2) ADC — probed cells' code rows score against the
     * per-(query, sub, code) dot table, candidate score = ordered fold
     * over the numSub parts; (3) the top `k·rerank` ADC survivors per
     * query re-score exactly against `corpus` floats. `corpus` must
     * carry (vec_id, embedding) for every indexed id — the id-keyed
-    * re-rank join is the ONLY stage that reads floats. */
+    * re-rank fetch is the ONLY stage that reads floats. */
   def topKFromIndex(queries: DataFrame, index: DataFrame, corpus: DataFrame,
                     k: Int, centroidsDf: DataFrame, booksDf: DataFrame,
                     dim: Int, numSub: Int, nprobe: Int,
-                    rerank: Int): DataFrame = {
+                    rerank: Int): DataFrame =
+    serve("IvfPq.topKFromIndex", queries, index, corpus, k, centroidsDf,
+      booksDf, dim, numSub, nprobe, rerank, residual = false)
+
+  /** The one IVF-PQ serve body behind [[topKFromIndex]] (global codes)
+    * and [[topKFromIndexResidual]] (residual codes). The residual form
+    * is the global form plus ONE coarse term: each probe row carries
+    * `cdot = dot(q, c_cell)`, added OUTSIDE the ordered ADC fold (null
+    * propagation identical to `cdot + fold`). The global form computes
+    * no `cdot` at all, so its plan carries no extra column. */
+  private def serve(op: String, queries: DataFrame, index: DataFrame,
+                    corpus: DataFrame, k: Int, centroidsDf: DataFrame,
+                    booksDf: DataFrame, dim: Int, numSub: Int, nprobe: Int,
+                    rerank: Int, residual: Boolean): DataFrame = {
     require(k >= 1 && nprobe >= 1 && rerank >= 1,
-      s"IvfPq.topKFromIndex: k=$k, nprobe=$nprobe, rerank=$rerank must be >= 1")
-    ProductQuantizer.requireSubDiv("IvfPq.topKFromIndex", dim, numSub)
+      s"$op: k=$k, nprobe=$nprobe, rerank=$rerank must be >= 1")
+    ProductQuantizer.requireSubDiv(op, dim, numSub)
     val subDim = dim / numSub
     val dot = graft.functions.DotProduct.dot_product _
+    val coarse = if (residual) Seq(col("cdot")) else Nil
+    def plusCoarse(adc: Column): Column = coarse.foldLeft(adc)((a, c) => c + a)
 
     // (1) probe cells — identical plan to ivfTopKFromIndex's probe side.
     // LOCALIZED ONCE (bounded |q|·nprobe rows): the probe table feeds
@@ -87,38 +119,38 @@ object IvfPq {
           Similarity.negCosGuarded(col("embedding"), col("centroid")))
         .withColumn("_crank", row_number().over(w0))
         .filter(col("_crank") <= nprobe)
-        .select(col("vec_id").as("query_id"), col("centroid_id"),
-          col("embedding").as("q_emb")),
+        .select(Seq(col("vec_id").as("query_id"), col("centroid_id"),
+          col("embedding").as("q_emb")) ++
+          (if (residual)
+            Seq(dot(col("embedding"), col("centroid")).as("cdot"))
+          else Nil): _*),
       Similarity.MaxLocalProbedRows)
+    val candidates = Similarity.joinProbedCells(index,
+        probed.select(Seq(col("query_id"), col("centroid_id")) ++ coarse: _*))
+      .filter(col("query_id") =!= col("vec_id"))
 
     // (2) candidate ADC scores over the PROBED cells only. Fused form
     // (bounded probe set — the serving norm): the per-(query, sub, code)
     // dot table is built DRIVER-SIDE from the already-collected probe
-    // rows plus one collect of the (tiny, previously-broadcast) books,
-    // and candidate scoring is ONE codegen expression — numSub binary
-    // searches + the ordered fold per candidate ([[graft.functions
-    // .AdcLut]]; bit-identical contract documented there). The legacy
-    // explode→join→groupBy→fold pipeline paid an Exchange + hash
-    // aggregate over numSub× exploded candidate rows plus an
-    // interpreted `aggregate` lambda — the measured r15 s2 residual.
-    // Past the localization cap the legacy distributed shape returns as
-    // the fallback, same rows either way.
+    // rows plus one collect of the (tiny) books, and candidate scoring
+    // is ONE codegen expression — numSub binary searches + the ordered
+    // fold per candidate ([[graft.functions.AdcLut]]; bit-identical
+    // contract documented there). Past the localization cap the
+    // distributed explode→join→groupBy→fold shape (the DuckDB oracle's
+    // replay form) scores the same rows.
     val cand = probedRows match {
       case Some(rows) =>
-        val qIdx = probed.schema.fieldIndex("query_id")
-        val embIdx = probed.schema.fieldIndex("q_emb")
         val booksRows = booksDf.select(col("sub").cast("int"),
           col("code").cast("int"), col("centroid")).collect()
-        val luts = graft.functions.AdcLut.build(rows, qIdx, embIdx,
-          booksRows, numSub, subDim)
-        Similarity.joinProbedCells(index,
-            probed.select("query_id", "centroid_id"))
-          .filter(col("query_id") =!= col("vec_id"))
+        val luts = graft.functions.AdcLut.build(rows,
+          probed.schema.fieldIndex("query_id"),
+          probed.schema.fieldIndex("q_emb"), booksRows, numSub, subDim)
+        candidates
           .filter(graft.functions.AdcLut.adc_keep(
             col("query_id"), col("codes"), luts))
           .select(col("query_id"), col("vec_id"),
-            graft.functions.AdcLut.adc_score(
-              col("query_id"), col("codes"), luts).as("adc_score"))
+            plusCoarse(graft.functions.AdcLut.adc_score(
+              col("query_id"), col("codes"), luts)).as("adc_score"))
       case None =>
         val adc = broadcast(probed.select(col("query_id"), col("q_emb"))
           .dropDuplicates("query_id")
@@ -132,18 +164,16 @@ object IvfPq {
           .join(broadcast(booksDf), Seq("sub"))
           .select(col("query_id"), col("sub"), col("code"),
             dot(col("subvec"), col("centroid")).as("part")))
-        Similarity.joinProbedCells(index,
-            probed.select("query_id", "centroid_id"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .select(col("query_id"), col("vec_id"),
-            posexplode(col("codes")).as(Seq("sub", "code")))
+        candidates
+          .select(Seq(col("query_id"), col("vec_id")) ++ coarse :+
+            posexplode(col("codes")).as(Seq("sub", "code")): _*)
           .join(adc, Seq("query_id", "sub", "code"))
           .groupBy(col("query_id"), col("vec_id"))
           .agg(sort_array(collect_list(struct(col("sub"), col("part"))))
-            .as("_ps"))
+            .as("_ps"), coarse.map(c => first(c).as("cdot")): _*)
           .filter(size(col("_ps")) === numSub)
-          .withColumn("adc_score",
-            aggregate(col("_ps"), lit(0.0), (a, x) => a + x.getField("part")))
+          .withColumn("adc_score", plusCoarse(
+            aggregate(col("_ps"), lit(0.0), (a, x) => a + x.getField("part"))))
     }
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_score").desc, col("vec_id"))
@@ -151,22 +181,8 @@ object IvfPq {
       .filter(col("_r") <= k * rerank)
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
 
-    // (3) exact re-rank of the shortlist — floats read here only. The
-    // shortlist LOCALIZES (≤ k·rerank rows per query by contract), so
-    // the corpus-side float fetch is an id-pruned isin read — at 100 TB
-    // the float table is the side that must stay put AND must not be
-    // re-read wholesale per probe batch (Similarity.shortlistEmbeddings)
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb")))
-    val scored = Similarity.shortlistEmbeddings(shortlist, corpus)
-      .join(q, Seq("query_id"))
-      .withColumn("cos_sim",
-        Similarity.cosineGuarded(col("q_emb"), col("c_emb")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos_sim"))
+    // (3) exact re-rank of the shortlist — floats read here only
+    Similarity.rerankShortlist(shortlist, queries, corpus, k)
   }
 
   /** Fold a batch of new vectors into an existing IVF-PQ codes index
@@ -229,115 +245,24 @@ object IvfPq {
                      resBooks: DataFrame, dim: Int, numSub: Int): DataFrame = {
     ProductQuantizer.requireSubDiv("IvfPq.encodeResidual", dim, numSub)
     val res = residuals(corpus, centroidsDf)
-    val codes = ProductQuantizer.encode(
-        res.select(col("vec_id"), col("embedding")),
-        broadcast(resBooks), dim, numSub)
-      .groupBy(col("vec_id"))
-      .agg(sort_array(collect_list(struct(col("sub"), col("code")))).as("_sc"))
-      .select(col("vec_id"),
-        transform(col("_sc"), p => p.getField("code")).as("codes"))
-    res.select(col("vec_id"), col("centroid_id")).join(codes, Seq("vec_id"))
+    withCodes(res, res.select(col("vec_id"), col("embedding")), resBooks,
+      dim, numSub)
   }
 
   /** ANN top-k over a RESIDUAL codes index. The ADC decomposition:
     * dot(q, x) = dot(q, c_cell) + dot(q, r) ≈ dot(q, c_cell) +
     * Σ_sub dot(q_sub, code_centroid) — the per-(query, probed-cell)
-    * coarse dot is ONE extra kernel dot riding the (tiny, broadcast)
-    * probe table, and the residual parts reuse the identical broadcast
-    * ADC table shape. Exact cosine re-rank of the shortlist restores
-    * true ordering, as in [[topKFromIndex]]. */
+    * coarse dot is ONE extra kernel dot riding the (tiny) probe table,
+    * and the residual parts reuse the identical ADC table shape. Exact
+    * cosine re-rank of the shortlist restores true ordering, as in
+    * [[topKFromIndex]] (same serve body). */
   def topKFromIndexResidual(queries: DataFrame, index: DataFrame,
                             corpus: DataFrame, k: Int,
                             centroidsDf: DataFrame, resBooks: DataFrame,
                             dim: Int, numSub: Int, nprobe: Int,
-                            rerank: Int): DataFrame = {
-    require(k >= 1 && nprobe >= 1 && rerank >= 1,
-      s"IvfPq.topKFromIndexResidual: k=$k, nprobe=$nprobe, rerank=$rerank " +
-        "must be >= 1")
-    ProductQuantizer.requireSubDiv("IvfPq.topKFromIndexResidual", dim, numSub)
-    val subDim = dim / numSub
-    val dot = graft.functions.DotProduct.dot_product _
-
-    // localized ONCE — the [[topKFromIndex]] rationale (three consumers,
-    // one collect)
-    val w0 = Window.partitionBy(col("vec_id"))
-      .orderBy(col("_cdist").asc, col("centroid_id"))
-    val (probed, probedRows) = Similarity.localizeBoundedRows(
-      queries.crossJoin(broadcast(centroidsDf))
-        .withColumn("_cdist",
-          Similarity.negCosGuarded(col("embedding"), col("centroid")))
-        .withColumn("_crank", row_number().over(w0))
-        .filter(col("_crank") <= nprobe)
-        .select(col("vec_id").as("query_id"), col("centroid_id"),
-          col("embedding").as("q_emb"),
-          dot(col("embedding"), col("centroid")).as("cdot")),
-      Similarity.MaxLocalProbedRows)
-
-    // fused ADC on the bounded path, legacy distributed shape past the
-    // cap — the [[topKFromIndex]] structure with the coarse `cdot` term
-    // riding the probe rows and added OUTSIDE the fold, exactly like the
-    // legacy `cdot + aggregate(...)` (null propagation identical)
-    val cand = probedRows match {
-      case Some(rows) =>
-        val qIdx = probed.schema.fieldIndex("query_id")
-        val embIdx = probed.schema.fieldIndex("q_emb")
-        val booksRows = resBooks.select(col("sub").cast("int"),
-          col("code").cast("int"), col("centroid")).collect()
-        val luts = graft.functions.AdcLut.build(rows, qIdx, embIdx,
-          booksRows, numSub, subDim)
-        Similarity.joinProbedCells(index,
-            probed.select("query_id", "centroid_id", "cdot"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .filter(graft.functions.AdcLut.adc_keep(
-            col("query_id"), col("codes"), luts))
-          .select(col("query_id"), col("vec_id"),
-            (col("cdot") + graft.functions.AdcLut.adc_score(
-              col("query_id"), col("codes"), luts)).as("adc_score"))
-      case None =>
-        val adc = broadcast(probed.select(col("query_id"), col("q_emb"))
-          .dropDuplicates("query_id")
-          .select(col("query_id"),
-            explode(transform(sequence(lit(0), lit(numSub - 1)),
-              s => struct(s.as("sub"),
-                slice(col("q_emb"), s * subDim + 1, lit(subDim)).as("subvec"))))
-              .as("_e"))
-          .select(col("query_id"), col("_e.sub").as("sub"),
-            col("_e.subvec").as("subvec"))
-          .join(broadcast(resBooks), Seq("sub"))
-          .select(col("query_id"), col("sub"), col("code"),
-            dot(col("subvec"), col("centroid")).as("part")))
-        Similarity.joinProbedCells(index,
-            probed.select("query_id", "centroid_id", "cdot"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .select(col("query_id"), col("vec_id"), col("cdot"),
-            posexplode(col("codes")).as(Seq("sub", "code")))
-          .join(adc, Seq("query_id", "sub", "code"))
-          .groupBy(col("query_id"), col("vec_id"))
-          .agg(first(col("cdot")).as("cdot"),
-            sort_array(collect_list(struct(col("sub"), col("part")))).as("_ps"))
-          .filter(size(col("_ps")) === numSub)
-          .withColumn("adc_score", col("cdot") +
-            aggregate(col("_ps"), lit(0.0), (a, x) => a + x.getField("part")))
-    }
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_score").desc, col("vec_id"))
-    val shortlist = cand.withColumn("_r", row_number().over(wAdc))
-      .filter(col("_r") <= k * rerank)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb")))
-    // localized shortlist: the corpus-side float fetch is id-pruned
-    val scored = Similarity.shortlistEmbeddings(shortlist, corpus)
-      .join(q, Seq("query_id"))
-      .withColumn("cos_sim",
-        Similarity.cosineGuarded(col("q_emb"), col("c_emb")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos_sim"))
-  }
+                            rerank: Int): DataFrame =
+    serve("IvfPq.topKFromIndexResidual", queries, index, corpus, k,
+      centroidsDf, resBooks, dim, numSub, nprobe, rerank, residual = true)
 
   /** One-shot composition: build the codes index from stride-sampled
     * cells/books and search it. Production persists the index instead

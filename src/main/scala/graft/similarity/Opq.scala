@@ -189,28 +189,25 @@ object Opq {
                        numSub: Int, k: Int, rot: Array[Array[Float]],
                        booksDf: DataFrame, codesDf: DataFrame,
                        rerank: Int = 4): DataFrame = {
-    val booksLocal = ProductQuantizer.localRelation(
-      booksDf.select(col("sub").cast("int"), col("code").cast("int"),
-        col("centroid")),
-      "sub INT, code INT, centroid ARRAY<FLOAT>")
-    val qLocal = ProductQuantizer.localRelation(
-      applyRotation(queries, rot)
-        .select(col("vec_id").cast("long"), col("embedding")),
-      "vec_id BIGINT, embedding ARRAY<FLOAT>")
+    val booksLocal = ProductQuantizer.localBooks(booksDf)
+    val qLocal = ProductQuantizer.localQueries(applyRotation(queries, rot))
     val candidates = ProductQuantizer.adcShortlist(qLocal, booksLocal,
       codesDf, dim, numSub, k, rerank)
     val q = broadcast(qLocal.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb")))
-    // fetch ORIGINAL floats by id-pruned probe (localized shortlist —
+    // OWN tail, not Similarity.rerankShortlist: fetch ORIGINAL floats by
+    // id-pruned probe (localized shortlist —
     // Similarity.shortlistEmbeddings), rotate only the fetched
     // shortlist rows (identical expression per row ⇒ identical values
-    // to rotating the whole corpus first)
+    // to rotating the whole corpus first). Handing the shared tail a
+    // rotated corpus would rotate ALL of it past the shortlist cap.
     val fetched = Similarity.shortlistEmbeddings(candidates, corpus)
       .withColumnRenamed("c_emb", "embedding")
     val scored = applyRotation(fetched, rot)
       .withColumnRenamed("embedding", "c_emb")
       .join(q, Seq("query_id"))
-      .withColumn("cos_sim", Similarity.cosine(col("q_emb"), col("c_emb")))
+      .withColumn("cos_sim",
+        Similarity.cosineGuarded(col("q_emb"), col("c_emb")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))

@@ -149,42 +149,14 @@ object ProductQuantizer {
   def topKWith(queries: DataFrame, corpus: DataFrame, dim: Int, numSub: Int,
                k: Int, booksDf: DataFrame, rerank: Int): DataFrame = {
     requireSubDiv("ProductQuantizer.topKWith", dim, numSub)
-    import scala.jdk.CollectionConverters._
-    val spark = corpus.sparkSession
-    val subDim = dim / numSub
-
-    def localRelation(df: DataFrame, ddl: String): DataFrame =
-      spark.createDataFrame(df.collect().toSeq.asJava,
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
-
-    val booksLocal = localRelation(
-      booksDf.select(col("sub").cast("int"), col("code").cast("int"),
-        col("centroid")),
-      "sub INT, code INT, centroid ARRAY<FLOAT>")
-    val qLocal = localRelation(
-      queries.select(col("vec_id").cast("long"), col("embedding")),
-      "vec_id BIGINT, embedding ARRAY<FLOAT>")
-
-    val books = broadcast(booksLocal)
-    val codes = encode(corpus, books, dim, numSub)
-    val candidates = adcShortlist(qLocal, booksLocal, codes, dim, numSub,
-      k, rerank)
-
+    val booksLocal = localBooks(booksDf)
+    val qLocal = localQueries(queries)
+    val codes = encode(corpus, broadcast(booksLocal), dim, numSub)
     // exact re-score of the short list (query side from the same collected
     // probe set — a third broadcast build would re-scan the source)
-    val q = broadcast(qLocal.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb")))
-    // candidates localize (≤ k·rerank per query by contract): the
-    // corpus-side float fetch is an id-pruned isin read, never a full
-    // scan of the big table (Similarity.shortlistEmbeddings)
-    val scored = Similarity.shortlistEmbeddings(candidates, corpus)
-      .join(q, Seq("query_id"))
-      .withColumn("cos_sim", Similarity.cosine(col("q_emb"), col("c_emb")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos_sim"))
+    Similarity.rerankShortlist(
+      adcShortlist(qLocal, booksLocal, codes, dim, numSub, k, rerank),
+      qLocal, corpus, k)
   }
 
   /** The ADC coarse stage, shared verbatim by [[topKWith]] and the
@@ -232,13 +204,7 @@ object ProductQuantizer {
           sequence(lit(0), lit(numSub - 1)))
       .select(col("vec_id"),
         transform(col("_sc"), p => p.getField("code")).as("codes"))
-    val qIds = broadcast(qLocal.sparkSession.createDataFrame(
-      {
-        import scala.jdk.CollectionConverters._
-        qRows.toSeq.map(r =>
-          org.apache.spark.sql.Row(r.getLong(0))).asJava
-      },
-      org.apache.spark.sql.types.StructType.fromDDL("query_id BIGINT")))
+    val qIds = broadcast(qLocal.select(col("vec_id").as("query_id")))
     val approx = codesArr.crossJoin(qIds)
       .filter(col("query_id") =!= col("vec_id"))
       .filter(graft.functions.AdcLut.adc_keep(
@@ -254,14 +220,35 @@ object ProductQuantizer {
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
   }
 
-  /** Collect a bounded table into a LocalRelation (the [[topKWith]]
-    * job-count trick, shared with the codes-staged serving paths). */
-  private[similarity] def localRelation(df: DataFrame,
-                                        ddl: String): DataFrame =
-    df.sparkSession.createDataFrame(
+  private def localRows(spark: org.apache.spark.sql.SparkSession,
+                        rows: Seq[org.apache.spark.sql.Row],
+                        ddl: String): DataFrame =
+    spark.createDataFrame(
       {
         import scala.jdk.CollectionConverters._
-        df.collect().toSeq.asJava
+        rows.asJava
       },
       org.apache.spark.sql.types.StructType.fromDDL(ddl))
+
+  /** The codebooks collected into a `(sub INT, code INT, centroid)`
+    * LocalRelation — the [[topKWith]] job-count trick, shared with the
+    * codes-staged serving paths. */
+  private[similarity] def localBooks(booksDf: DataFrame): DataFrame =
+    localRows(booksDf.sparkSession,
+      booksDf.select(col("sub").cast("int"), col("code").cast("int"),
+        col("centroid")).collect().toSeq,
+      "sub INT, code INT, centroid ARRAY<FLOAT>")
+
+  /** The query batch as a `(vec_id BIGINT, embedding)` LocalRelation
+    * holding each query ONCE: null ids drop and a repeated id keeps its
+    * first row (the [[graft.functions.AdcLut.build]] guards), so the
+    * ADC short list and the exact re-rank both see one row per query. */
+  private[similarity] def localQueries(queries: DataFrame): DataFrame = {
+    val seen = scala.collection.mutable.HashSet.empty[Long]
+    val rows = queries.select(col("vec_id").cast("long"), col("embedding"))
+      .collect().toSeq
+      .filter(r => !r.isNullAt(0) && seen.add(r.getLong(0)))
+    localRows(queries.sparkSession, rows,
+      "vec_id BIGINT, embedding ARRAY<FLOAT>")
+  }
 }

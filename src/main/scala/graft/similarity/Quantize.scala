@@ -108,15 +108,7 @@ object Quantize {
       .withColumn("crank", row_number().over(w1))
       .filter(col("crank") <= k * coarseFactor)
       .select(col("query_id"), col("neighbor_id"), col("qdot"))
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    Similarity.shortlistEmbeddings(cand, corpus)
-      .join(broadcast(queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("q_emb"))), Seq("query_id"))
-      .withColumn("cos_sim", Similarity.cosine(col("q_emb"), col("c_emb")))
-      .withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("cos_sim"), col("qdot"))
+    // the coarse qdot rides through the exact re-rank as a 5th column
+    Similarity.rerankShortlist(cand, queries, corpus, k)
   }
 }

@@ -1489,8 +1489,8 @@ object Similarity {
     * — the repo-wide inline-literal convention. */
   private[similarity] val MaxIsinShortlistIds = 1 << 12
 
-  /** The exact-rerank FLOAT FETCH shared by every coarse→rerank serve
-    * path (PQ / IVF-PQ / OPQ / int8 / binary / graph-PQ tails): join a
+  /** The exact-rerank FLOAT FETCH behind [[rerankShortlist]] (and the
+    * OPQ codes-staged tail, which rotates the fetched rows): join a
     * bounded `(query_id, neighbor_id)` shortlist against the float
     * corpus and return `(query_id, neighbor_id, c_emb)`.
     *
@@ -1532,5 +1532,33 @@ object Similarity {
       else cEmb.filter(col("neighbor_id").isin(ids: _*))
         .join(broadcast(local), Seq("neighbor_id"))
     }
+  }
+
+  /** The EXACT RE-RANK TAIL shared by every coarse→rerank serve (PQ /
+    * IVF-PQ / int8 / binary / graph-PQ): fetch the short list's floats
+    * through [[shortlistEmbeddings]], score `cosineGuarded` against the
+    * broadcast `(vec_id, embedding)` queries, rank `(cos_sim desc,
+    * neighbor_id)` and keep `k` per query. Returns `query_id, rank,
+    * neighbor_id, cos_sim` followed by any extra short-list columns
+    * (e.g. the int8 coarse `qdot`). The guarded cosine ranks a zero-norm
+    * corpus vector last at −∞ instead of failing the query, and equals
+    * [[cosine]] bit for bit whenever both norms are positive. */
+  private[similarity] def rerankShortlist(shortlist: DataFrame,
+                                          queries: DataFrame,
+                                          corpus: DataFrame,
+                                          k: Int): DataFrame = {
+    val extras = shortlist.columns
+      .filterNot(c => c == "query_id" || c == "neighbor_id")
+    val q = broadcast(queries.select(col("vec_id").as("query_id"),
+      col("embedding").as("q_emb")))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos_sim").desc, col("neighbor_id"))
+    shortlistEmbeddings(shortlist, corpus)
+      .join(q, Seq("query_id"))
+      .withColumn("cos_sim", cosineGuarded(col("q_emb"), col("c_emb")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select((Seq("query_id", "rank", "neighbor_id", "cos_sim") ++ extras)
+        .map(col): _*)
   }
 }

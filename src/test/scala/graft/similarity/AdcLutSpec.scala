@@ -8,9 +8,11 @@ import graft.{SparkTestBase, Tables}
 /** Pins the fused ADC candidate scorer ([[graft.functions.AdcLut]] — the
   * r16 codegen replacement for the explode→join→groupBy→fold pipeline)
   * bit-identical to the legacy distributed shape, which is the DuckDB
-  * oracle replay form. The legacy shape survives in [[IvfPq]] as the
-  * past-localization-cap fallback; this spec re-derives it inline so the
-  * two are compared on the SAME inputs at gate scale. */
+  * oracle replay form. The legacy shape survives once in [[IvfPq]]'s
+  * single serve body as the past-localization-cap fallback (run
+  * end to end by IvfPqSpec's over-cap split-parity test, which needs
+  * more than 4,096 probe rows); this spec re-derives it inline so the
+  * two are compared on the SAME under-cap inputs at gate scale. */
 class AdcLutSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.01"

@@ -412,6 +412,42 @@ class GraphAnnSpec extends SparkTestBase {
       "seed count-gate routing to the distributed walk changed results")
   }
 
+  test("an entry absent from the corpus fails with the contract message " +
+      "on the distributed walk too (mirrorCap = 0), not with an empty " +
+      "result") {
+    val e = emb.filter(col("vec_id") < 40).localCheckpoint(true)
+    val edges = Similarity.bruteTopK(e, e, 4).localCheckpoint(true)
+    val probes = e.filter(col("vec_id") % 10 === 3)
+    val entries = probes.select(col("vec_id").as("query_id"))
+      .withColumn("node", lit(9999L))
+    def run(mirrorCap: Int) = GraphAnn.searchFrom(probes, edges, e,
+      entries, Seq(9999L), beam = 4, hops = 4, k = 3, allowed = None,
+      includeSelf = false, mirrorCap = mirrorCap).collect()
+    Seq(GraphAnn.MirrorCap, 0).foreach { cap =>
+      val ex = intercept[IllegalArgumentException](run(cap))
+      assert(ex.getMessage.contains("is in the corpus"), s"mirrorCap=$cap")
+    }
+  }
+
+  test("searchGraphPq drops a null-id query row and serves a repeated " +
+      "query once, like the PQ serves") {
+    val e = emb.filter(col("vec_id") < 80).localCheckpoint(true)
+    val edges = Similarity.bruteTopK(e, e, 4).localCheckpoint(true)
+    val books = ProductQuantizer.codebooks(e, dim = 64, numSub = 8,
+      stride = 10)
+    val codes = ProductQuantizer.encode(e, books, dim = 64, numSub = 8)
+    val probes = e.filter(col("vec_id") % 20 === 0)
+    val dirty = probes
+      .unionByName(probes.filter(col("vec_id") === 20))
+      .unionByName(probes.filter(col("vec_id") === 40)
+        .select(lit(null).cast("long").as("vec_id"), col("embedding")))
+    def run(q: DataFrame) = GraphAnn.searchGraphPq(q, edges, codes, books,
+        64, 8, e, entryId = 0L, beam = 4, hops = 4, k = 3, rerank = 4)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+        r.getDouble(3))).toSeq.sorted
+    assert(run(dirty) === run(probes))
+  }
+
   test("frontierCut == per-query sorted.take(beam) on randomized " +
       "mirrors (ties, duplicates, NaN/-0.0 doubles) — the bounded heap " +
       "is CPU strategy, never a different cut") {

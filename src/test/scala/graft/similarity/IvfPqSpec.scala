@@ -216,6 +216,41 @@ class IvfPqSpec extends SparkTestBase {
     assert(recalls.last == 1.0, s"full walk below 1.0: $recalls")
   }
 
+  test("past the probe-localization cap (500 queries x nprobe 9 = 4,500 " +
+      "probe rows > 4,096) the distributed ADC serve returns exactly the " +
+      "rows of the same queries served in two under-cap halves, for " +
+      "global and residual codes") {
+    val corpus = emb.localCheckpoint(true)
+    val nq = corpus.count()
+    assert(nq * 9 > Similarity.MaxLocalProbedRows &&
+      (nq + 1) / 2 * 9 <= Similarity.MaxLocalProbedRows)
+    val cents = centroids.localCheckpoint(true)
+    val bks = books.localCheckpoint(true)
+    val resBooks = IvfPq.residualBooks(corpus, cents, dim = 64,
+      numSub = 8, stride = 25).localCheckpoint(true)
+    val global = IvfPq.encode(corpus, cents, bks, dim = 64, numSub = 8)
+      .localCheckpoint(true)
+    val residual = IvfPq.encodeResidual(corpus, cents, resBooks,
+      dim = 64, numSub = 8).localCheckpoint(true)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .toSeq
+    def splitParity(name: String)(
+        serve: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+        : Unit = {
+      val whole = rows(serve(corpus)).sorted
+      val halves = (rows(serve(corpus.filter(col("vec_id") % 2 === 0))) ++
+        rows(serve(corpus.filter(col("vec_id") % 2 === 1)))).sorted
+      assert(whole.length == nq * 3, s"$name: ${whole.length} rows")
+      assert(whole == halves, s"$name: over-cap serve diverged")
+    }
+    splitParity("global")(q => IvfPq.topKFromIndex(q, global, corpus,
+      k = 3, cents, bks, dim = 64, numSub = 8, nprobe = 9, rerank = 4))
+    splitParity("residual")(q => IvfPq.topKFromIndexResidual(q, residual,
+      corpus, k = 3, cents, resBooks, dim = 64, numSub = 8, nprobe = 9,
+      rerank = 4))
+  }
+
   test("non-dividing numSub fails loudly at every PQ entry point — a " +
       "silent subDim floor would drop tail dims from every ADC score") {
     val queries = emb.filter(col("vec_id") < 2)

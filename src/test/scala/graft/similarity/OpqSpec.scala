@@ -131,6 +131,31 @@ class OpqSpec extends SparkTestBase {
     assert(got === (0L until 5L).map(i => (i, i + 1000L, 1.0)).toSet)
   }
 
+  test("the PQ query batch is deduped: a null vec_id row is dropped and " +
+      "a duplicated query is short-listed and re-ranked once, in both " +
+      "the batch and the codes-staged serve") {
+    val e = emb.filter(col("vec_id") < 80).localCheckpoint(true)
+    val books = ProductQuantizer.codebooks(e, dim = 64, numSub = 4,
+      stride = 10)
+    val codes = ProductQuantizer.encode(e, books, dim = 64, numSub = 4)
+    val rot = Opq.identity(64)
+    val probes = e.filter(col("vec_id") % 20 === 0)
+    val dirty = probes
+      .unionByName(probes.filter(col("vec_id") === 20))
+      .unionByName(probes.filter(col("vec_id") === 40)
+        .select(lit(null).cast("long").as("vec_id"), col("embedding")))
+    def rows(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .toSeq.sorted
+    def batch(q: DataFrame) = rows(ProductQuantizer.topKWith(
+      q, e, 64, 4, 3, books, rerank = 4))
+    def staged(q: DataFrame) = rows(Opq.topKOpqWithCodes(
+      q, e, 64, 4, 3, rot, books, codes, rerank = 4))
+    assert(batch(probes).length === 4 * 3)
+    assert(batch(dirty) === batch(probes))
+    assert(staged(dirty) === staged(probes))
+  }
+
   test("argument guards") {
     intercept[IllegalArgumentException] {
       Opq.trainRotation(emb, dim = 63, numSub = 4, k = 2,

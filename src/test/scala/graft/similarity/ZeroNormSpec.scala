@@ -66,6 +66,47 @@ class ZeroNormSpec extends SparkTestBase {
     }
   }
 
+  /** 40 real vectors plus one all-zero vector (id 41) — the coarse
+    * stages below short-list EVERY corpus vector, so the zero vector
+    * always reaches the exact re-rank. */
+  private def annCorpus = graft.Tables.load(spark, sfDir, "embeddings")
+    .filter(col("vec_id") < 40).select("vec_id", "embedding")
+    .unionByName(Seq((41L, Array.fill(64)(0f))).toDF("vec_id", "embedding"))
+
+  test("every coarse→rerank serve ranks a zero-norm corpus vector LAST " +
+      "at −∞ (no DIVIDE_BY_ZERO, never rank 1) when the short list " +
+      "holds the whole corpus") {
+    val corpus = annCorpus.localCheckpoint(true)
+    val queries = corpus.filter(col("vec_id") % 10 === 3)
+    val books = ProductQuantizer.codebooks(corpus, dim = 64, numSub = 8,
+      stride = 5)
+    val k = 40 // every non-self vector, the zero one included
+    val serves = Seq(
+      "ProductQuantizer.topKWith" -> (() => ProductQuantizer.topKWith(
+        queries, corpus, 64, 8, k, books, rerank = 2)),
+      "Quantize.topKQuant" -> (() =>
+        Quantize.topKQuant(queries, corpus, k, coarseFactor = 2)),
+      "Opq.topKOpq" -> (() => Opq.topKOpq(queries, corpus, 64, 8, k,
+        Opq.identity(64), books, rerank = 2)),
+      "IvfPq.topK" -> (() => IvfPq.topK(queries, corpus, k,
+        centroidStride = 10, bookStride = 5, dim = 64, numSub = 8,
+        nprobe = 5, rerank = 2)),
+      "BinaryQuantize.topKBinary" -> (() =>
+        BinaryQuantize.topKBinary(queries, corpus, 64, k, rerank = 2)))
+    serves.foreach { case (name, serve) =>
+      val got = serve().collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      assert(got.length === 4 * k, s"$name: ${got.length} rows")
+      got.filter(_._2 == 1).foreach { case (q, _, n, c) =>
+        assert(n != 41L && c > 0.0, s"$name: query $q rank 1 = ($n, $c)")
+      }
+      got.filter(_._3 == 41L).foreach { case (q, rank, _, c) =>
+        assert(rank === k && c.isNegInfinity,
+          s"$name: query $q ranks the zero vector $rank at $c")
+      }
+    }
+  }
+
   test("ivfTopK rejects a non-positive stride (it would silently return " +
       "zero rows)") {
     intercept[IllegalArgumentException] {
