@@ -82,7 +82,7 @@ object AdcLut {
     out
   }
 
-  private def floatsOrNull(s: Seq[Any]): Array[Float] = {
+  private[functions] def floatsOrNull(s: Seq[Any]): Array[Float] = {
     if (s == null) return null
     val out = new Array[Float](s.length)
     var i = 0

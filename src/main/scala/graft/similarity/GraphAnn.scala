@@ -331,10 +331,12 @@ object GraphAnn {
     * PLUS broadcast-exchange build jobs per hop (measured: the
     * BroadcastExchange pool owned ~166 of e_ann_hnsw_fold_compact's 206
     * jobs per rep). Implementations REPLICATE their DataFrame scorer's
-    * arithmetic and null semantics bit-for-bit — the walk's mirror
-    * stored `Row.getDouble`'s null→0.0 coercion before, so a NULL score
-    * maps to 0.0 here too, and a pair whose node-side rows are absent
-    * or malformed is OMITTED exactly like the legacy inner join. */
+    * arithmetic and null semantics bit-for-bit: a NULL score (a
+    * malformed embedding or a poisoned ADC part) is 0.0 in every regime
+    * — the DataFrame scorers coalesce it, so the budget fallback and the
+    * distributed walk rank it exactly like the mirror — and a pair whose
+    * node-side rows are absent or malformed is OMITTED exactly like the
+    * legacy inner join. */
   private[similarity] trait MirrorScorer {
     def score(pairs: Array[(Long, Long)]): Array[(Long, Long, Double)]
   }
@@ -342,7 +344,7 @@ object GraphAnn {
   /** [[Similarity.cosineGuarded]] replicated driver-side: null array /
     * null element → null dot → NULL denominator → the `otherwise`
     * branch (-∞); positive denominator with a length-mismatched pair →
-    * NULL score → 0.0 (the mirror's Row.getDouble coercion). */
+    * NULL score → 0.0 (the walk's one NULL semantic, [[MirrorScorer]]). */
   private[similarity] final class CosineMirrorScorer(
       qEmb: java.util.HashMap[java.lang.Long, Array[Float]],
       nodes: DataFrame, maxInline: Int,
@@ -451,7 +453,7 @@ object GraphAnn {
         if (codes != null)
           graft.functions.AdcLut.scoreLocal(luts, q, codes, scratch) match {
             case 2 => out += ((q, n, scratch(0)))
-            case 1 => out += ((q, n, 0.0)) // NULL score → getDouble 0.0
+            case 1 => out += ((q, n, 0.0)) // NULL score → 0.0
             case _ => ()
           }
       }
@@ -474,7 +476,7 @@ object GraphAnn {
   }
 
   /** [[Similarity.cosineGuarded]]'s exact driver-side value, with the
-    * mirror's null→0.0 coercion applied (see [[MirrorScorer]]). */
+    * walk's null→0.0 coercion applied (see [[MirrorScorer]]). */
   private[similarity] def cosineGuardedLocal(a: Array[Float],
                                              b: Array[Float]): Double = {
     def selfDot(x: Array[Float]): Double = {
@@ -785,7 +787,8 @@ object GraphAnn {
     * plan pinning: fetch candidate embeddings by broadcast probe into
     * the corpus — id-pruned via `candIds` when the hop knows them (the
     * isin reaches the corpus parquet scan) — then attach the broadcast
-    * query embedding. The big side stays shuffle-free in both joins. */
+    * query embedding. The big side stays shuffle-free in both joins. A
+    * NULL cosine (length mismatch) scores 0.0, as in the mirror. */
   private[graft] def scorer(q: DataFrame, nodes: DataFrame)
                            (cand: DataFrame, candIds: Seq[Long]): DataFrame = {
     val fetched =
@@ -795,7 +798,8 @@ object GraphAnn {
     fetched.join(broadcast(cand), Seq("node"))
       .join(broadcast(q), Seq("query_id"))
       .select(col("query_id"), col("node"),
-        Similarity.cosineGuarded(col("q_emb"), col("n_emb")).as("score"))
+        coalesce(Similarity.cosineGuarded(col("q_emb"), col("n_emb")),
+          lit(0.0)).as("score"))
   }
 
   /** DiskANN-shaped serving: graph beam search scored by PQ CODES — the
@@ -901,8 +905,8 @@ object GraphAnn {
         .filter(graft.functions.AdcLut.adc_keep(
           col("query_id"), col("codes"), luts))
         .select(col("query_id"), col("node"),
-          graft.functions.AdcLut.adc_score(
-            col("query_id"), col("codes"), luts).as("score"))
+          coalesce(graft.functions.AdcLut.adc_score(
+            col("query_id"), col("codes"), luts), lit(0.0)).as("score"))
     }
     // ONE driver scorer per context: the node→codes cache is
     // layer-independent, so the HNSW descent's per-layer walks share it

@@ -24,12 +24,16 @@ import org.apache.spark.sql.functions._
   * left fold), ordered per-subspace ADC folds, (score desc, id) ties —
   * so the whole pipeline replays in SQL (e_ann_ivfpq_recall's oracle).
   *
-  * Scale ledger: build = two broadcast passes over the corpus (cell
-  * argmin + code argmin, both map-side partial aggregations; one
-  * shuffle row per vector each). Serve = localized probes × ADC against
-  * the CODES index (centroid_id-pruned, numSub ints per row); only the
-  * ≤ k·rerank ADC survivors per query touch the float corpus, through
-  * the shared exact re-rank tail ([[Similarity.rerankShortlist]]).
+  * Scale ledger: build = ONE map-only pass over the corpus — a codegen
+  * kernel per row picks the cell and every subspace's code from the
+  * vector alone ([[graft.functions.PqEncode]]) over centroid and
+  * codebook tables collected once and broadcast together; no exchange,
+  * no join, no aggregate, so the work is |corpus|·(cells + numSub·codes)
+  * dots spread over the input's own splits. Serve = localized probes ×
+  * ADC against the CODES index (centroid_id-pruned, numSub ints per
+  * row); only the ≤ k·rerank ADC survivors per query touch the float
+  * corpus, through the shared exact re-rank tail
+  * ([[Similarity.rerankShortlist]]).
   *
   * Both encodings (global and residual) serve through ONE body: the
   * residual form adds the probe row's coarse `dot(q, c_cell)` outside
@@ -50,23 +54,27 @@ object IvfPq {
   def encode(corpus: DataFrame, centroidsDf: DataFrame, booksDf: DataFrame,
              dim: Int, numSub: Int): DataFrame = {
     ProductQuantizer.requireSubDiv("IvfPq.encode", dim, numSub)
-    withCodes(Similarity.ivfAssign(corpus, centroidsDf), corpus, booksDf,
-      dim, numSub)
+    encodeWith(corpus, centroidsDf, booksDf, dim, numSub, residual = false)
   }
 
-  /** `(vec_id, centroid_id)` of `cells` joined with the code array of
-    * each `vectors` row — the codes regroup [[encode]] and
-    * [[encodeResidual]] share (they differ only in WHICH vector is
-    * quantized: the raw one or its residual). */
-  private def withCodes(cells: DataFrame, vectors: DataFrame,
-                        books: DataFrame, dim: Int,
-                        numSub: Int): DataFrame = {
-    val codes = ProductQuantizer.encode(vectors, broadcast(books), dim, numSub)
-      .groupBy(col("vec_id"))
-      .agg(sort_array(collect_list(struct(col("sub"), col("code")))).as("_sc"))
-      .select(col("vec_id"),
-        transform(col("_sc"), p => p.getField("code")).as("codes"))
-    cells.select(col("vec_id"), col("centroid_id")).join(codes, Seq("vec_id"))
+  /** The projection [[encode]] and [[encodeResidual]] share: one
+    * [[graft.functions.PqEncode]] kernel per row picks the cell and the
+    * code of each subspace (of `x`, or of `x − c_cell` for the residual
+    * form), over the centroid and codebook tables broadcast together.
+    * One output row per input row. */
+  private def encodeWith(corpus: DataFrame, centroidsDf: DataFrame,
+                         booksDf: DataFrame, dim: Int, numSub: Int,
+                         residual: Boolean): DataFrame = {
+    import graft.functions.PqEncode
+    val t = new PqEncode.Tables(Some(PqEncode.cells(centroidsDf)),
+      Some(PqEncode.books(booksDf, numSub, dim / numSub)), residual)
+    val enc = corpus.select(col("vec_id"),
+        PqEncode.pq_encode(col("embedding"), t, corpus.sparkSession)
+          .as("_enc"))
+      .select(col("vec_id"), col("_enc.centroid_id").as("centroid_id"),
+        col("_enc.codes").as("codes"))
+    // an empty centroid or codebook table encodes nothing: no row
+    if (t.isEmpty) enc.filter(lit(false)) else enc
   }
 
   /** ANN top-k over a prebuilt IVF-PQ codes index. Stages: (1) each
@@ -244,9 +252,10 @@ object IvfPq {
   def encodeResidual(corpus: DataFrame, centroidsDf: DataFrame,
                      resBooks: DataFrame, dim: Int, numSub: Int): DataFrame = {
     ProductQuantizer.requireSubDiv("IvfPq.encodeResidual", dim, numSub)
-    val res = residuals(corpus, centroidsDf)
-    withCodes(res, res.select(col("vec_id"), col("embedding")), resBooks,
-      dim, numSub)
+    // a cell with a NULL id has no centroid row to key the residual on:
+    // such a vector gets no index row
+    encodeWith(corpus, centroidsDf, resBooks, dim, numSub, residual = true)
+      .filter(col("centroid_id").isNotNull)
   }
 
   /** ANN top-k over a RESIDUAL codes index. The ADC decomposition:

@@ -78,27 +78,32 @@ object ProductQuantizer {
   }
 
   /** Encode the corpus: (vec_id, sub, code) — nearest centroid per
-    * subvector by L2 (the PQ standard; works for unnormalized data).
-    * The argmin key is the expansion ⟨c,c⟩ − 2⟨x,c⟩ (the ⟨x,x⟩ term is
-    * constant within each (vector, subspace) group, so the ordering is
-    * identical) — both dots run in the native codegen'd kernel instead of
-    * an interpreted per-element fold. Map-side argmin aggregation; the
-    * only shuffle carries one row per (vector, subspace). The repartition
-    * spreads the |corpus| × k distance work when the input arrives in few
-    * splits (single-file micro-bench); many-split cluster inputs already
-    * parallelize and the tiny extra shuffle is noise. */
+    * subvector by L2 (the PQ standard; works for unnormalized data),
+    * argmin key ⟨c,c⟩ − 2⟨x,c⟩ (the ⟨x,x⟩ term is constant per
+    * (vector, subspace), so the ordering is the L2 one), ties on the
+    * lower code. Map-only: the codebooks are collected once and
+    * broadcast, one codegen'd kernel per row emits the code array
+    * ([[graft.functions.PqEncode]] — exactness contract there) and a
+    * posexplode yields one row per subspace. One row set per input row:
+    * a duplicate or null `vec_id` is not merged. */
   def encode(corpus: DataFrame, books: DataFrame, dim: Int,
              numSub: Int): DataFrame = {
     requireSubDiv("ProductQuantizer.encode", dim, numSub)
-    val subDim = dim / numSub
-    val dot = graft.functions.DotProduct.dot_product _
-    val key = dot(col("centroid"), col("centroid")) -
-      lit(2.0) * dot(col("subvec"), col("centroid"))
-    explodeSubs(corpus.repartition(col("vec_id")), "embedding", numSub, subDim)
-      .join(broadcast(books), Seq("sub"))
-      .withColumn("_d", key)
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(min_by(col("code"), struct(col("_d"), col("code"))).as("code"))
+    import graft.functions.PqEncode
+    val bk = PqEncode.books(books, numSub, dim / numSub)
+    val t = new PqEncode.Tables(None, Some(bk), residual = false)
+    val codes = PqEncode.pq_encode(col("embedding"), t, corpus.sparkSession)
+      .getField("codes")
+    // a subspace without codebook entries has no code (the array holds
+    // the present subspaces in order)
+    val sub =
+      if (bk.subs.sameElements(0 until numSub)) col("_pos")
+      else element_at(array(bk.subs.map(lit).toIndexedSeq: _*),
+        col("_pos") + 1)
+    val out = corpus.select(col("vec_id"),
+        posexplode(codes).as(Seq("_pos", "code")))
+      .select(col("vec_id"), sub.as("sub"), col("code"))
+    if (t.isEmpty) out.filter(lit(false)) else out
   }
 
   /** Approximate top-k by ADC, re-scored exactly. `rerank` controls the

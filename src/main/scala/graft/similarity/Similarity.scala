@@ -453,34 +453,32 @@ object Similarity {
     * re-assigning the corpus, and [[ivfFoldIn]] appends new vectors
     * without touching existing rows.
     *
-    * Corpus-side assignment is an argmin AGGREGATION, not a window: the
-    * groupBy partial-aggregates map-side, so the shuffle carries one row
-    * per corpus vector instead of |corpus| × |centroids| scored rows —
-    * the difference that matters when the corpus is the 100TB side.
-    * min_by's ordering struct (distance, centroid_id) reproduces the
-    * probe window's deterministic tie-break.
+    * Corpus-side assignment is a PROJECTION: the centroid table is
+    * collected once and broadcast, and one codegen'd kernel per row
+    * takes the [[negCosGuarded]] argmin with the probe window's
+    * (distance, centroid_id) tie-break ([[graft.functions.PqEncode]]) —
+    * no join, no shuffle, no aggregate. One output row per input row
+    * (a duplicate or null `vec_id` is not merged).
     */
   def ivfAssign(corpus: DataFrame, centroidsDf: DataFrame): DataFrame =
     ivfAssignWith(corpus, centroidsDf, Nil)
 
-  /** [[ivfAssign]] carrying named METADATA columns through the argmin
-    * aggregation (`first` within the per-vector group — exact, the group
-    * holds one distinct value per vector): a filtered-search deployment
-    * stores its predicate columns IN the index rows so serving never
-    * joins back to the corpus ([[ivfTopKFiltered]]). */
+  /** [[ivfAssign]] carrying named METADATA columns through the
+    * projection: a filtered-search deployment stores its predicate
+    * columns IN the index rows so serving never joins back to the corpus
+    * ([[ivfTopKFiltered]]). */
   def ivfAssignWith(corpus: DataFrame, centroidsDf: DataFrame,
                     extraCols: Seq[String]): DataFrame = {
-    val aggs =
-      min_by(col("centroid_id"),
-        struct(col("_cdist"), col("centroid_id"))).as("centroid_id") +:
-      first(col("embedding")).as("embedding") +:
-      extraCols.map(c => first(col(c)).as(c))
-    corpus.crossJoin(broadcast(centroidsDf))
-      .withColumn("_cdist", negCosGuarded(col("embedding"), col("centroid")))
-      .groupBy(col("vec_id"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select((Seq("vec_id", "centroid_id", "embedding") ++ extraCols)
-        .map(col): _*)
+    import graft.functions.PqEncode
+    val t = new PqEncode.Tables(Some(PqEncode.cells(centroidsDf)), None,
+      residual = false)
+    val cell = PqEncode.pq_encode(col("embedding"), t, corpus.sparkSession)
+      .getField("centroid_id")
+    val assigned = corpus.select(
+      (Seq(col("vec_id"), cell.as("centroid_id"), col("embedding")) ++
+        extraCols.map(col)): _*)
+    // an empty centroid table assigns nothing: no row
+    if (t.isEmpty) assigned.filter(lit(false)) else assigned
   }
 
   /** Stride-sampled SUPER-CENTROIDS over a centroid table — the level-1
@@ -528,7 +526,7 @@ object Similarity {
     * Scale ledger: one bounded collect (S supers); the centroid→super
     * map is C-sized and broadcast; the corpus never crossJoins
     * centroids — its only shuffle is the final per-vector argmin
-    * groupBy, map-side partial like [[ivfAssignWith]]. */
+    * groupBy (map-side partial). */
   def ivfAssignTwoLevel(corpus: DataFrame, centroidsDf: DataFrame,
                         superDf: DataFrame, fanout: Int): DataFrame = {
     require(fanout >= 1, s"ivfAssignTwoLevel: fanout=$fanout must be >= 1")
@@ -563,7 +561,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"),
         col("_ps").getField("sid").as("super_id"))
     // final argmin over the probed supers' member centroids only —
-    // identical aggregation shape (and tie-break) to [[ivfAssignWith]]
+    // the (distance, centroid_id) tie-break of [[ivfAssign]]
     probes.join(c2s, Seq("super_id"))
       .withColumn("_cdist", negCosGuarded(col("embedding"), col("centroid")))
       .groupBy(col("vec_id"))
@@ -697,7 +695,7 @@ object Similarity {
       .select(col("grp"), col("new_id"), col("centroid"))
     // reassign ONLY fat-cell rows, each against ITS OWN cell's children
     // (equi join on the old cell id — k'×subK broadcast, argmin agg:
-    // one row per reassigned vector on the shuffle, the ivfAssign shape)
+    // one row per reassigned vector on the shuffle)
     val reassigned = big
       .join(broadcast(renumbered), big("centroid_id") === renumbered("grp"))
       .withColumn("_cdist", negCosGuarded(col("embedding"), col("centroid")))

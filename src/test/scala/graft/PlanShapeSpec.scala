@@ -484,10 +484,18 @@ class PlanShapeSpec extends SparkTestBase {
   test("e_knn_graph: the cell walk is MAP-ONLY (literal centroids — no " +
       "corpus-wide window, no extra join); probes meet candidates in " +
       "ONE equi-shuffle join; top-k prunes per-partition") {
-    val p = plan("e_knn_graph")
+    // both join sides are corpus-sized by design; at sf0.001 the index
+    // (a projection of a small scan) is estimated honestly and would be
+    // broadcast, so the corpus-scale plan is read with size-based
+    // broadcasting off
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val p = try plan("e_knn_graph")
+      finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     assert(!p.contains("CartesianProduct"), p)
     // exactly one shuffled join: probe rows × candidate cells on
-    // centroid_id (both sides corpus-sized by design)
+    // centroid_id
     assert("SortMergeJoin|ShuffledHashJoin".r.findAllIn(p).size == 1,
       s"expected exactly one shuffled join:\n$p")
     // the walk explodes an in-row array — a Generate, not a Window over
@@ -874,6 +882,40 @@ class PlanShapeSpec extends SparkTestBase {
       s"rotation projection introduced a shuffle:\n${p.take(2000)}")
     assert(!p.contains("CodegenFallback") && !p.contains("UDF"),
       s"rotation fell out of codegen:\n${p.take(2000)}")
+  }
+
+  test("IVF-PQ encode, ivfAssign and PQ encode are map-only: one codegen " +
+      "kernel per row, no exchange, join, aggregate, fallback or UDF") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import graft.similarity.{IvfPq, ProductQuantizer, Similarity}
+    val emb = Tables.load(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    val cents = emb.filter(pmod(col("vec_id"), lit(50)) === 0)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
+    val books = ProductQuantizer.codebooks(emb, dim = 64, numSub = 8,
+      stride = 25)
+    Seq(
+      "IvfPq.encode" -> IvfPq.encode(emb, cents, books, 64, 8),
+      "Similarity.ivfAssign" -> Similarity.ivfAssign(emb, cents),
+      "ProductQuantizer.encode" -> ProductQuantizer.encode(emb, books, 64, 8)
+    ).foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan
+      val p = plan.toString
+      Seq("Exchange", "Join", "HashAggregate", "CodegenFallback", "UDF")
+        .foreach(bad => assert(!p.contains(bad), s"$name plans $bad:\n$p"))
+      val fallbacks = plan.collect { case n => n.expressions }.flatten
+        .flatMap(_.collect { case e: CodegenFallback => e })
+      assert(fallbacks.isEmpty, s"$name fell out of codegen: $fallbacks")
+      val kernelLines = p.linesIterator.filter(_.contains("pq_encode")).toSeq
+      assert(kernelLines.nonEmpty && kernelLines.forall(_.contains("*(")),
+        s"$name: the kernel is not inside a codegen stage:\n$p")
+      // the kernel runs once per row, whatever the fields it feeds
+      assert("pq_encode".r.findAllIn(
+        df.queryExecution.optimizedPlan.toString).size == 1,
+        s"$name evaluates the kernel more than once:\n" +
+          df.queryExecution.optimizedPlan)
+    }
   }
 
   test("delta-loaded index: the newest-wins reconcile LOCALIZES the " +

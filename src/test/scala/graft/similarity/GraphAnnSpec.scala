@@ -429,6 +429,57 @@ class GraphAnnSpec extends SparkTestBase {
     }
   }
 
+  test("a malformed embedding scores 0.0 in every walk regime: the " +
+      "driver mirror, the driver-budget DataFrame fallback and the " +
+      "distributed walk (mirrorCap = 0)") {
+    val clean = emb.filter(col("vec_id") < 80).localCheckpoint(true)
+    val edges = Similarity.bruteTopK(clean, clean, 4).localCheckpoint(true)
+    // node 5 is one element short: positive norm, NULL dot with every
+    // query (a NULL cosine)
+    val e = clean.withColumn("embedding",
+        when(col("vec_id") === 5, slice(col("embedding"), 1, 63))
+          .otherwise(col("embedding")))
+      .localCheckpoint(true)
+    val probes = clean.filter(col("vec_id") % 16 === 3)
+    val entries = probes.select(col("vec_id").as("query_id"))
+      .withColumn("node", lit(5L))
+    def run(mirrorCap: Int, maxCells: Long) =
+      GraphAnn.searchFrom(probes, edges, e, entries, Seq(5L), beam = 6,
+          hops = 8, k = 80, allowed = None, includeSelf = false,
+          mirrorCap = mirrorCap, maxLocalScoreCells = maxCells)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+          if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toSet
+    val want = run(GraphAnn.MirrorCap, Long.MaxValue)
+    assert(want.exists(t => t._3 == 5L && t._4.contains(0.0)), want)
+    assert(run(GraphAnn.MirrorCap, 0L) == want, "driver-budget fallback")
+    assert(run(0, Long.MaxValue) == want, "distributed walk")
+  }
+
+  test("a poisoned ADC score (a query with a null element) is 0.0 in " +
+      "the mirrored and the distributed PQ walk alike") {
+    val e = emb.filter(col("vec_id") < 80).localCheckpoint(true)
+    val edges = Similarity.bruteTopK(e, e, 4).localCheckpoint(true)
+    val books = ProductQuantizer.codebooks(e, dim = 64, numSub = 8,
+      stride = 10).localCheckpoint(true)
+    val codes = ProductQuantizer.encode(e, books, dim = 64, numSub = 8)
+      .localCheckpoint(true)
+    val probes = e.filter(col("vec_id") % 20 === 3)
+      .withColumn("embedding", when(col("vec_id") === 23,
+        transform(col("embedding"), (x, i) =>
+          when(i === 0, lit(null).cast("float")).otherwise(x)))
+        .otherwise(col("embedding")))
+    val ctx = GraphAnn.pqSearcher(probes, codes, books, 64, 8)
+    val entries = ctx.qLocal.select(col("vec_id").as("query_id"))
+      .withColumn("node", lit(0L))
+    def run(cap: Int) = GraphAnn.walkPq(ctx, edges, entries, Seq(0L),
+        beam = 4, hops = 4, mirrorCap = cap)
+      .collect().map(r => (r.getLong(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
+    val want = run(GraphAnn.MirrorCap)
+    assert(want.exists(t => t._1 == 23L && t._3.contains(0.0)), want)
+    assert(run(0) == want, "distributed walk")
+  }
+
   test("searchGraphPq drops a null-id query row and serves a repeated " +
       "query once, like the PQ serves") {
     val e = emb.filter(col("vec_id") < 80).localCheckpoint(true)
