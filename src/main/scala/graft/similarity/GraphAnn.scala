@@ -99,12 +99,13 @@ object GraphAnn {
                          corpus: DataFrame, entryId: Long, beam: Int,
                          hops: Int, k: Int,
                          allowed: Option[DataFrame],
-                         seedBound: Long = -1L): DataFrame =
+                         seedBound: Long = -1L,
+                         mirrorCap: Int = MirrorCap): DataFrame =
     searchFrom(queries, edges, corpus,
       queries.select(col("vec_id").as("query_id"))
         .withColumn("node", lit(entryId)),
       Seq(entryId), beam, hops, k, allowed, includeSelf = false,
-      seedBound = seedBound)
+      mirrorCap = mirrorCap, seedBound = seedBound)
 
   /** [[searchGraph]] generalized to PER-QUERY entry points — the seam
     * [[Hnsw]]'s top-down descent needs: each layer's search starts from
@@ -1017,54 +1018,49 @@ object GraphAnn {
                                               batch: DataFrame,
                                               entryId: Long, beam: Int,
                                               hops: Int, degree: Int,
-                                              batchBound: Long = -1L)
+                                              batchBound: Long = -1L,
+                                              mirrorCap: Int = MirrorCap)
       : (DataFrame, DataFrame) = {
     require(degree >= 1, s"insertBySearch: degree=$degree must be >= 1")
-    // the search output is BOUNDED (|batch| × degree) — localize it
-    // once (r16): forward/reverse/touched all derive from the collected
-    // rows, so the re-prune below pays no broadcast-exchange builds and
-    // the touched-source slice prunes the edge scan with a LITERAL
-    // `isin` (row-group pruning against the saveGraphIndex layout)
-    // instead of a broadcast join. Null-key semantics preserved: the
-    // legacy left_anti KEPT null-query_id edge rows (null keys match
-    // nothing), so the passthrough filter keeps them explicitly.
-    val foundRows = searchCore(batch, edges, corpus, entryId, beam, hops,
-      degree, allowed = None, seedBound = batchBound).collect()
-    val spark = edges.sparkSession
-    import scala.jdk.CollectionConverters._
-    val foundLocal = spark.createDataFrame(foundRows.toSeq.asJava,
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "query_id BIGINT, rank INT, neighbor_id BIGINT, cos_sim DOUBLE"))
+    // the search output (|batch| × degree rows) localizes once when it
+    // fits `mirrorCap` (past it, it stays distributed): forward/reverse/
+    // touched all derive from it, and the touched-source slice prunes
+    // the edge scan with a LITERAL `isin` (row-group pruning against the
+    // saveGraphIndex layout). Null-key semantics preserved: the legacy
+    // left_anti KEPT null-query_id edge rows (null keys match nothing),
+    // so the passthrough filter keeps them explicitly.
+    val (found, foundRows) = Similarity.localizeBoundedRows(
+      searchCore(batch, edges, corpus, entryId, beam, hops, degree,
+        allowed = None, seedBound = batchBound, mirrorCap = mirrorCap),
+      mirrorCap)
     // new nodes' out-edges: the search results verbatim (already ranked
     // 1..degree by the searchGraph contract)
-    val forward = foundLocal.select(col("query_id"), col("rank"),
+    val forward = found.select(col("query_id"), col("rank"),
       col("neighbor_id"), col("cos_sim"))
     // reverse edges: candidate rows for the touched sources, then ONE
     // re-prune window over (existing ∪ reverse) rows of those sources
-    val reverse = foundLocal.select(col("neighbor_id").as("query_id"),
+    val reverse = found.select(col("neighbor_id").as("query_id"),
       col("query_id").as("neighbor_id"), col("cos_sim"))
-    val touchedIds = foundRows.filter(!_.isNullAt(2)).map(_.getLong(2))
-      .distinct.sorted.toIndexedSeq
+    val touchedIds = foundRows.map(_.filter(!_.isNullAt(2))
+      .map(_.getLong(2)).distinct.sorted.toIndexedSeq)
     val old = edges.select(col("query_id"), col("rank"),
       col("neighbor_id"), col("cos_sim"))
     // original ranks ride through — no corpus-wide window; only the
     // touched slice re-sorts
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    // past the inline cap the broadcast-join shape returns (same rows;
-    // the literal list is a scan-pruning strategy, not semantics)
-    val (untouched, touchedSlice) =
-      if (touchedIds.isEmpty)
-        (old, old.drop("rank").limit(0))
-      else if (touchedIds.length <= MaxInlineFrontier)
-        (old.filter(col("query_id").isNull ||
-           !col("query_id").isin(touchedIds: _*)),
-         old.drop("rank").filter(col("query_id").isin(touchedIds: _*)))
-      else {
+    // past the inline cap, or with the search output distributed, the
+    // broadcast-join shape returns (same rows; the literal list is a
+    // scan-pruning strategy, not semantics)
+    val (untouched, touchedSlice) = touchedIds match {
+      case Some(ids) if ids.length <= MaxInlineFrontier =>
+        (old.filter(col("query_id").isNull || !col("query_id").isin(ids: _*)),
+         old.drop("rank").filter(col("query_id").isin(ids: _*)))
+      case _ =>
         val touched = reverse.select(col("query_id")).distinct()
         (old.join(broadcast(touched), Seq("query_id"), "left_anti"),
          old.drop("rank").join(broadcast(touched), Seq("query_id")))
-      }
+    }
     val repruned = touchedSlice
       .unionByName(reverse)
       .withColumn("rank", row_number().over(w))

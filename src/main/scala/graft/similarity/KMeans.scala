@@ -4,19 +4,20 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.PqEncode
+
 /** Spherical k-means (cosine objective) expressed entirely as DataFrame
   * algebra — Lloyd iterations where each step is:
   *
-  *   assign: broadcast the k centroids, argmax-cosine per vector as an
-  *           argmin AGGREGATION (map-side partial, one row per vector on
-  *           the shuffle — mirrors [[Similarity.ivfTopKWith]]'s corpus
-  *           assignment, NOT a |corpus|×k window sort)
+  *   assign: each vector's nearest centroid by cosine, a per-row scan
+  *           of the collected centroids ([[assign]]: the
+  *           [[graft.functions.PqEncode]] kernel, a projection)
   *   update: posexplode → per-(centroid, position) mean → reassemble arrays
   *
-  * No MLlib, no RDDs, no driver-side math: every step is a shuffle-bounded
-  * aggregation, so the same plan trains on 10⁹ vectors. Deterministic
-  * seeding (hash-spread pick of initial centroids) keeps results
-  * reproducible run-to-run.
+  * No MLlib, no RDDs: the update is a shuffle-bounded aggregation and the
+  * centroid table the assign collects is k rows, so the same plan trains
+  * on 10⁹ vectors. Deterministic seeding (hash-spread pick of initial
+  * centroids) keeps results reproducible run-to-run.
   *
   * Each Lloyd round ends in an eager `localCheckpoint`: the round's output
   * references the previous centroids twice (assign + the keep-empty-cluster
@@ -32,7 +33,7 @@ object KMeans {
   def fit(corpus: DataFrame, k: Int, iters: Int): DataFrame = {
     // deterministic, hash-spread initialization: the k vectors with the
     // smallest xxhash64(vec_id) — spread uniformly, no RNG state
-    var centroids = corpus
+    val init = corpus
       .withColumn("_h", xxhash64(col("vec_id")))
       .orderBy(col("_h")).limit(k)
       .withColumn("centroid_id", // k rows post-limit, one partition
@@ -40,32 +41,9 @@ object KMeans {
           Window.partitionBy(
             graft.functions.WindowKeys.constantPartitionKey(col("_h")))
             .orderBy(col("_h"))).cast("long") - 1)
-      .select(col("centroid_id"), col("embedding").as("centroid"))
-
-    for (_ <- 1 to iters) {
-      val assigned = assign(corpus, centroids)
-      val updated = assigned
-        .select(col("centroid_id"),
-          posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy("centroid_id", "pos")
-        .agg(avg(col("x")).as("m"))
-        .groupBy("centroid_id")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("centroid_id"),
-          transform(col("pm"), e => e.getField("m").cast("float")).as("centroid"))
-      // a centroid that won zero vectors emits no update row; keep its
-      // previous position instead of silently shrinking the codebook below
-      // k (callers size structures by k — PQ codes, IVF cells).
-      // localCheckpoint(eager): truncate lineage so round N+1 plans against
-      // a k-row LogicalRDD, not a plan tree that doubled N times.
-      centroids = centroids
-        .select(col("centroid_id"), col("centroid").as("_prev"))
-        .join(updated, Seq("centroid_id"), "left")
-        .select(col("centroid_id"),
-          coalesce(col("centroid"), col("_prev")).as("centroid"))
-        .localCheckpoint(true)
-    }
-    centroids
+      .select(lit(0).as("grp"), col("centroid_id"),
+        col("embedding").as("centroid"))
+    lloyd(corpus.withColumn("grp", lit(0)), init, iters).drop("grp")
   }
 
   /** GROUPED Lloyd training: one fit over many independent groups — each
@@ -80,15 +58,15 @@ object KMeans {
     * keyed rounds collapses that to iters × ~3 jobs total, with the SAME
     * per-group math (init picks each group's k smallest-xxhash64(vec_id)
     * vectors — the hash ignores grp, matching what the per-group [[fit]]
-    * loop picked; assign joins broadcast centroids on grp; the update
-    * means aggregate by (grp, centroid_id, pos)).
+    * loop picked; assign scans each row's own group's centroids; the
+    * update means aggregate by (grp, centroid_id, pos)).
     *
     * Init ranks each group's vectors with one window over grp — a
     * per-group total sort, same asymptotics as one assign round. [[fit]]
     * keeps its sort-limit init (a global TakeOrderedAndProject is cheaper
     * when there is only one group). */
   def fitGrouped(corpus: DataFrame, k: Int, iters: Int): DataFrame = {
-    var centroids = corpus
+    val init = corpus
       .withColumn("_h", xxhash64(col("vec_id")))
       .withColumn("_rn", row_number().over(
         Window.partitionBy(col("grp")).orderBy(col("_h"))))
@@ -98,10 +76,15 @@ object KMeans {
       // groups × k rows; truncating here keeps round 1 from re-running the
       // full-corpus init window through BOTH of its references
       .localCheckpoint(true)
+    lloyd(corpus, init, iters)
+  }
 
-    for (_ <- 1 to iters) {
-      val assigned = assignGrouped(corpus, centroids)
-      val updated = assigned
+  /** `iters` Lloyd rounds over `points` (`grp`, `vec_id`, `embedding`)
+    * from the (grp, centroid_id, centroid) `init`. */
+  private def lloyd(points: DataFrame, init: DataFrame,
+                    iters: Int): DataFrame =
+    (1 to iters).foldLeft(init) { (centroids, _) =>
+      val updated = assignGrouped(points, centroids)
         .select(col("grp"), col("centroid_id"),
           posexplode(col("embedding")).as(Seq("pos", "x")))
         .groupBy("grp", "centroid_id", "pos")
@@ -110,74 +93,39 @@ object KMeans {
         .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
         .select(col("grp"), col("centroid_id"),
           transform(col("pm"), e => e.getField("m").cast("float")).as("centroid"))
-      centroids = centroids
+      // a centroid that won zero vectors emits no update row; keep its
+      // previous position instead of silently shrinking the codebook below
+      // k (callers size structures by k — PQ codes, IVF cells).
+      // localCheckpoint(eager): truncate lineage so round N+1 plans against
+      // a k-row LogicalRDD, not a plan tree that doubled N times.
+      centroids
         .select(col("grp"), col("centroid_id"), col("centroid").as("_prev"))
         .join(updated, Seq("grp", "centroid_id"), "left")
         .select(col("grp"), col("centroid_id"),
           coalesce(col("centroid"), col("_prev")).as("centroid"))
         .localCheckpoint(true)
     }
-    centroids
-  }
 
-  /** Grouped twin of [[assign]]: centroids join on `grp` instead of a
-    * cross join; argmin per (grp, vec_id) with the same degenerate-
-    * centroid guard. */
-  def assignGrouped(corpus: DataFrame, centroids: DataFrame): DataFrame = {
-    val others = corpus.columns.toSeq
-      .filterNot(c => c == "vec_id" || c == "grp")
-    val denom = Similarity.l2norm(col("embedding")) *
-      Similarity.l2norm(col("centroid"))
-    corpus.join(broadcast(centroids), Seq("grp"))
-      .withColumn("_negcos",
-        when(denom > 0,
-          -Similarity.dot(col("embedding"), col("centroid")) / denom)
-          .otherwise(lit(Double.PositiveInfinity)))
-      .groupBy(col("grp"), col("vec_id"))
-      .agg(
-        min_by(col("centroid_id"),
-          struct(col("_negcos"), col("centroid_id"))).as("centroid_id"),
-        others.map(c => first(col(c)).as(c)): _*)
-      .select((corpus.columns.toSeq :+ "centroid_id").map(col): _*)
-  }
+  /** Grouped twin of [[assign]]: `corpus` carries `grp` and each row
+    * scans only its own group's centroids (`centroids` carries `grp`
+    * too); a row whose group has no centroid — a NULL group included —
+    * gives no row. Same key, tie-break and degenerate-centroid rule;
+    * output `corpus.columns :+ centroid_id`. */
+  def assignGrouped(corpus: DataFrame, centroids: DataFrame): DataFrame =
+    Similarity.assignCells(corpus, PqEncode.cells(centroids, Some("grp")),
+      corpus.columns.toSeq, array(col("grp")))
 
-  /** Nearest-centroid assignment by cosine (broadcast centroids).
-    *
-    * Argmin aggregation, not a window: the groupBy partial-aggregates
-    * map-side, so the shuffle carries one row per corpus vector instead of
-    * |corpus| × k scored rows — the difference that matters when the corpus
-    * is the 100TB side (same form, same rationale, as
-    * [[Similarity.ivfTopKWith]]'s corpus assignment). min_by's ordering
-    * struct (−cos, centroid_id) reproduces the window form's deterministic
-    * tie-break (highest cosine, then lowest centroid id) — bit-parity with
-    * the window formulation is pinned in KMeansSpec. Requires `vec_id`
-    * unique in `corpus` (the repo-wide vector-table contract).
-    *
-    * Degenerate-centroid rule: a zero-norm centroid (or vector) makes the
-    * cosine denominator zero — under ANSI mode (Spark 4 default) a bare
-    * division would THROW DIVIDE_BY_ZERO mid-fit, and with ANSI off the
-    * window form's `orderBy(desc)` sorts the resulting NaN first and
-    * assigns every vector to the degenerate centroid. The guard below
-    * pins the degenerate pair's sort key to +∞ instead: such a centroid
-    * never wins an assignment, and an all-zero corpus vector falls to the
-    * lowest centroid id deterministically. Deliberately NOT bit-parity
-    * with the window form on this edge (the parity pin holds on
-    * non-degenerate inputs; the degenerate rule has its own spec).
-    */
-  def assign(corpus: DataFrame, centroids: DataFrame): DataFrame = {
-    val others = corpus.columns.toSeq.filterNot(_ == "vec_id")
-    val denom = Similarity.l2norm(col("embedding")) *
-      Similarity.l2norm(col("centroid"))
-    corpus.crossJoin(broadcast(centroids))
-      .withColumn("_negcos",
-        when(denom > 0,
-          -Similarity.dot(col("embedding"), col("centroid")) / denom)
-          .otherwise(lit(Double.PositiveInfinity)))
-      .groupBy(col("vec_id"))
-      .agg(
-        min_by(col("centroid_id"),
-          struct(col("_negcos"), col("centroid_id"))).as("centroid_id"),
-        others.map(c => first(col(c)).as(c)): _*)
-      .select((corpus.columns.toSeq :+ "centroid_id").map(col): _*)
-  }
+  /** Nearest-centroid assignment by cosine: the [[Similarity.ivfAssign]]
+    * argmin with every corpus column carried through, output columns
+    * `corpus.columns :+ centroid_id`, one row per input row. Ties go to
+    * the lowest centroid id, the window form's tie-break (highest cosine,
+    * then lowest id; pinned in KMeansSpec). A zero-norm centroid or
+    * vector gets the +∞ key of [[Similarity.negCosGuarded]]: such a
+    * centroid never wins, and an all-zero vector falls to the lowest
+    * centroid id. The window form would throw DIVIDE_BY_ZERO under ANSI
+    * mode, or with it off sort the NaN first; this edge deliberately
+    * differs from it and has its own spec. */
+  def assign(corpus: DataFrame, centroids: DataFrame): DataFrame =
+    Similarity.assignCells(corpus, PqEncode.cells(centroids),
+      corpus.columns.toSeq)
 }

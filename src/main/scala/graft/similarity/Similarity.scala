@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.PqEncode
 import graft.text.TextOps
 
 /** Deduplication and similarity-search operators for training-data
@@ -453,12 +454,8 @@ object Similarity {
     * re-assigning the corpus, and [[ivfFoldIn]] appends new vectors
     * without touching existing rows.
     *
-    * Corpus-side assignment is a PROJECTION: the centroid table is
-    * collected once and broadcast, and one codegen'd kernel per row
-    * takes the [[negCosGuarded]] argmin with the probe window's
-    * (distance, centroid_id) tie-break ([[graft.functions.PqEncode]]) —
-    * no join, no shuffle, no aggregate. One output row per input row
-    * (a duplicate or null `vec_id` is not merged).
+    * Corpus-side assignment is a projection ([[assignCells]]); a
+    * duplicate or null `vec_id` is not merged.
     */
   def ivfAssign(corpus: DataFrame, centroidsDf: DataFrame): DataFrame =
     ivfAssignWith(corpus, centroidsDf, Nil)
@@ -468,15 +465,29 @@ object Similarity {
     * columns IN the index rows so serving never joins back to the corpus
     * ([[ivfTopKFiltered]]). */
   def ivfAssignWith(corpus: DataFrame, centroidsDf: DataFrame,
-                    extraCols: Seq[String]): DataFrame = {
-    import graft.functions.PqEncode
-    val t = new PqEncode.Tables(Some(PqEncode.cells(centroidsDf)), None,
-      residual = false)
-    val cell = PqEncode.pq_encode(col("embedding"), t, corpus.sparkSession)
-      .getField("centroid_id")
-    val assigned = corpus.select(
-      (Seq(col("vec_id"), cell.as("centroid_id"), col("embedding")) ++
-        extraCols.map(col)): _*)
+                    extraCols: Seq[String]): DataFrame =
+    assignCells(corpus, PqEncode.cells(centroidsDf),
+      Seq("vec_id", "embedding") ++ extraCols)
+      .select((Seq("vec_id", "centroid_id", "embedding") ++ extraCols)
+        .map(col): _*)
+
+  /** The one nearest-centroid assignment: `corpus`'s `keep` columns plus
+    * `centroid_id`, the [[negCosGuarded]] argmin with the (distance,
+    * centroid_id) tie-break, per row in the [[graft.functions.PqEncode]]
+    * kernel: no join, shuffle or aggregate, one output row per input
+    * row. Over grouped `cells` a row scans only its candidate groups'
+    * cells (`groups`, or its `probe` nearest supers); with none it gives
+    * no row, as an inner join did. */
+  private[similarity] def assignCells(
+      corpus: DataFrame, cells: PqEncode.Cells, keep: Seq[String],
+      groups: Column = lit(null),
+      probe: Option[(PqEncode.Cells, Int)] = None): DataFrame = {
+    val t = new PqEncode.Tables(Some(cells), None, residual = false, probe)
+    val enc = PqEncode.pq_encode(col("embedding"), t, corpus.sparkSession,
+      groups)
+    val cell = if (t.grouped) inline(enc)
+      else enc.getField("centroid_id").as("centroid_id")
+    val assigned = corpus.select(keep.map(col) :+ cell: _*)
     // an empty centroid table assigns nothing: no row
     if (t.isEmpty) assigned.filter(lit(false)) else assigned
   }
@@ -499,75 +510,43 @@ object Similarity {
 
   /** TWO-LEVEL coarse assignment — the fix for [[ivfAssign]]'s n×C wall
     * (SCALE.md: the flat argmin scores every vector against every
-    * centroid, which past ~10⁵ cells dominates the build). Structure
-    * (the FAISS IVF-on-IVF / two-level coarse quantizer shape): the C
-    * centroids are themselves quantized into S super-cells (each
-    * centroid belongs to its nearest super — [[ivfAssign]] applied to
-    * the CENTROID TABLE as corpus, so the tie-break is the repo argmin
-    * verbatim); each vector ranks only the S supers (map-only in-row
-    * walk over a collected super literal — the [[knnGraph]] trick; S is
-    * super-sized BY CONTRACT so the collect is bounded), probes its
-    * `fanout` nearest, and argmins over just those supers' member
-    * centroids. Per-vector cost: S + fanout·(C/S) average, vs C flat —
-    * with S ≈ √C that is O(√C) per vector, and the measured per-vector
-    * cost stays near-flat as C grows (SCALE.md round-11).
+    * centroid, which past ~10⁵ cells dominates the build). The C
+    * centroids are quantized into S super-cells (each centroid belongs to
+    * its nearest super, by the same argmin); each vector ranks the S
+    * supers, probes its `fanout` nearest and argmins over just their
+    * member centroids: S + fanout·(C/S) dots per vector, O(√C) at S ≈ √C
+    * (SCALE.md round-11).
     *
-    * EXACTNESS DIAL (spec-pinned): at `fanout >= S` every super is
-    * probed, every centroid is a candidate, and the final argmin — the
-    * same min_by((dist, centroid_id)) on the same guarded distances —
-    * is [[ivfAssign]] bit-for-bit. Below full fan-out the documented
+    * EXACTNESS DIAL (spec-pinned): at `fanout >= S` every centroid is a
+    * candidate and the result is [[ivfAssign]] bit-for-bit. Below it the
     * recall trade is a boundary vector whose true cell lives in an
-    * unprobed super (the [[knnGraphAdjacent]] trade one level up);
-    * every vector still gets an assignment (non-empty super-cells, see
-    * [[superCentroids]]) and output schema/row-count match
-    * [[ivfAssign]] exactly, so the result feeds every downstream IVF
-    * surface (probe, fold-in, rebalance, forget, PQ encode) unchanged.
+    * unprobed super; every vector still gets a cell (non-empty
+    * super-cells, see [[superCentroids]]), and schema and row count match
+    * [[ivfAssign]], so the result feeds every downstream IVF surface.
     *
-    * Scale ledger: one bounded collect (S supers); the centroid→super
-    * map is C-sized and broadcast; the corpus never crossJoins
-    * centroids — its only shuffle is the final per-vector argmin
-    * groupBy (map-side partial). */
+    * Scale ledger: two bounded collects (S supers, then the C-row
+    * centroid → super table that one projection computes); the corpus
+    * pass is one projection over the
+    * [[graft.functions.PqEncode]] kernel, which ranks the supers and
+    * argmins over the probed members: no join, shuffle or aggregate, one
+    * output row per input row. */
   def ivfAssignTwoLevel(corpus: DataFrame, centroidsDf: DataFrame,
                         superDf: DataFrame, fanout: Int): DataFrame = {
     require(fanout >= 1, s"ivfAssignTwoLevel: fanout=$fanout must be >= 1")
-    // level-1: centroid → nearest super (the repo argmin, reused verbatim
-    // on the centroid table; carries the centroid payload for the
-    // candidate scoring below). C-sized by contract → broadcast.
-    val c2s = broadcast(
-      ivfAssign(
-        centroidsDf.select(col("centroid_id").as("vec_id"),
-          col("centroid").as("embedding")),
-        superDf.select(col("super_id").as("centroid_id"),
-          col("super_c").as("centroid")))
-        .select(col("vec_id").as("centroid_id"),
-          col("centroid_id").as("super_id"),
-          col("embedding").as("centroid")))
-    // level-0 probe: in-row walk over the collected super literal — the
-    // [[knnGraph]] shape (no corpus×supers shuffle, no corpus window);
-    // struct sort order (distance, super_id) is the argmin tie-break.
-    val sups = superDf
-      .select(col("super_id").cast("long"), col("super_c")).collect()
-    require(sups.nonEmpty, "ivfAssignTwoLevel: empty super-centroid table")
-    val supLit = array(sups.map { r =>
-      struct(lit(r.getLong(0)).as("sid"),
-        array(r.getSeq[Float](1).map(lit(_)): _*)
-          .cast("array<float>").as("c"))
-    }: _*)
-    val probes = corpus
-      .withColumn("_ps", explode(slice(array_sort(transform(supLit,
-        s => struct(
-          negCosGuarded(col("embedding"), s.getField("c")).as("d"),
-          s.getField("sid").as("sid")))), 1, fanout)))
-      .select(col("vec_id"), col("embedding"),
-        col("_ps").getField("sid").as("super_id"))
-    // final argmin over the probed supers' member centroids only —
-    // the (distance, centroid_id) tie-break of [[ivfAssign]]
-    probes.join(c2s, Seq("super_id"))
-      .withColumn("_cdist", negCosGuarded(col("embedding"), col("centroid")))
-      .groupBy(col("vec_id"))
-      .agg(min_by(col("centroid_id"),
-        struct(col("_cdist"), col("centroid_id"))).as("centroid_id"),
-        first(col("embedding")).as("embedding"))
+    val sups = PqEncode.cells(superDf.select(col("super_id").as("centroid_id"),
+      col("super_c").as("centroid")))
+    require(sups.vecs.nonEmpty, "ivfAssignTwoLevel: empty super-centroid table")
+    // level-1: each centroid's nearest super (the same argmin, the
+    // centroid table as corpus), collected as cells grouped by super
+    val c2s = PqEncode.cells(assignCells(centroidsDf.select(
+        col("centroid_id").as("vec_id"), col("centroid").as("embedding")),
+        sups, Seq("vec_id", "embedding"))
+      .select(col("vec_id").as("centroid_id"),
+        col("embedding").as("centroid"), col("centroid_id").as("super_id")),
+      Some("super_id"))
+    // level-0: a vector's `fanout` nearest supers are its groups
+    assignCells(corpus, c2s, Seq("vec_id", "embedding"),
+        probe = Some((sups, fanout)))
       .select(col("vec_id"), col("centroid_id"), col("embedding"))
   }
 
@@ -680,35 +659,24 @@ object Similarity {
       .select(col("centroid_id"))
     val small = idx.join(broadcast(bigIds), Seq("centroid_id"), "left_anti")
     val big = idx.join(broadcast(bigIds), Seq("centroid_id"), "left_semi")
-    val subs = KMeans.fitGrouped(
-      big.select(col("centroid_id").as("grp"), col("vec_id"),
-        col("embedding")), subK, iters)
+      .select(col("centroid_id").as("grp"), col("vec_id"), col("embedding"))
+    val subs = KMeans.fitGrouped(big, subK, iters)
     // centroid-sized table: a single-partition renumber window is fine
     // here (cells × subK rows), anchored like KMeans' init rank
     val maxIdRow = centroidsDf.agg(max(col("centroid_id"))).head()
     val base = (if (maxIdRow.isNullAt(0)) 0L else maxIdRow.getLong(0)) + 1
-    val renumbered = subs.withColumn("new_id",
+    val renumbered = subs.withColumn("centroid_id",
       lit(base) - 1 + row_number().over(
         Window.partitionBy(graft.functions.WindowKeys
           .constantPartitionKey(col("grp")))
           .orderBy(col("grp"), col("centroid_id"))).cast("long"))
-      .select(col("grp"), col("new_id"), col("centroid"))
     // reassign ONLY fat-cell rows, each against ITS OWN cell's children
-    // (equi join on the old cell id — k'×subK broadcast, argmin agg:
-    // one row per reassigned vector on the shuffle)
-    val reassigned = big
-      .join(broadcast(renumbered), big("centroid_id") === renumbered("grp"))
-      .withColumn("_cdist", negCosGuarded(col("embedding"), col("centroid")))
-      .groupBy(col("vec_id"))
-      .agg(
-        min_by(col("new_id"), struct(col("_cdist"), col("new_id")))
-          .as("centroid_id"),
-        first(col("embedding")).as("embedding"))
+    // (the grouped assign keyed on the old cell id: a projection)
+    val reassigned = KMeans.assignGrouped(big, renumbered)
       .select(col("vec_id"), col("centroid_id"), col("embedding"))
     val keptCentroids = centroidsDf
       .join(broadcast(bigIds), Seq("centroid_id"), "left_anti")
-    val newCentroids = keptCentroids.unionByName(
-      renumbered.select(col("new_id").as("centroid_id"), col("centroid")))
+    val newCentroids = keptCentroids.unionByName(renumbered.drop("grp"))
     (newCentroids,
       small.select(col("vec_id"), col("centroid_id"), col("embedding")),
       reassigned)

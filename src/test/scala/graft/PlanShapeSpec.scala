@@ -884,10 +884,37 @@ class PlanShapeSpec extends SparkTestBase {
       s"rotation fell out of codegen:\n${p.take(2000)}")
   }
 
+  /** `df` plans with no exchange, join, aggregate, codegen fallback or
+    * UDF, evaluates the pq_encode kernel once per row inside a codegen
+    * stage, and runs with the generated code compiling (no silent
+    * fallback to interpreted evaluation). */
+  private def assertMapOnlyKernel(name: String, df: DataFrame): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    val plan = df.queryExecution.executedPlan
+    val p = plan.toString
+    Seq("Exchange", "Join", "HashAggregate", "CodegenFallback", "UDF")
+      .foreach(bad => assert(!p.contains(bad), s"$name plans $bad:\n$p"))
+    val fallbacks = plan.collect { case n => n.expressions }.flatten
+      .flatMap(_.collect { case e: CodegenFallback => e })
+    assert(fallbacks.isEmpty, s"$name fell out of codegen: $fallbacks")
+    val kernelLines = p.linesIterator.filter(_.contains("pq_encode")).toSeq
+    assert(kernelLines.nonEmpty && kernelLines.forall(_.contains("*(")),
+      s"$name: the kernel is not inside a codegen stage:\n$p")
+    // the kernel runs once per row, whatever the fields it feeds
+    assert("pq_encode".r.findAllIn(
+      df.queryExecution.optimizedPlan.toString).size == 1,
+      s"$name evaluates the kernel more than once:\n" +
+        df.queryExecution.optimizedPlan)
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try df.queryExecution.executedPlan.executeCollect()
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("IVF-PQ encode, ivfAssign and PQ encode are map-only: one codegen " +
       "kernel per row, no exchange, join, aggregate, fallback or UDF") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
     import graft.similarity.{IvfPq, ProductQuantizer, Similarity}
     val emb = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -899,23 +926,27 @@ class PlanShapeSpec extends SparkTestBase {
       "IvfPq.encode" -> IvfPq.encode(emb, cents, books, 64, 8),
       "Similarity.ivfAssign" -> Similarity.ivfAssign(emb, cents),
       "ProductQuantizer.encode" -> ProductQuantizer.encode(emb, books, 64, 8)
-    ).foreach { case (name, df) =>
-      val plan = df.queryExecution.executedPlan
-      val p = plan.toString
-      Seq("Exchange", "Join", "HashAggregate", "CodegenFallback", "UDF")
-        .foreach(bad => assert(!p.contains(bad), s"$name plans $bad:\n$p"))
-      val fallbacks = plan.collect { case n => n.expressions }.flatten
-        .flatMap(_.collect { case e: CodegenFallback => e })
-      assert(fallbacks.isEmpty, s"$name fell out of codegen: $fallbacks")
-      val kernelLines = p.linesIterator.filter(_.contains("pq_encode")).toSeq
-      assert(kernelLines.nonEmpty && kernelLines.forall(_.contains("*(")),
-        s"$name: the kernel is not inside a codegen stage:\n$p")
-      // the kernel runs once per row, whatever the fields it feeds
-      assert("pq_encode".r.findAllIn(
-        df.queryExecution.optimizedPlan.toString).size == 1,
-        s"$name evaluates the kernel more than once:\n" +
-          df.queryExecution.optimizedPlan)
-    }
+    ).foreach { case (name, df) => assertMapOnlyKernel(name, df) }
+  }
+
+  test("KMeans.assign, KMeans.assignGrouped and ivfAssignTwoLevel are " +
+      "map-only: the kernel's argmin in a codegen stage, no exchange, " +
+      "join, aggregate, fallback or UDF") {
+    import org.apache.spark.sql.functions._
+    import graft.similarity.{KMeans, Similarity}
+    val emb = Tables.load(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    val cents = emb.filter(pmod(col("vec_id"), lit(50)) === 0)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid"))
+    val supers = Similarity.superCentroids(cents, stride = 200)
+    Seq(
+      "KMeans.assign" -> KMeans.assign(emb, cents),
+      "KMeans.assignGrouped" -> KMeans.assignGrouped(
+        emb.withColumn("grp", col("vec_id") % 3),
+        cents.withColumn("grp", col("centroid_id") % 3)),
+      "Similarity.ivfAssignTwoLevel" ->
+        Similarity.ivfAssignTwoLevel(emb, cents, supers, fanout = 2)
+    ).foreach { case (name, df) => assertMapOnlyKernel(name, df) }
   }
 
   test("delta-loaded index: the newest-wins reconcile LOCALIZES the " +

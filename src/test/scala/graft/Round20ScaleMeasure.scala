@@ -11,9 +11,12 @@ import org.apache.spark.sql.functions._
   * supers sized ≈ √C with constant fanout. Expected: flat wall grows
   * linearly with C, two-level stays near-flat (S + fanout·C/S per
   * vector), with an agreement readout showing the boundary-vector
-  * recall trade.
+  * recall trade. Each config also times a `KMeans.fit(k = C, iters =
+  * 2)` over the same corpus, and every timing reports the Spark jobs
+  * its timed run started.
   *
   * Run: sbt "Test/runMain graft.Round20ScaleMeasure [mult] [sfDir] [outDir]"
+  * (`SPARK_GRAFT_CPUS` sets the local parallelism, default 32)
   */
 object Round20ScaleMeasure {
 
@@ -22,13 +25,20 @@ object Round20ScaleMeasure {
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(2).getOrElse("/tmp/graft_r21_emb")
     val spark = SparkSession.builder()
-      .master("local[32]")
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.files.maxPartitionBytes", "16m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      })
 
     if (!new java.io.File(s"$outDir/embeddings.parquet").exists()) {
       Tables.load(spark, sfDir, "embeddings")
@@ -55,7 +65,8 @@ object Round20ScaleMeasure {
         val Array(a, b) = s.split(":"); (a.toInt, b.toInt)
       })
       .getOrElse(Seq((50, 1000), (10, 500), (2, 200)))
-    println("[r20scale] C,S,flat_s,twolevel_s,agree_pct")
+    println("[r20scale] C,S,flat_s,flat_jobs,twolevel_s,twolevel_jobs," +
+      "agree_pct,kmeans_s,kmeans_jobs")
     configs.foreach { case (cs, ss) =>
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val cents = emb.filter(pmod(col("vec_id"), lit(cs)) === 0)
@@ -65,14 +76,16 @@ object Round20ScaleMeasure {
         .localCheckpoint(true)
       val cN = cents.count()
       val sN = supers.count()
-      def time(f: => org.apache.spark.sql.DataFrame): Double = {
+      // (seconds, jobs) of the second of two runs (the first warms)
+      def time(f: => org.apache.spark.sql.DataFrame): (Double, Int) = {
         f.write.format("noop").mode("overwrite").save() // warm
-        val t0 = System.nanoTime()
+        val (t0, j0) = (System.nanoTime(), jobs.get)
         f.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        ((System.nanoTime() - t0) / 1e9, jobs.get - j0)
       }
-      val flatS = time(graft.similarity.Similarity.ivfAssign(emb, cents))
-      val twoS = time(graft.similarity.Similarity.ivfAssignTwoLevel(
+      val (flatS, flatJ) = time(graft.similarity.Similarity.ivfAssign(emb,
+        cents))
+      val (twoS, twoJ) = time(graft.similarity.Similarity.ivfAssignTwoLevel(
         emb, cents, supers, fanout = 4))
       val agree = graft.similarity.Similarity.ivfAssign(emb, cents)
         .select(col("vec_id"), col("centroid_id").as("a"))
@@ -81,7 +94,10 @@ object Round20ScaleMeasure {
           .select(col("vec_id"), col("centroid_id").as("b")), Seq("vec_id"))
         .agg(avg(when(col("a") === col("b"), 1.0).otherwise(0.0)))
         .head.getDouble(0)
-      println(f"[r20scale] $cN,$sN,$flatS%.2f,$twoS%.2f,${agree * 100}%.1f")
+      val (fitS, fitJ) = time(graft.similarity.KMeans.fit(emb, cN.toInt,
+        iters = 2))
+      println(f"[r20scale] $cN,$sN,$flatS%.2f,$flatJ,$twoS%.2f,$twoJ," +
+        f"${agree * 100}%.1f,$fitS%.2f,$fitJ")
       // per-config hygiene: drop the config's checkpointed cents/supers
       // and any staged blocks — three configs' leftovers in one JVM
       // OOM'd the C=10⁴ flat crossJoin before this (each config is

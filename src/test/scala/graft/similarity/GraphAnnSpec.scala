@@ -553,4 +553,28 @@ class GraphAnnSpec extends SparkTestBase {
       beam = 8, hops = 8, k = 4, queryBound = 5L)) == wantS,
       "a caller queryBound changed the search")
   }
+
+  test("insertBySearchParts pulls at most mirrorCap search rows to the " +
+      "driver: past the cap the search output stays distributed and the " +
+      "insert equals the localized one") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val e = emb.filter(col("vec_id") < 60).localCheckpoint(true)
+    val edges = Similarity.bruteTopK(e, e, 6).localCheckpoint(true)
+    val batch = e.filter(col("vec_id") < 10)
+      .select((col("vec_id") + 500L).as("vec_id"), col("embedding"))
+      .localCheckpoint(true)
+    def parts(cap: Int) = GraphAnn.insertBySearchParts(edges, e, batch, 0L,
+      beam = 32, hops = 32, degree = 6, mirrorCap = cap)
+    def localRows(df: DataFrame) = df.queryExecution.optimizedPlan
+      .collect { case l: LocalRelation => l.data.length }.sum
+    val (wantU, wantC) = parts(GraphAnn.MirrorCap)
+    val (gotU, gotC) = parts(8)
+    // 10 inserts × degree 6 = 60 search rows: localized under the default
+    // cap, kept distributed past a cap of 8
+    assert(localRows(wantC) >= 60)
+    assert(localRows(gotC) <= 8 && localRows(gotU) <= 8,
+      s"past-cap insert pulled search rows:\n${gotC.queryExecution.optimizedPlan}")
+    assert(collectTopK(gotU) == collectTopK(wantU), "untouched")
+    assert(collectTopK(gotC) == collectTopK(wantC), "changed")
+  }
 }
